@@ -69,6 +69,8 @@ _QSCORE_SCHEMA_T = T.StructType([
     T.StructField("doc_id", T.LongType()),
     T.StructField("score", T.DoubleType()),
 ])
+#: empty (doc_ids, scores) result of the warm_local single-query loop
+_NO_HITS = (np.zeros(0, dtype=np.int64), np.zeros(0, dtype=np.float64))
 
 
 def _strictly_after(sort_cols: list[tuple[str, bool]], after) -> "F.Column":
@@ -98,23 +100,30 @@ def _strictly_after(sort_cols: list[tuple[str, bool]], after) -> "F.Column":
     return pred
 
 
-def _range_mask(allow_pdf, base: int, range_size: int, inverted: bool):
-    """Boolean allowed-mask over one docId-range, or None when no masking
-    is needed. ``inverted``: ``allow_pdf`` is the EXCLUDED set (the dead
-    set for tombstones-only masking, or the filter complement + dead set
-    when a broad filter's complement is the smaller side — r4) — a range
-    with no excluded docs needs no mask at all; otherwise ``allow_pdf``
-    is the allowed set (selective filters / boolean gates)."""
+def _range_mask(ids, base: int, range_size: int, inverted: bool):
+    """Boolean allowed-mask over one docId-range from an array of doc ids,
+    or None when no masking is needed. ``inverted``: ``ids`` is the
+    EXCLUDED set (the dead set for tombstones-only masking, or the filter
+    complement + dead set when a broad filter's complement is the smaller
+    side — r4) — a range with no excluded docs needs no mask at all;
+    otherwise ``ids`` is the allowed set (selective filters / boolean
+    gates)."""
     if inverted:
-        if allow_pdf is None or not len(allow_pdf):
+        if ids is None or not len(ids):
             return None
         m = np.ones(range_size, dtype=bool)
-        m[(allow_pdf["doc_id"].to_numpy() - base)] = False
+        m[ids - base] = False
         return m
     m = np.zeros(range_size, dtype=bool)
-    if allow_pdf is not None and len(allow_pdf):
-        m[(allow_pdf["doc_id"].to_numpy() - base)] = True
+    if ids is not None and len(ids):
+        m[ids - base] = True
     return m
+
+
+def _side_ids(pdf):
+    """The ``doc_id`` column of a cogrouped mask side as an array (None
+    stays None: the no-cogroup branch)."""
+    return None if pdf is None else pdf["doc_id"].to_numpy()
 
 
 def _dead_ranges(tomb: DataFrame, range_size: int) -> DataFrame:
@@ -225,9 +234,10 @@ def _shared_taat_range(rows, base: int, allowed, idfs: dict, by_tid: dict,
     exhaustive scorer's). ``rows`` are (ub_max, tid, row, ub_blocks)
     already sorted by (-ub_max, tid); ``allowed`` is an optional boolean
     mask (applied BEFORE the per-query top-k cut — found r2). Returns a
-    list of per-query pandas frames. Shared by ``search_many``'s
-    executor-side scorer and the ``warm_local`` driver-side batch path
-    so the two can never diverge."""
+    list of per-query ``(query_id, doc_ids, scores)`` array triples.
+    Shared by ``search_many``'s executor-side scorer and the
+    ``warm_local`` driver-side batch path so the two can never
+    diverge."""
     hits: dict[str, list] = {}
     for _, tid_v, r, _ in rows:
         idf = idfs[tid_v]
@@ -244,7 +254,7 @@ def _shared_taat_range(rows, base: int, allowed, idfs: dict, by_tid: dict,
             continue
         for qid in by_tid[tid_v]:
             hits.setdefault(qid, []).append((idx, contrib))
-    frames = []
+    out = []
     for qid, parts in hits.items():
         if len(parts) == 1:
             cat_idx, cat_c = parts[0]
@@ -254,12 +264,66 @@ def _shared_taat_range(rows, base: int, allowed, idfs: dict, by_tid: dict,
         S = np.bincount(cat_idx, weights=cat_c)
         uniq = np.unique(cat_idx)
         fidx, scores = _cut_topk(uniq, S[uniq], k)
-        frames.append(pd.DataFrame({
-            "query_id": qid,
-            "doc_id": (base + fidx).astype("int64"),
-            "score": scores,
-        }))
-    return frames
+        out.append((qid, base + fidx, scores))
+    return out
+
+
+def _ranked_rows(recs, idfs: dict, k1: float, b: float, avgdl: float) -> list:
+    """One range's posting records as ``(ub_max, tid, rec, ub_blocks)``
+    in the fixed processing order every scorer uses.
+
+    ``ub_blocks`` is the per-block BM25 upper bound (idf x tfnorm
+    bound). (-ub, tid, first docId) is a TOTAL order over the range's
+    records, so summation order — and thus every float score — is the
+    same in every execution, which cursor paging's exact score-equality
+    test requires. The first-docId tiebreak matters when a range holds
+    TWO records for one term (non-aligned direct appends share ranges):
+    (-ub, tid) alone left their order to shuffle arrival (r5 review)."""
+    rows = []
+    for r in recs:
+        tid = int(r.tid)
+        ub_blocks = idfs[tid] * _tfnorm_bound(
+            np.asarray(r.block_max_tf), np.asarray(r.block_min_dl), k1, b, avgdl
+        )
+        rows.append((float(ub_blocks.max()), tid, r, ub_blocks))
+    rows.sort(key=lambda x: (
+        -x[0], x[1], int(x[2].block_first[0]) if len(x[2].block_first) else -1,
+    ))
+    return rows
+
+
+def _qframe(parts: list) -> pd.DataFrame:
+    """Per-query ``(query_id, doc_ids, scores)`` triples as one
+    (query_id, doc_id, score) frame — the executor-side result of the
+    batch kernels."""
+    if not parts:
+        return pd.DataFrame({"query_id": [], "doc_id": [], "score": []}).astype(
+            {"query_id": "object", "doc_id": "int64", "score": "float64"}
+        )
+    return pd.DataFrame({
+        "query_id": np.repeat(np.array([q for q, _, _ in parts], dtype=object),
+                              [len(d) for _, d, _ in parts]),
+        "doc_id": np.concatenate([d for _, d, _ in parts]).astype(np.int64),
+        "score": np.concatenate([s for _, _, s in parts]),
+    })
+
+
+def _topk_per_query(parts: list, k: int):
+    """Driver-side cross-range cut of per-query ``(query_id, doc_ids,
+    scores)`` triples: ``(query_ids, doc_ids, scores)`` arrays with at
+    most ``k`` rows per query, ordered (query_id, score desc, doc_id asc)
+    by one lexsort."""
+    qids = sorted({q for q, _, _ in parts})
+    code = {q: i for i, q in enumerate(qids)}
+    qc = np.repeat(np.array([code[q] for q, _, _ in parts], dtype=np.int64),
+                   [len(d) for _, d, _ in parts])
+    d = np.concatenate([d for _, d, _ in parts]).astype(np.int64)
+    s = np.concatenate([s for _, _, s in parts])
+    order = np.lexsort((d, -s, qc))
+    qc, d, s = qc[order], d[order], s[order]
+    first = np.searchsorted(qc, qc)  # start of each row's query run
+    keep = np.arange(qc.size) - first < k
+    return np.asarray(qids, dtype=object)[qc[keep]], d[keep], s[keep]
 
 
 #: search_many: engage per-query WAND pruning only when one range's
@@ -300,78 +364,41 @@ def _tfnorm_bound(max_tf, min_dl, k1: float, b: float, avgdl: float):
     return mt * (k1 + 1.0) / (mt + k1 * (1.0 - b + b * md / avgdl))
 
 
-def _make_scorer(idfs: dict, k1: float, b: float, avgdl: float, k: int,
-                 range_size: int, prune: bool, use_allowed: bool,
-                 after: tuple[float, int] | None = None,
-                 mask_is_dead: bool = False, decode=_decode_row):
-    """Build the per-range applyInPandas scorer (closure carries the tiny
-    query-side state: idf per term, BM25 params, k).
+def _range_kernel(idfs: dict, k1: float, b: float, avgdl: float, k: int,
+                  range_size: int, prune: bool,
+                  after: tuple[float, int] | None = None, decode=_decode_row):
+    """Build the per-range BM25 kernel ``kernel(recs, base, mask) ->
+    (doc_ids, scores)``: top-k of one docId-range over an iterable of
+    posting records (anything with the postings columns as attributes —
+    ``itertuples`` rows on the executors, the warm_local snapshot's
+    records on the driver), under an optional boolean ``mask`` over the
+    range (applied BEFORE the top-k cut). The closure carries the tiny
+    query-side state: idf per term, BM25 params, k.
 
     ``after=(score, doc_id)``: cursor paging — keep only docs strictly
     after the cursor in (score desc, doc_id asc) order, applied BEFORE
     the per-range top-k cut. Requires ``prune=False`` (WAND's theta is
     the k-th best overall, which would prune exactly the post-cursor
     candidates a later page needs). Score equality against the cursor is
-    exact BECAUSE summation order is pinned: term rows sort on
-    (-upper_bound, tid) — a total order, since (tid, range) rows are
-    unique (ranges never straddle segments) — and within a term the
-    decode emits docIds ascending. Float addition is then performed in
-    an execution-independent order, so a page-2 run reproduces page-1's
-    scores bit-for-bit (ADVICE r2: the previous input-order sort made
-    cursor equality depend on shuffle arrival order)."""
+    exact BECAUSE summation order is pinned by ``_ranked_rows``' total
+    order and, within a term, the decode emits docIds ascending. Float
+    addition is then performed in an execution-independent order, so a
+    page-2 run reproduces page-1's scores bit-for-bit (ADVICE r2: the
+    previous input-order sort made cursor equality depend on shuffle
+    arrival order)."""
     assert not (prune and after is not None)
 
-    def score_range_impl(key, postings, allow_pdf):
-        _limit_arrow_threads()
-        if postings.empty:
-            # before the mask build: under dead-only masking the cogroup
-            # also yields ranges with tombstones but none of the query's
-            # terms — allocating a range_size mask just to discard it
-            # wasted an array per such range per query (r3 review)
-            return pd.DataFrame({"doc_id": [], "score": []}).astype(
-                {"doc_id": "int64", "score": "float64"}
-            )
-        allowed_mask = None
-        if use_allowed:
-            # mask_is_dead: cogrouped side is the EXCLUDED set (dead set
-            # and/or broad-filter complement) — inverted (r3 review: the
-            # allowed-set shape shipped the ENTIRE live docstats into
-            # every range task once a single tombstone existed; r4: a
-            # broad filter shipped O(matching docs) — _mask_plan now
-            # ships whichever side is smaller)
-            allowed_mask = _range_mask(
-                allow_pdf, int(key[0]) * range_size, range_size, mask_is_dead
-            )
-        base = int(key[0]) * range_size
+    def kernel(recs, base: int, mask):
+        rows = _ranked_rows(recs, idfs, k1, b, avgdl)
         S = np.zeros(range_size, dtype=np.float64)
         seen = np.zeros(range_size, dtype=bool)
-
-        # per-term upper bound U = idf * max tfnorm bound over blocks
-        rows = []
-        for r in postings.itertuples(index=False):
-            idf = idfs[r.tid]
-            ub_blocks = idf * _tfnorm_bound(
-                np.asarray(r.block_max_tf), np.asarray(r.block_min_dl), k1, b, avgdl
-            )
-            rows.append((float(ub_blocks.max()), r, ub_blocks))
-        # (-ub, tid, first docId) is a TOTAL order over this range's term
-        # rows: summation order — and thus every float score — is
-        # identical across executions, which cursor paging's exact
-        # score-equality test requires. The first-docId tiebreak matters
-        # when a range holds TWO rows for one term (non-aligned direct
-        # appends share ranges): (-ub, tid) alone left their order to
-        # shuffle arrival (r5 review).
-        rows.sort(key=lambda x: (
-            -x[0], x[1].tid,
-            int(x[1].block_first[0]) if len(x[1].block_first) else -1,
-        ))
         suffix = np.zeros(len(rows) + 1)
         for i in range(len(rows) - 1, -1, -1):
             suffix[i] = suffix[i + 1] + rows[i][0]
 
         theta = None
-        for i, (_, r, ub_blocks) in enumerate(rows):
-            idf = idfs[r.tid]
+        for i, (_, tid, r, ub_blocks) in enumerate(rows):
+            idf = idfs[tid]
             block_first = np.asarray(r.block_first, dtype=np.int64)
             nb = block_first.size
             keep = np.ones(nb, dtype=bool)
@@ -392,8 +419,8 @@ def _make_scorer(idfs: dict, k1: float, b: float, avgdl: float, k: int,
                 dl = dl.astype(np.float64)
                 tfn = tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dl / avgdl))
                 idx = (d - np.uint64(base)).astype(np.int64)
-                if allowed_mask is not None:
-                    m = allowed_mask[idx]
+                if mask is not None:
+                    m = mask[idx]
                     idx, tfn = idx[m], tfn[m]
                 S[idx] += idf * tfn
                 seen[idx] = True
@@ -408,13 +435,42 @@ def _make_scorer(idfs: dict, k1: float, b: float, avgdl: float, k: int,
             gid = base + idx
             m = (S[idx] < s_after) | ((S[idx] == s_after) & (gid > id_after))
             idx = idx[m]
-        if idx.size == 0:
+        idx, scores = _cut_topk(idx, S[idx], k)
+        return base + idx, scores
+
+    return kernel
+
+
+def _make_scorer(idfs: dict, k1: float, b: float, avgdl: float, k: int,
+                 range_size: int, prune: bool, use_allowed: bool,
+                 after: tuple[float, int] | None = None,
+                 mask_is_dead: bool = False):
+    """The per-range applyInPandas scorer: ``_range_kernel`` over the
+    group's rows, masked by the cogrouped side when ``use_allowed``.
+
+    ``mask_is_dead``: the cogrouped side is the EXCLUDED set (dead set
+    and/or broad-filter complement) — inverted (r3 review: the
+    allowed-set shape shipped the ENTIRE live docstats into every range
+    task once a single tombstone existed; r4: a broad filter shipped
+    O(matching docs) — _mask_plan now ships whichever side is
+    smaller)."""
+    kernel = _range_kernel(idfs, k1, b, avgdl, k, range_size, prune, after)
+
+    def score_range_impl(key, postings, allow_pdf):
+        _limit_arrow_threads()
+        if postings.empty:
+            # before the mask build: under dead-only masking the cogroup
+            # also yields ranges with tombstones but none of the query's
+            # terms — allocating a range_size mask just to discard it
+            # wasted an array per such range per query (r3 review)
             return pd.DataFrame({"doc_id": [], "score": []}).astype(
                 {"doc_id": "int64", "score": "float64"}
             )
-        idx, scores = _cut_topk(idx, S[idx], k)
-        return pd.DataFrame({"doc_id": (base + idx).astype("int64"),
-                             "score": scores})
+        base = int(key[0]) * range_size
+        mask = (_range_mask(_side_ids(allow_pdf), base, range_size, mask_is_dead)
+                if use_allowed else None)
+        doc_ids, scores = kernel(postings.itertuples(index=False), base, mask)
+        return pd.DataFrame({"doc_id": doc_ids.astype("int64"), "score": scores})
 
     def grouped(key, pdf):
         return score_range_impl(key, pdf, None)
@@ -514,24 +570,24 @@ def _phrase_hits(per_tid: dict, instances: list, tids: list, slop: int,
             np.asarray(freq_l, dtype=np.int64))
 
 
-def _decode_positional_range(pdf, base: int) -> dict:
+def _decode_positional_range(recs, base: int) -> dict:
     """tid -> (docs, dls, token_docs, token_pos) for one range's
-    positional posting rows (concatenated across segments' rows). The
+    positional posting records (concatenated across segments' rows). The
     shared decode both phrase paths build before matching."""
     from dbsyncer_spark.index.codec import unpack_row_positions
 
+    by_tid: dict[int, list] = {}
+    for r in recs:
+        by_tid.setdefault(int(r.tid), []).append(r)
     per_tid: dict[int, tuple] = {}
-    for tid_v, grp in pdf.groupby("tid"):
-        if len(grp) > 1:
-            # deterministic concatenation in first-docId order — rows of
-            # one (range, term) have disjoint ascending doc spans (a
-            # non-aligned direct append shares a range, r5 review), so
-            # this keeps the concatenated doc stream globally ascending
-            grp = grp.iloc[np.argsort([
-                int(bf[0]) if len(bf) else -1 for bf in grp["block_first"]
-            ], kind="stable")]
+    for tid_v, grp in sorted(by_tid.items()):
+        # deterministic concatenation in first-docId order — rows of one
+        # (range, term) have disjoint ascending doc spans (a non-aligned
+        # direct append shares a range, r5 review), so this keeps the
+        # concatenated doc stream globally ascending
+        grp.sort(key=lambda r: int(r.block_first[0]) if len(r.block_first) else -1)
         docs_l, tok_docs_l, tok_pos_l, dls_l = [], [], [], []
-        for r in grp.itertuples(index=False):
+        for r in grp:
             d, tf, dl, flat = unpack_row_positions(
                 {
                     "blob": r.blob,
@@ -800,12 +856,22 @@ class SearchIndex:
         (r4 VERDICT #3): pull the RAW compressed postings rows, the
         docstats metadata, and the dead set to the driver once; ``search``
         / ``search_after`` then score entirely driver-side — the same
-        numpy scorer ``_make_scorer`` builds for the executors, zero
-        Spark jobs — and return a LocalRelation DataFrame. This removes
+        range kernels the executors run (``_range_kernel``,
+        ``_shared_taat_range``, the gated batch kernel), zero Spark jobs
+        — and return a LocalRelation DataFrame. This removes
         the per-query scheduling + Python-runner stage floor (~150-250 ms
         on the bench host regardless of rows, SURVEY §8.10), which pinned
         p50 at ~250-300 ms for a 100k-doc index whose actual scoring work
         is single-digit milliseconds.
+
+        Snapshot layout, built once here: ``rows[range_id] = {tid:
+        [posting record, ...]}``. A record is one postings row as an
+        ``itertuples`` namedtuple (attributes = the postings columns);
+        the kernels read records directly, so a query gathers its terms'
+        records with dict lookups — no pandas frame is kept or sliced
+        per query. The dead set is ``dead[range_id] = doc_id array`` and
+        a filter's allowed set ``filters[predicate][range_id] = doc_id
+        array``; per-range masks are built from those arrays per query.
 
         Budget: refuses when the postings' ON-DISK parquet bytes exceed
         ``max_bytes`` (default 256 MiB — raw blobs stay compressed in
@@ -843,30 +909,23 @@ class SearchIndex:
             )
         if self._driver_dict is None:
             self.warm_driver_dictionary()
-        pdf = self._postings().toPandas()
-        rows_by_range: dict[int, tuple] = {}
-        for rid, sub in pdf.groupby("range_id"):
-            sub = sub.reset_index(drop=True)
-            # tid -> ALL row positions: a range can legally hold several
-            # posting rows per term (a direct build_index append at a
-            # non-range-aligned offset passes the publish overlap guard
-            # and shares a range with its neighbor); a tid -> single-row
-            # map silently dropped all but the last, diverging warm_local
-            # from the cluster scorers which iterate every row (r5
-            # review)
-            tid_pos: dict[int, list] = {}
-            for i, t in enumerate(sub["tid"]):
-                tid_pos.setdefault(int(t), []).append(i)
-            rows_by_range[int(rid)] = (sub, tid_pos)
-        dead_by_range = self._local_dead_by_range()
+        # tid -> ALL records: a range can legally hold several posting
+        # rows per term (a direct build_index append at a non-range-
+        # aligned offset passes the publish overlap guard and shares a
+        # range with its neighbor); a tid -> single-row map silently
+        # dropped all but the last, diverging warm_local from the
+        # cluster scorers which iterate every row (r5 review). No kernel
+        # reads shard / n_docs / sum_tf; dropping them saves every record
+        # three tuple slots and their int objects.
+        rows_by_range: dict[int, dict[int, list]] = {}
+        for r in self._postings().drop("shard", "n_docs", "sum_tf") \
+                .toPandas().itertuples(index=False):
+            rows_by_range.setdefault(int(r.range_id), {}) \
+                .setdefault(int(r.tid), []).append(r)
         stats_pdf = self.docstats().toPandas()
         self._local = {
             "rows": rows_by_range,
             "docstats_pdf": stats_pdf,
-            "dead": dead_by_range,
-            "dead_ids": (set() if not dead_by_range else {
-                int(i) for sub in dead_by_range.values() for i in sub["doc_id"]
-            }),
             # LocalRelation twin of docstats: Column predicates fold
             # driver-side (no job) when filtering it. The ORIGINAL schema
             # is passed explicitly — schema inference would crash on an
@@ -877,6 +936,9 @@ class SearchIndex:
                 stats_pdf, self.docstats().schema
             ),
             "filters": {},  # predicate str -> {range_id: allowed doc_id ndarray}
+            # field-column tuple -> {range_id: {column: live-doc values}}
+            # (the gated kernel's side data)
+            "live_sides": {},
             # decoded-postings LRU consulted by the local kernels; valid
             # for this snapshot's lifetime (postings are immutable within
             # a meta generation — tombstone-only refresh keeps it)
@@ -890,23 +952,11 @@ class SearchIndex:
             ),
         }
         self._local_decode_budget = decode_cache_bytes
-
-    def _local_dead_by_range(self) -> dict:
-        """range_id -> pd.DataFrame of dead doc_ids from this reader's
-        pinned tombstone generation — the warm_local dead set."""
-        tomb = self._tombstones()
-        dead_by_range: dict[int, pd.DataFrame] = {}
-        if tomb is not None:
-            dead_pdf = tomb.select("doc_id").distinct().toPandas()
-            dead_pdf["range_id"] = dead_pdf["doc_id"] // self.range_size
-            dead_by_range = {
-                int(rid): sub.reset_index(drop=True)
-                for rid, sub in dead_pdf.groupby("range_id")
-            }
-        return dead_by_range
+        self._local_refresh_tombstones()  # fills "dead" / "dead_ids"
 
     def _local_refresh_tombstones(self) -> None:
-        """Re-pull ONLY the dead set into the warm_local snapshot.
+        """(Re-)pull ONLY the dead set into the warm_local snapshot:
+        ``dead`` (range_id -> doc_id array) and ``dead_ids`` (a set).
 
         Within one meta generation the only thing that can change is
         tombstone appends — postings, docstats, and the dictionary are
@@ -915,26 +965,38 @@ class SearchIndex:
         ``warm_local`` in full (re-collecting every posting blob +
         docstats to the driver on the writer's 3 s refresh cadence, r5
         review); it re-reads the pinned generation's tombstone parquet
-        and invalidates the cached per-predicate allowed sets, which
-        fold ``dead_ids`` in."""
+        and invalidates the cached per-predicate allowed sets and live
+        sides, which fold ``dead_ids`` in."""
         loc = self._local
-        dead_by_range = self._local_dead_by_range()
-        loc["dead"] = dead_by_range
-        loc["dead_ids"] = (set() if not dead_by_range else {
-            int(i) for sub in dead_by_range.values() for i in sub["doc_id"]
-        })
+        dead_of: dict[int, np.ndarray] = {}
+        tomb = self._tombstones()
+        if tomb is not None:
+            ids = tomb.select("doc_id").distinct().toPandas()["doc_id"]
+            dead_of = {int(rid): g.to_numpy(np.int64)
+                       for rid, g in ids.groupby(ids // self.range_size)}
+        loc["dead"] = dead_of
+        loc["dead_ids"] = (set(np.concatenate(list(dead_of.values())).tolist())
+                           if dead_of else set())
         loc["filters"].clear()
+        loc["live_sides"].clear()
 
     def _search_local(self, query: str, k: int, mode: str, doc_filter,
                       after, boosts) -> DataFrame:
         """Zero-job twin of ``search`` over the ``warm_local`` snapshot —
-        same scorer closure, same per-range masking and top-k cut, same
+        same range kernel, same per-range masking and top-k cut, same
         final (score desc, doc_id asc) order; rank- and score-identical
         to the cluster path (pytest-gated)."""
-        pdf = self._search_local_pdf(query, k, mode, doc_filter, after, boosts)
-        if pdf is None:
-            return empty_df(self.spark, _SCORE_SCHEMA_T)
-        return self.spark.createDataFrame(pdf, _SCORE_SCHEMA_T)
+        doc_ids, scores = self._search_local_topk(query, k, mode, doc_filter,
+                                                  after, boosts)
+        return self._local_frame({"doc_id": doc_ids, "score": scores},
+                                 _SCORE_SCHEMA_T)
+
+    def _local_frame(self, cols: dict, schema) -> DataFrame:
+        """LocalRelation over driver-side result arrays — the one pandas
+        frame of a DataFrame-returning warm_local call (zero jobs)."""
+        if not len(cols["doc_id"]):
+            return empty_df(self.spark, schema)
+        return self.spark.createDataFrame(pd.DataFrame(cols), schema)
 
     def search_rows(
         self,
@@ -949,25 +1011,24 @@ class SearchIndex:
         in the same (score desc, doc_id asc) order, no DataFrame.
 
         On a ``warm_local`` snapshot this is the pure driver kernel with
-        ZERO py4j traffic — the DataFrame wrapper around the identical
-        result costs ~35-45 ms of LocalRelation create+collect per query
-        regardless of index size (measured: scoring ~8 ms, wrapper
-        ~45 ms at the 100k bench), which is the whole latency floor once
-        Spark jobs are already out of the picture. The reference's
-        serving API returns result maps, not frames
+        ZERO py4j traffic: dict lookups gather the query terms' posting
+        records per range, the range kernel scores them, and one lexsort
+        merges the ranges — no pandas on the path. At the 6,000-doc
+        perfbench index (``serve_local``, 4 cores) a plain query costs
+        ~1.2 ms p50 (BASELINE.md, "Where the time goes"). ``search``
+        wraps the identical result in a LocalRelation, whose create +
+        collect py4j round trips cost more than the kernel. The
+        reference's serving API
+        returns result maps, not frames
         (``DiskStorageService.java:294-346`` -> ``Paging``), so this is
         the parity surface; ``search`` stays the composable DataFrame
         view over the same kernel (rank- and score-identity pytest-
         gated). Without a warm_local snapshot it falls back to
         ``search(...).collect()`` — same rows, cluster latency."""
         if self._local is not None:
-            pdf = self._search_local_pdf(query, k, mode, doc_filter, after, boosts)
-            if pdf is None:
-                return []
-            return list(zip(
-                (int(v) for v in pdf["doc_id"].tolist()),
-                (float(v) for v in pdf["score"].tolist()),
-            ))
+            doc_ids, scores = self._search_local_topk(query, k, mode, doc_filter,
+                                                      after, boosts)
+            return list(zip(doc_ids.tolist(), scores.tolist()))
         return [
             (r.doc_id, r.score)
             for r in self.search(
@@ -976,64 +1037,64 @@ class SearchIndex:
             ).collect()
         ]
 
-    def _search_local_pdf(self, query: str, k: int, mode: str, doc_filter,
-                          after, boosts) -> pd.DataFrame | None:
-        """The warm_local scoring kernel shared by ``_search_local`` and
-        ``search_rows``: top-k pandas frame (doc_id, score) in contract
-        order, or None on a dictionary miss / no surviving docs. Pure
-        driver compute — no Spark jobs, no py4j."""
+    def _search_local_topk(self, query: str, k: int, mode: str, doc_filter,
+                           after, boosts):
+        """The warm_local scoring loop shared by ``_search_local`` and
+        ``search_rows``: top-k ``(doc_ids, scores)`` arrays in contract
+        order (empty on a dictionary miss / no surviving docs). Per range
+        the query terms' records and the mask go straight into
+        ``_range_kernel``; one lexsort merges the ranges. Pure driver
+        compute — no Spark jobs, no py4j, no pandas."""
         terms = sorted(set(tokenize_py(query)))
         dfs = self.lookup(terms)  # driver dictionary: no job
         if not dfs:
-            return None
+            return _NO_HITS
         n = self.n_docs
         boosts = boosts or {}
         idfs = {
             term_id(t): boosts.get(t, 1.0) * log(1.0 + (n - df_ + 0.5) / (df_ + 0.5))
             for t, df_ in dfs.items()
         }
-        loc = self._local
-        allowed_of = (None if doc_filter is None
-                      else self._local_allowed_of(doc_filter))
-        use_allowed = doc_filter is not None or bool(loc["dead"])
-        scorer = _make_scorer(
+        kernel = _range_kernel(
             idfs, self.k1, self.b, self.avgdl, k, self.range_size,
-            prune=(mode == "wand" and after is None), use_allowed=use_allowed,
-            after=after, mask_is_dead=doc_filter is None,
-            decode=loc["decoded"] or _decode_row,
+            prune=(mode == "wand" and after is None), after=after,
+            decode=self._local["decoded"] or _decode_row,
         )
-        tids = set(idfs)
-        parts = []
-        for rid in sorted(loc["rows"]):
-            sub, tid_pos = loc["rows"][rid]
-            pos = [i for t in tids if t in tid_pos for i in tid_pos[t]]
-            if not pos:
-                continue
-            qsub = sub.iloc[sorted(pos)]
-            if not use_allowed:
-                out = scorer((rid,), qsub)
-            elif doc_filter is not None:
-                ids = (allowed_of.get(rid) if allowed_of is not None else None)
-                allow_pdf = pd.DataFrame(
-                    {"doc_id": ids if ids is not None
-                     else np.empty(0, dtype=np.int64)}
-                )
-                out = scorer((rid,), qsub, allow_pdf)
-            else:
-                out = scorer((rid,), qsub, loc["dead"].get(rid))
-            if len(out):
-                parts.append(out)
-        if not parts:
-            return None
-        cat = pd.concat(parts, ignore_index=True)
-        order = np.lexsort((cat["doc_id"].to_numpy(),
-                            -cat["score"].to_numpy()))[:k]
-        return cat.iloc[order].reset_index(drop=True)
+        hits = [kernel(recs, base, mask) for base, recs, mask in
+                self._local_ranges(idfs, self._local_allowed_of(doc_filter))]
+        if not hits:
+            return _NO_HITS
+        doc_ids = np.concatenate([d for d, _ in hits])
+        scores = np.concatenate([s for _, s in hits])
+        order = np.lexsort((doc_ids, -scores))[:k]
+        return doc_ids[order], scores[order]
 
-    def _local_allowed_of(self, doc_filter) -> dict:
+    def _local_ranges(self, tids, allowed_of):
+        """``(base, records, mask)`` for every warm_local range holding a
+        record of ``tids``: with ``allowed_of`` (range_id -> allowed doc
+        ids) the mask is the range's allowed set and ranges without one
+        are skipped, else it is the inverted dead set (None when the
+        range has no dead doc)."""
+        dead_of = self._local["dead"]
+        range_size = self.range_size
+        for rid, by_tid in self._local["rows"].items():
+            recs = [r for t in tids if t in by_tid for r in by_tid[t]]
+            if not recs:
+                continue
+            base = rid * range_size
+            if allowed_of is None:
+                yield base, recs, _range_mask(dead_of.get(rid), base,
+                                              range_size, True)
+            elif rid in allowed_of:
+                yield base, recs, _range_mask(allowed_of[rid], base,
+                                              range_size, False)
+
+    def _local_allowed_of(self, doc_filter) -> dict | None:
         """range_id -> live doc_ids matching ``doc_filter``, evaluated
         against the warm_local docstats LocalRelation (no Spark job) and
-        cached per predicate string."""
+        cached per predicate string; None without a filter."""
+        if doc_filter is None:
+            return None
         loc = self._local
         key = str(doc_filter)
         allowed_of = loc["filters"].get(key)
@@ -1054,6 +1115,26 @@ class SearchIndex:
             loc["filters"][key] = allowed_of
         return allowed_of
 
+    def _local_live_sides(self, field_cols) -> dict:
+        """range_id -> {column: values over the range's live docs} for
+        ``range_id``, ``doc_id`` and the referenced field columns — the
+        side data of the gated kernel on warm_local, cached per column
+        set (like ``filters``, cleared when the dead set is re-pulled)."""
+        loc = self._local
+        cols = ("range_id", "doc_id",
+                *(c for c in field_cols if c not in ("range_id", "doc_id")))
+        sides = loc["live_sides"].get(cols)
+        if sides is None:
+            spdf = loc["docstats_pdf"]
+            if loc["dead_ids"]:
+                spdf = spdf[~spdf["doc_id"].isin(loc["dead_ids"])]
+            sides = {int(rid): {c: g[c].to_numpy() for c in cols}
+                     for rid, g in spdf[list(cols)].groupby("range_id")}
+            if len(loc["live_sides"]) > 256:
+                loc["live_sides"].clear()
+            loc["live_sides"][cols] = sides
+        return sides
+
     def _search_many_local(self, idfs: dict, by_tid: dict, k: int,
                            doc_filter) -> DataFrame:
         """Zero-job batch twin of ``search_many`` over the warm_local
@@ -1065,57 +1146,20 @@ class SearchIndex:
         whole batch costs milliseconds per query instead of a shared
         Spark job; past the warm_local budget the cluster batch is the
         only path, unchanged."""
-        loc = self._local
-        allowed_of = (None if doc_filter is None
-                      else self._local_allowed_of(doc_filter))
-        k1, b, avgdl, range_size = self.k1, self.b, self.avgdl, self.range_size
-        tids = set(idfs)
-        frames = []
-        for rid in sorted(loc["rows"]):
-            sub, tid_pos = loc["rows"][rid]
-            pos = [i for t in tids if t in tid_pos for i in tid_pos[t]]
-            if not pos:
-                continue
-            qsub = sub.iloc[sorted(pos)]
-            base = rid * range_size
-            if doc_filter is not None:
-                allowed = np.zeros(range_size, dtype=bool)
-                ids = allowed_of.get(rid) if allowed_of else None
-                if ids is not None:
-                    allowed[ids - base] = True
-            elif loc["dead"]:
-                allowed = _range_mask(loc["dead"].get(rid), base,
-                                      range_size, True)
-            else:
-                allowed = None
-            rows = []
-            for r in qsub.itertuples(index=False):
-                idf = idfs[int(r.tid)]
-                ub_blocks = idf * _tfnorm_bound(
-                    np.asarray(r.block_max_tf), np.asarray(r.block_min_dl),
-                    k1, b, avgdl,
-                )
-                rows.append((float(ub_blocks.max()), int(r.tid), r, ub_blocks))
-            rows.sort(key=lambda x: (
-                -x[0], x[1],
-                int(x[2].block_first[0]) if len(x[2].block_first) else -1,
-            ))  # first-docId tiebreak: total order even when a range
-            # holds two rows for one term (see _make_scorer, r5 review)
-            frames.extend(_shared_taat_range(
-                rows, base, allowed, idfs, by_tid, k1, b, avgdl, k,
-                decode=loc["decoded"] or _decode_row,
-            ))
-        if not frames:
-            return empty_df(self.spark, _QSCORE_SCHEMA_T)
-        cat = pd.concat(frames, ignore_index=True)
+        k1, b, avgdl = self.k1, self.b, self.avgdl
+        decode = self._local["decoded"] or _decode_row
         parts = []
-        for qid, grp in cat.groupby("query_id", sort=True):
-            order = np.lexsort((grp["doc_id"].to_numpy(),
-                                -grp["score"].to_numpy()))[:k]
-            parts.append(grp.iloc[order])
-        return self.spark.createDataFrame(
-            pd.concat(parts, ignore_index=True), _QSCORE_SCHEMA_T
-        )
+        for base, recs, mask in self._local_ranges(
+                idfs, self._local_allowed_of(doc_filter)):
+            parts.extend(_shared_taat_range(
+                _ranked_rows(recs, idfs, k1, b, avgdl), base, mask, idfs,
+                by_tid, k1, b, avgdl, k, decode=decode,
+            ))
+        if not parts:
+            return empty_df(self.spark, _QSCORE_SCHEMA_T)
+        q, d, s = _topk_per_query(parts, k)
+        return self._local_frame({"query_id": q, "doc_id": d, "score": s},
+                                 _QSCORE_SCHEMA_T)
 
     def warm_driver_dictionary(self, max_terms: int = 5_000_000) -> None:
         """Pull the whole (tid -> df) dictionary to the driver: term
@@ -1271,7 +1315,7 @@ class SearchIndex:
         ``after``: cursor ``(score, doc_id)`` of the previous page's last
         row — results are strictly after it in (score desc, doc_id asc)
         order (the reference's searchAfter paging, ``Shard.java:57-58,
-        182-183``); forces exhaustive scoring (see ``_make_scorer``).
+        182-183``); forces exhaustive scoring (see ``_range_kernel``).
         ``boosts``: per-term multiplier on the BM25 partial (parser
         ``term^2.5`` clauses). Folding the boost into the term's idf also
         scales WAND's per-block upper bounds by the same factor, so
@@ -1406,8 +1450,8 @@ class SearchIndex:
             # route; expansion units were resolved above). Rank- and
             # score-identical to the cluster path (pytest-gated).
             return self._search_many_gated(
-                {"q": (pq, scored, must_any, not_any)}, k=k
-            ).select("doc_id", "score")
+                {"q": (pq, scored, must_any, not_any)}, k=k, single=True
+            )
         allowed: DataFrame | None = None
 
         def intersect(df: DataFrame | None, other: DataFrame, anti: bool = False):
@@ -1626,7 +1670,7 @@ class SearchIndex:
             if pdf.empty or len(pdf["tid"].unique()) < len(tids):
                 return empty
             base = int(key[0]) * range_size
-            per_tid = _decode_positional_range(pdf, base)
+            per_tid = _decode_positional_range(pdf.itertuples(index=False), base)
             hf = _phrase_hits(per_tid, instances, tids, slop, m)
             if hf is None:
                 return empty
@@ -1636,7 +1680,8 @@ class SearchIndex:
                 # the caller semi-joins it (and applies liveness there)
                 return pd.DataFrame({"doc_id": (base + hit_docs).astype("int64")})
             if use_allowed:
-                amask = _range_mask(allow_pdf, base, range_size, mask_inverted)
+                amask = _range_mask(_side_ids(allow_pdf), base, range_size,
+                                    mask_inverted)
                 if amask is not None:
                     keep = amask[hit_docs]
                     hit_docs, freqs = hit_docs[keep], freqs[keep]
@@ -1873,8 +1918,6 @@ class SearchIndex:
         Returns DataFrame(query_id string, doc_id long, score double),
         per query ordered (score desc, doc_id asc), <= k rows each.
         """
-        from pyspark.sql import Window as W
-
         spark = self.spark
         all_terms = sorted({t for q in queries.values() for t in tokenize_py(q)})
         dfs = self.lookup(all_terms)
@@ -1905,17 +1948,6 @@ class SearchIndex:
         prune_min = (_BATCH_PRUNE_MIN_POSTINGS if prune_min_postings is None
                      else prune_min_postings)
         n_queries = len(qterms)
-
-        def _empty_out():
-            return pd.DataFrame({"query_id": [], "doc_id": [], "score": []}).astype(
-                {"query_id": "object", "doc_id": "int64", "score": "float64"}
-            )
-
-        def _taat(rows, base, allowed):
-            frames = _shared_taat_range(
-                rows, base, allowed, idfs, by_tid, k1, b, avgdl, k
-            )
-            return pd.concat(frames, ignore_index=True) if frames else _empty_out()
 
         def _wand(rows, base, allowed):
             """Per-query block-max pruning over the shared decode (see
@@ -2000,23 +2032,19 @@ class SearchIndex:
                     cnt = int(seen.sum())
                     if cnt >= k:
                         theta[qid] = np.partition(S[seen], cnt - k)[cnt - k]
-            frames = []
+            out = []
             for qid, (S, seen) in acc.items():
                 idx = np.flatnonzero(seen)
                 if idx.size == 0:
                     continue
                 idx, scores = _cut_topk(idx, S[idx], k)
-                frames.append(pd.DataFrame({
-                    "query_id": qid,
-                    "doc_id": (base + idx).astype("int64"),
-                    "score": scores,
-                }))
-            return pd.concat(frames, ignore_index=True) if frames else _empty_out()
+                out.append((qid, base + idx, scores))
+            return out
 
         def score_impl(key, pdf, mask_pdf):
             _limit_arrow_threads()
             if pdf.empty:
-                return _empty_out()
+                return _qframe([])
             base = int(key[0]) * range_size
             # allowed-mask via the shared helpers (adaptive side choice,
             # see _mask_plan), not a fourth hand-rolled copy (r3 review).
@@ -2024,31 +2052,19 @@ class SearchIndex:
             # at all); an EMPTY cogrouped side is meaningful (no allowed
             # docs in this range under a filter / no dead docs inverted)
             allowed = (None if mask_pdf is None else
-                       _range_mask(mask_pdf, base, range_size, mask_inverted))
-            # per-term block upper bounds; global processing order
-            # (-max UB, tid) is a total order — heaviest terms first
-            # raises thetas early, and the fixed order pins float
-            # summation (scores reproduce bit-for-bit across executions)
-            rows = []
-            n_postings = 0
-            for r in pdf.itertuples(index=False):
-                idf = idfs[r.tid]
-                n_postings += int(np.asarray(r.block_n).sum())
-                ub_blocks = idf * _tfnorm_bound(
-                    np.asarray(r.block_max_tf), np.asarray(r.block_min_dl),
-                    k1, b, avgdl,
-                )
-                rows.append((float(ub_blocks.max()), r.tid, r, ub_blocks))
-            rows.sort(key=lambda x: (
-                -x[0], x[1],
-                int(x[2].block_first[0]) if len(x[2].block_first) else -1,
-            ))  # first-docId tiebreak: total order even when a range
-            # holds two rows for one term (see _make_scorer, r5 review)
+                       _range_mask(_side_ids(mask_pdf), base, range_size,
+                                   mask_inverted))
+            # heaviest terms first raises thetas early, and the fixed
+            # order pins float summation (see _ranked_rows)
+            rows = _ranked_rows(pdf.itertuples(index=False), idfs, k1, b, avgdl)
+            n_postings = sum(int(np.asarray(r.block_n).sum()) for _, _, r, _ in rows)
             # adaptive engage (r3 VERDICT #2/#3 — see docstring)
             if (prune and n_postings >= prune_min
                     and n_queries <= _BATCH_PRUNE_MAX_QUERIES):
-                return _wand(rows, base, allowed)
-            return _taat(rows, base, allowed)
+                return _qframe(_wand(rows, base, allowed))
+            return _qframe(_shared_taat_range(
+                rows, base, allowed, idfs, by_tid, k1, b, avgdl, k
+            ))
 
         postings = self._postings().filter(
             F.col("shard").isin(shards) & F.col("tid").isin(list(idfs))
@@ -2087,8 +2103,6 @@ class SearchIndex:
         ``search_phrase``. ``slop`` applies to every phrase in the batch.
         Returns DataFrame(query_id string, doc_id long, score double),
         per query ordered (score desc, doc_id asc), <= k rows each."""
-        from pyspark.sql import Window as W
-
         if not self.params.get("store_positions"):
             raise ValueError(
                 "search_many_phrase needs a positional index — build with "
@@ -2123,19 +2137,15 @@ class SearchIndex:
 
         def score_impl(key, pdf, mask_pdf):
             _limit_arrow_threads()
-            empty = pd.DataFrame(
-                {"query_id": [], "doc_id": [], "score": []}
-            ).astype({"query_id": "object", "doc_id": "int64",
-                      "score": "float64"})
             if pdf.empty:
-                return empty
+                return _qframe([])
             base = int(key[0]) * range_size
             # None only in the no-cogroup branch; an EMPTY cogrouped side
             # is meaningful (see search_many)
             amask = (None if mask_pdf is None else
-                     _range_mask(mask_pdf, base, range_size, mask_inverted))
-            per_tid = _decode_positional_range(pdf, base)
-            frames = []
+                     _range_mask(_side_ids(mask_pdf), base, range_size, mask_inverted))
+            per_tid = _decode_positional_range(pdf.itertuples(index=False), base)
+            out = []
             for qid, (instances, tids_q, m, idf_sum) in qinfo.items():
                 if any(t not in per_tid for t in tids_q):
                     continue  # a term of this phrase is absent from the range
@@ -2155,12 +2165,8 @@ class SearchIndex:
                 tfn = f * (k1 + 1.0) / (f + k1 * (1.0 - b + b * dl / avgdl))
                 scores = idf_sum * tfn
                 idx, scores = _cut_topk(hit_docs, scores, k)
-                frames.append(pd.DataFrame({
-                    "query_id": qid,
-                    "doc_id": (base + idx).astype("int64"),
-                    "score": scores,
-                }))
-            return pd.concat(frames, ignore_index=True) if frames else empty
+                out.append((qid, base + idx, scores))
+            return _qframe(out)
 
         postings = self._postings().filter(
             F.col("shard").isin(shards) & F.col("tid").isin(all_tids)
@@ -2289,7 +2295,8 @@ class SearchIndex:
             "query_id", F.col("score").desc(), F.col("doc_id").asc()
         )
 
-    def _search_many_gated(self, gated: dict[str, tuple], k: int) -> DataFrame:
+    def _search_many_gated(self, gated: dict[str, tuple], k: int,
+                           single: bool = False) -> DataFrame:
         """ONE Spark job for a batch of gated parsed queries (r4 VERDICT
         #2): postings for the union of every query's scored AND gate
         terms are read and decoded once per docId-range; each query then
@@ -2308,7 +2315,7 @@ class SearchIndex:
         Bit-identity to per-query ``search_parsed`` (pytest-gated): per
         query, present scored terms are accumulated in that query's own
         (-boosted_upper_bound, tid) order — the same total order
-        ``_make_scorer``'s exhaustive path uses — with contributions
+        ``_range_kernel``'s exhaustive path uses — with contributions
         computed by the same expression ``(boost*idf) * tfn``; gating
         before vs after accumulation cannot change a surviving doc's sum.
         ``max(idf*bounds) == idf*max(bounds)`` exactly (multiplication by
@@ -2324,12 +2331,14 @@ class SearchIndex:
         ``_mask_plan``'s allowed side (per-query adaptive complements
         don't compose across differing predicates; amortized over the
         whole batch this is already far below one mask-plan count job
-        per query). Field values are compared in pandas after casting
-        the literal to the column dtype (docstats metadata columns are
-        strings in practice; a non-castable literal matches nothing,
-        like the Spark cast yielding NULL)."""
-        from pyspark.sql import Window as W
+        per query). Field values are compared as numpy arrays after
+        casting the literal to the column dtype (docstats metadata
+        columns are strings in practice; a non-castable literal matches
+        nothing, like the Spark cast yielding NULL).
 
+        On a warm_local snapshot the batch runs driver-side with zero
+        Spark jobs; ``single`` then returns the lone query's rows as a
+        (doc_id, score) frame — the ``search_parsed`` shape."""
         spark = self.spark
         out_schema = "query_id string, doc_id long, score double"
         n, avgdl, k1, b = self.n_docs, self.avgdl, self.k1, self.b
@@ -2421,38 +2430,26 @@ class SearchIndex:
             for _, tids, _ in plan["phrases"] + plan["not_phrases"]:
                 pos_tids.update(tids)
         if not plans:
-            return empty_df(spark, out_schema)
+            return empty_df(spark, _SCORE_SCHEMA_T if single else out_schema)
 
         decode_tids = scoring_tids | gate_tids
         all_tids = sorted(decode_tids | pos_tids)
-        shards = sorted({py_shard(t, self.num_shards)
-                         for t in dfs if tid_of[t] in set(all_tids)})
         field_cols = sorted(
             {f for p in plans.values() for f, _, _ in p["fields"]}
             | {f for p in plans.values() for f, _, _, _ in p["ranges"]}
         )
         n_queries = len(plans)
 
-        def _empty_out():
-            return pd.DataFrame({"query_id": [], "doc_id": [], "score": []}).astype(
-                {"query_id": "object", "doc_id": "int64", "score": "float64"}
-            )
-
-        def score_impl(key, pdf, side_pdf, decode=_decode_row):
-            _limit_arrow_threads()
-            if pdf.empty:
-                return _empty_out()
-            base = int(key[0]) * range_size
+        def gated_range(recs, base, live, side, decode=_decode_row):
+            """The gated batch's range kernel: per-query ``(query_id,
+            doc_ids, scores)`` triples for one docId-range. ``live`` is
+            the range's boolean liveness mask (None: every doc is live);
+            ``side`` maps ``range_id``, ``doc_id`` and the referenced
+            field columns to arrays over the range's live docs (None
+            when no query has field clauses)."""
             srid = None
-            if side_mode == "dead":
-                live = _range_mask(side_pdf, base, range_size, True)
-            elif side_mode == "live":
-                live = np.zeros(range_size, dtype=bool)
-                if side_pdf is not None and len(side_pdf):
-                    srid = side_pdf["doc_id"].to_numpy() - base
-                    live[srid] = True
-            else:
-                live = None
+            if side is not None and len(side["doc_id"]):
+                srid = side["doc_id"] - base
 
             fmask_cache: dict[tuple, np.ndarray] = {}
 
@@ -2461,16 +2458,16 @@ class SearchIndex:
                 if m is None:
                     m = np.zeros(range_size, dtype=bool)
                     if srid is not None:
-                        ser = side_pdf[f]
-                        if ser.dtype == object:
-                            eq = ser.to_numpy() == v
+                        col = side[f]
+                        if col.dtype == object:
+                            eq = col == v
                         else:
                             try:
-                                vv = ser.dtype.type(v)
+                                vv = col.dtype.type(v)
                             except (ValueError, TypeError):
                                 eq = None  # uncastable literal: matches nothing
                             else:
-                                eq = ser.to_numpy() == vv
+                                eq = col == vv
                         if eq is not None:
                             m[srid[eq]] = True
                     fmask_cache[(f, v)] = m
@@ -2479,24 +2476,24 @@ class SearchIndex:
             def range_mask_of(f, lo, hi):
                 """docs whose field value is inside the inclusive range
                 (NULL never matches — like the Spark/Lucene predicate);
-                mirrors parser._range_cond on pandas columns."""
+                mirrors parser._range_cond on the column's values."""
                 key_ = (f, lo, hi)
                 m = fmask_cache.get(key_)
                 if m is None:
                     m = np.zeros(range_size, dtype=bool)
                     if srid is not None:
-                        ser = side_pdf[f]
-                        ok = ser.notna().to_numpy()
-                        vals = ser[ok]
-                        inr = np.ones(int(ok.sum()), dtype=bool)
+                        col = side[f]
+                        ok = ~pd.isna(col)
+                        vals = col[ok]
+                        inr = np.ones(vals.size, dtype=bool)
                         try:
-                            if ser.dtype != object:
-                                lo = None if lo is None else ser.dtype.type(lo)
-                                hi = None if hi is None else ser.dtype.type(hi)
+                            if col.dtype != object:
+                                lo = None if lo is None else col.dtype.type(lo)
+                                hi = None if hi is None else col.dtype.type(hi)
                             if lo is not None:
-                                inr &= (vals >= lo).to_numpy()
+                                inr &= vals >= lo
                             if hi is not None:
-                                inr &= (vals <= hi).to_numpy()
+                                inr &= vals <= hi
                         except (ValueError, TypeError):
                             inr[:] = False  # uncastable endpoint: matches nothing
                         m[srid[ok][inr]] = True
@@ -2505,16 +2502,20 @@ class SearchIndex:
 
             # shared decode: ids for gate terms, ids+tfn for scored
             # terms, positional streams for phrase terms. A range can
-            # hold SEVERAL rows per term (a direct build_index append at
-            # a non-range-aligned offset shares a range) — plain
-            # ``idx_of[tid] = ...`` silently kept only the last row
-            # (r5 review); rows concatenate in first-docId order (spans
-            # are disjoint, so per-doc contributions never interleave).
+            # hold SEVERAL records per term (a direct build_index append
+            # at a non-range-aligned offset shares a range) — plain
+            # ``idx_of[tid] = ...`` silently kept only the last one
+            # (r5 review); records concatenate in first-docId order
+            # (spans are disjoint, so per-doc contributions never
+            # interleave).
             rows_of: dict[int, list] = {}
-            for r in pdf.itertuples(index=False):
+            pos_recs = []
+            for r in recs:
                 tid = int(r.tid)
                 if tid in decode_tids:
                     rows_of.setdefault(tid, []).append(r)
+                if tid in pos_tids:
+                    pos_recs.append(r)
             idx_of: dict[int, np.ndarray] = {}
             tfn_of: dict[int, np.ndarray] = {}
             ubmax_of: dict[int, float] = {}
@@ -2543,11 +2544,8 @@ class SearchIndex:
                     tfn_of[tid] = (parts_t[0] if len(parts_t) == 1
                                    else np.concatenate(parts_t))
                     ubmax_of[tid] = ub
-            per_tid_pos: dict = {}
-            if pos_tids:
-                sub = pdf[pdf["tid"].isin(list(pos_tids))]
-                if len(sub):
-                    per_tid_pos = _decode_positional_range(sub, base)
+            per_tid_pos = (_decode_positional_range(pos_recs, base)
+                           if pos_recs else {})
 
             def member(idxs):
                 m = np.zeros(range_size, dtype=bool)
@@ -2561,7 +2559,7 @@ class SearchIndex:
                 hf = _phrase_hits(per_tid_pos, inst, tids, 0, m_len)
                 return None if hf is None else hf[0]
 
-            frames = []
+            out = []
             for qid, plan in plans.items():
                 g = live.copy() if live is not None else None
                 dead_q = False
@@ -2655,66 +2653,37 @@ class SearchIndex:
                 if uniq.size == 0:
                     continue
                 fidx, scores = _cut_topk(uniq, S[uniq], k)
-                frames.append(pd.DataFrame({
-                    "query_id": qid,
-                    "doc_id": (base + fidx).astype("int64"),
-                    "score": scores,
-                }))
-            return pd.concat(frames, ignore_index=True) if frames else _empty_out()
+                out.append((qid, base + fidx, scores))
+            return out
 
         loc = self._local
         if loc is not None:
-            # warm_local: run the SAME score_impl per range driver-side —
-            # zero Spark jobs for the whole gated batch (expansion units
-            # were already resolved at planning). Side data comes from
-            # the snapshot: live docstats rows (+ referenced field
-            # columns) when any query has field clauses, else the dead
-            # set (inverted), mirroring the cluster cogroup sides below.
-            if field_cols:
-                side_mode = "live"
-                spdf = loc["docstats_pdf"]
-                if loc["dead_ids"]:
-                    spdf = spdf[~spdf["doc_id"].isin(loc["dead_ids"])]
-                extra = [c for c in field_cols
-                         if c not in ("range_id", "doc_id")]
-                side_by_range = {
-                    int(rid): g.reset_index(drop=True)
-                    for rid, g in spdf[["range_id", "doc_id", *extra]]
-                    .groupby("range_id")
-                }
-            elif loc["dead"]:
-                side_mode = "dead"
-                side_by_range = loc["dead"]
-            else:
-                side_mode = "none"
-                side_by_range = {}
-            tid_set = set(all_tids)
-            frames = []
-            for rid in sorted(loc["rows"]):
-                sub, tid_pos = loc["rows"][rid]
-                pos = [i for t in tid_set if t in tid_pos
-                       for i in tid_pos[t]]
-                if not pos:
-                    continue
-                out = score_impl(
-                    (rid,), sub.iloc[sorted(pos)],
-                    None if side_mode == "none" else side_by_range.get(rid),
-                    decode=loc["decoded"] or _decode_row,
-                )
-                if len(out):
-                    frames.append(out)
-            if not frames:
-                return empty_df(spark, _QSCORE_SCHEMA_T)
-            cat = pd.concat(frames, ignore_index=True)
+            # warm_local: the SAME range kernel driver-side over the
+            # snapshot's records — zero Spark jobs for the whole gated
+            # batch (expansion units were already resolved at planning).
+            # Side data comes from the snapshot: the cached live side
+            # (+ referenced field columns) when any query has field
+            # clauses, else the dead set (inverted), mirroring the
+            # cluster cogroup sides below.
+            sides = self._local_live_sides(field_cols) if field_cols else None
+            decode = loc["decoded"] or _decode_row
             parts = []
-            for qid, grp in cat.groupby("query_id", sort=True):
-                order = np.lexsort((grp["doc_id"].to_numpy(),
-                                    -grp["score"].to_numpy()))[:k]
-                parts.append(grp.iloc[order])
-            return self.spark.createDataFrame(
-                pd.concat(parts, ignore_index=True), _QSCORE_SCHEMA_T
-            )
+            allowed_of = (None if sides is None else
+                          {rid: side["doc_id"] for rid, side in sides.items()})
+            for base, recs, live in self._local_ranges(all_tids, allowed_of):
+                side = None if sides is None else sides[base // range_size]
+                parts.extend(gated_range(recs, base, live, side, decode))
+            schema = _SCORE_SCHEMA_T if single else _QSCORE_SCHEMA_T
+            if not parts:
+                return empty_df(spark, schema)
+            q, d, s = _topk_per_query(parts, k)
+            cols = {"doc_id": d, "score": s}
+            return self._local_frame(cols if single else {"query_id": q, **cols},
+                                     schema)
 
+        all_set = set(all_tids)
+        shards = sorted({py_shard(t, self.num_shards)
+                         for t in dfs if tid_of[t] in all_set})
         postings = self._postings().filter(
             F.col("shard").isin(shards) & F.col("tid").isin(all_tids)
         )
@@ -2732,6 +2701,22 @@ class SearchIndex:
             side_mode = "dead"
         else:
             side, side_mode = None, "none"
+
+        def score_impl(key, pdf, side_pdf):
+            _limit_arrow_threads()
+            if pdf.empty:
+                return _qframe([])
+            base = int(key[0]) * range_size
+            cols = None
+            if side_mode == "dead":
+                live = _range_mask(_side_ids(side_pdf), base, range_size, True)
+            elif side_mode == "live":
+                cols = {c: side_pdf[c].to_numpy() for c in side_pdf.columns}
+                live = _range_mask(cols["doc_id"], base, range_size, False)
+            else:
+                live = None
+            return _qframe(gated_range(pdf.itertuples(index=False), base, live, cols))
+
         if side is not None:
             scored_df = (
                 postings.groupBy("range_id")

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 import pytest
 
 from dbsyncer_spark.session import get_spark
@@ -27,3 +29,17 @@ def corpus(spark, corpus_pdf):
     df = df.cache()
     df.count()
     return df
+
+
+@contextmanager
+def zero_spark_jobs(spark, group: str):
+    """Run the ``with`` body under Spark job group ``group`` and assert
+    that it submitted no Spark job."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "must stay empty")
+    try:
+        yield
+    finally:
+        sc.setJobGroup("", "")
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert list(jobs) == [], f"{group} submitted Spark jobs: {jobs}"

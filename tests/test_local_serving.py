@@ -8,6 +8,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import zero_spark_jobs
 from dbsyncer_spark.index.build import build_index
 from dbsyncer_spark.index.search import SearchIndex
 
@@ -68,21 +69,14 @@ def test_local_serving_runs_zero_spark_jobs(spark, pair):
     folds drive everything; the ~150-250 ms per-job scheduling floor is
     gone, SURVEY §8.10)."""
     _, hot = pair
-    sc = spark.sparkContext
     # prime the per-predicate allowed-set cache (its first evaluation is
     # also job-free, but prove steady-state separately from warm-up)
     hot.search("merge", k=5, doc_filter=F.col("lang") == "go").collect()
-    sc.setJobGroup("local_serving_gate", "must stay empty")
-    try:
+    with zero_spark_jobs(spark, "local_serving_gate"):
         hot.search("merge scan", k=10).collect()
         hot.search("merge", k=5, doc_filter=F.col("lang") == "go").collect()
         hot.search("merge scan", k=10, mode="exhaustive",
                    boosts={"merge": 2.0}).collect()
-    finally:
-        sc.setJobGroup("", "")
-    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(
-        "local_serving_gate")
-    assert list(jobs) == [], f"fast path submitted Spark jobs: {jobs}"
 
 
 def test_local_budget_refusal(spark, pair, tmp_path_factory):
@@ -123,6 +117,55 @@ def test_local_masks_tombstones(spark, corpus, tmp_path_factory):
     assert not set(victims) & {i for i, _ in got}
 
 
+def test_tombstoned_multi_range_local_matches_cluster(spark, corpus,
+                                                     tmp_path_factory):
+    """Every warm_local loop takes the dead-mask branch on a tombstoned
+    multi-range snapshot: search_rows (wand, exhaustive, filtered,
+    ``after`` cursor), search_many (with and without ``doc_filter``) and
+    search_parsed (``field:value`` clause, ``-mustnot``) must match the
+    cluster path exactly."""
+    from dbsyncer_spark.streaming.incremental import delete_docs
+
+    d = str(tmp_path_factory.mktemp("localtomb_multi"))
+    build_index(spark, corpus, d, num_shards=8, range_size=256,
+                num_id_buckets=32)
+    cold0 = SearchIndex(spark, d)
+    victims = sorted({r.doc_id for q in ("merge scan", "offset shard token")
+                      for r in cold0.search(q, k=6).collect()})
+    assert len({v // 256 for v in victims}) >= 2, "victims in one range: vacuous"
+    delete_docs(spark, d, cold0.docstats().filter(
+        F.col("doc_id").isin(victims)).select("repo", "path"))
+    cold = SearchIndex(spark, d)
+    hot = SearchIndex(spark, d)
+    hot.warm_local()
+    assert len(hot._local["dead"]) >= 2 and len(hot._local["rows"]) > 1
+    py = F.col("lang") == "python"
+    for q in ("merge scan", "offset shard token", "merge"):
+        for kw in (dict(mode="wand"), dict(mode="exhaustive"),
+                   dict(mode="wand", doc_filter=py)):
+            want = _rows(cold.search(q, k=10, **kw))
+            got = hot.search_rows(q, k=10, **kw)
+            assert got == want and got, (q, kw)
+            assert not set(victims) & {i for i, _ in got}
+    p1 = hot.search_rows("merge scan offset", k=10, mode="exhaustive")
+    p2 = hot.search_rows("merge scan offset", k=10, mode="exhaustive",
+                         after=(p1[-1][1], p1[-1][0]))
+    assert p1 + p2 == _rows(cold.search("merge scan offset", k=20,
+                                        mode="exhaustive"))
+    batch = {"q1": "merge scan", "q2": "offset shard token", "q3": "merge"}
+    for flt in (None, py):
+        want = [tuple(r) for r in
+                cold.search_many(batch, k=7, doc_filter=flt).collect()]
+        got = [tuple(r) for r in
+               hot.search_many(batch, k=7, doc_filter=flt).collect()]
+        assert got == want and got, flt
+    for q in ("merge scan lang:python", "merge offset -scan",
+              "offset shard -merge lang:go"):
+        want = _rows(cold.search_parsed(q, k=10))
+        got = _rows(hot.search_parsed(q, k=10))
+        assert got == want and got, q
+
+
 def test_local_batch_matches_cluster(pair):
     """search_many over the warm_local snapshot (driver-side shared-decode
     TAAT) must return exactly the cluster batch's rows — including under
@@ -142,14 +185,8 @@ def test_local_batch_runs_zero_spark_jobs(spark, pair):
     _, hot = pair
     batch = {"q1": "merge scan", "q2": "offset shard"}
     hot.search_many(batch, k=5).collect()  # warm the path
-    sc = spark.sparkContext
-    sc.setJobGroup("local_batch_gate", "must stay empty")
-    try:
+    with zero_spark_jobs(spark, "local_batch_gate"):
         hot.search_many(batch, k=5).collect()
-    finally:
-        sc.setJobGroup("", "")
-    jobs = sc.statusTracker().getJobIdsForGroup("local_batch_gate")
-    assert list(jobs) == [], f"local batch submitted Spark jobs: {jobs}"
 
 
 @pytest.fixture(scope="module")
@@ -195,18 +232,12 @@ def test_local_parsed_gates_run_zero_spark_jobs(spark, parsed_pair):
     gated = [q for q in PARSED_LOCAL_QS if "*" not in q]
     for q in gated:  # warm the per-predicate filter caches untimed
         hot.search_parsed(q, k=5).collect()
-    sc = spark.sparkContext
-    sc.setJobGroup("local_parsed_gate", "must stay empty")
-    try:
+    with zero_spark_jobs(spark, "local_parsed_gate"):
         for q in gated:
             hot.search_parsed(q, k=5).collect()
         hot.search_many_parsed(
             {"a": "+merge lang:go scan", "b": "merge scan",
              "c": '(merge OR offset) AND scan'}, k=5).collect()
-    finally:
-        sc.setJobGroup("", "")
-    jobs = sc.statusTracker().getJobIdsForGroup("local_parsed_gate")
-    assert list(jobs) == [], f"local parsed path submitted jobs: {jobs}"
 
 
 def test_local_batch_parsed_matches_cluster(parsed_pair):
@@ -273,13 +304,8 @@ def test_refresh_read_your_writes(spark, corpus, tmp_path_factory):
     for q in ("merge scan", "offset shard token", "zz"):
         assert _rows(h.search(q, k=10)) == _rows(fresh.search(q, k=10)), q
     # and the refreshed handle still runs zero-job local serving
-    sc = spark.sparkContext
-    sc.setJobGroup("refresh_local_gate", "must stay empty")
-    try:
+    with zero_spark_jobs(spark, "refresh_local_gate"):
         h.search("merge scan", k=10).collect()
-    finally:
-        sc.setJobGroup("", "")
-    assert list(sc.statusTracker().getJobIdsForGroup("refresh_local_gate")) == []
 
 
 @pytest.mark.parametrize("spec", QUERIES)
@@ -317,16 +343,10 @@ def test_search_rows_zero_spark_jobs(spark, pair):
     query_p50_ms_rows)."""
     _, hot = pair
     hot.search_rows("merge scan", k=5)  # prime
-    sc = spark.sparkContext
-    sc.setJobGroup("rows_serving_gate", "must stay empty")
-    try:
+    with zero_spark_jobs(spark, "rows_serving_gate"):
         hot.search_rows("merge scan", k=10)
         hot.search_rows("merge", k=5, doc_filter=F.col("lang") == "go")
         hot.search_rows("zzzqx", k=5)
-    finally:
-        sc.setJobGroup("", "")
-    jobs = sc.statusTracker().getJobIdsForGroup("rows_serving_gate")
-    assert list(jobs) == [], f"rows path submitted Spark jobs: {jobs}"
 
 
 def test_decode_cache_populated_and_bounded(pair):
@@ -426,16 +446,10 @@ def test_match_all_local_identity_and_zero_jobs(spark, pair):
            for r in hot.search_parsed("lang:go", k=12).collect()]
     assert got == want
 
-    sc = spark.sparkContext
-    sc.setJobGroup("matchall_local_gate", "must stay empty")
-    try:
+    with zero_spark_jobs(spark, "matchall_local_gate"):
         hot.match_all(doc_filter=F.col("lang") == "go", k=10).collect()
         hot.match_all(sort_cols=[("dl", True)], k=5).collect()
         hot.search_parsed("lang:go", k=12).collect()
-    finally:
-        sc.setJobGroup("", "")
-    jobs = sc.statusTracker().getJobIdsForGroup("matchall_local_gate")
-    assert list(jobs) == [], f"local match_all submitted Spark jobs: {jobs}"
 
 
 def test_match_all_local_null_sort_falls_back(spark, tmp_path_factory):
@@ -465,14 +479,9 @@ def test_match_all_local_null_sort_falls_back(spark, tmp_path_factory):
     first = cold.match_all(sort_cols=[("lang", True)], k=12).collect()
     assert any(r["lang"] is None for r in first), "no null rows on page: vacuous"
     # non-null sorts on the same snapshot still serve locally (zero jobs)
-    sc = spark.sparkContext
     hot.match_all(k=5).collect()  # prime caches
-    sc.setJobGroup("nullsort_gate", "must stay empty")
-    try:
+    with zero_spark_jobs(spark, "nullsort_gate"):
         hot.match_all(k=5).collect()
-    finally:
-        sc.setJobGroup("", "")
-    assert list(sc.statusTracker().getJobIdsForGroup("nullsort_gate")) == []
 
 
 def test_misaligned_direct_append_warm_local_identity(spark, corpus, tmp_path_factory):
@@ -496,10 +505,10 @@ def test_misaligned_direct_append_warm_local_identity(spark, corpus, tmp_path_fa
     cold = SearchIndex(spark, d)
     hot = SearchIndex(spark, d)
     hot.warm_local()
-    # sanity: the shape under test actually exists (duplicate tids in
-    # one range's map)
-    assert any(len(v) > 1 for _, m in hot._local["rows"].values()
-               for v in m.values()), "no duplicate (tid, range) rows: vacuous"
+    # sanity: the shape under test actually exists (some range holds
+    # two or more records for one tid)
+    assert any(len(recs) > 1 for by_tid in hot._local["rows"].values()
+               for recs in by_tid.values()), "no duplicate (tid, range) rows: vacuous"
     for q in ("merge scan", "offset shard token", "merge"):
         for mode in ("wand", "exhaustive"):
             want = _rows(cold.search(q, k=15, mode=mode))
