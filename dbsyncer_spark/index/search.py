@@ -53,6 +53,7 @@ class TermsTableMissing(ValueError):
     degrade."""
 
 _SCORE_SCHEMA = "doc_id long, score double"
+_QSCORE_SCHEMA = "query_id string, doc_id long, score double"
 
 # Parsed-once StructType twins of the serving result schemas. The
 # zero-job warm_local paths build their results with createDataFrame /
@@ -120,10 +121,13 @@ def _range_mask(ids, base: int, range_size: int, inverted: bool):
     return m
 
 
-def _side_ids(pdf):
-    """The ``doc_id`` column of a cogrouped mask side as an array (None
-    stays None: the no-cogroup branch)."""
-    return None if pdf is None else pdf["doc_id"].to_numpy()
+def _side_mask(side_pdf, base: int, range_size: int, inverted: bool):
+    """``_range_mask`` from a cogrouped mask side's ``doc_id`` column
+    (None without a side: the no-cogroup branch masks nothing)."""
+    if side_pdf is None:
+        return None
+    return _range_mask(side_pdf["doc_id"].to_numpy(), base, range_size,
+                       inverted)
 
 
 def _dead_ranges(tomb: DataFrame, range_size: int) -> DataFrame:
@@ -308,6 +312,13 @@ def _qframe(parts: list) -> pd.DataFrame:
     })
 
 
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """The single-query cross-range merge of per-range (doc_id, score)
+    rows: a TakeOrdered over (score desc, doc_id asc), never a global
+    sort."""
+    return scored.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
+
+
 def _topk_per_query(parts: list, k: int):
     """Driver-side cross-range cut of per-query ``(query_id, doc_ids,
     scores)`` triples: ``(query_ids, doc_ids, scores)`` arrays with at
@@ -441,44 +452,38 @@ def _range_kernel(idfs: dict, k1: float, b: float, avgdl: float, k: int,
     return kernel
 
 
-def _make_scorer(idfs: dict, k1: float, b: float, avgdl: float, k: int,
-                 range_size: int, prune: bool, use_allowed: bool,
-                 after: tuple[float, int] | None = None,
-                 mask_is_dead: bool = False):
-    """The per-range applyInPandas scorer: ``_range_kernel`` over the
-    group's rows, masked by the cogrouped side when ``use_allowed``.
+#: pandas dtype of each DDL type the per-range result schemas use
+_PD_DTYPES = {"long": "int64", "double": "float64", "string": "object"}
 
-    ``mask_is_dead``: the cogrouped side is the EXCLUDED set (dead set
-    and/or broad-filter complement) — inverted (r3 review: the
-    allowed-set shape shipped the ENTIRE live docstats into every range
-    task once a single tombstone existed; r4: a broad filter shipped
-    O(matching docs) — _mask_plan now ships whichever side is
-    smaller)."""
-    kernel = _range_kernel(idfs, k1, b, avgdl, k, range_size, prune, after)
 
-    def score_range_impl(key, postings, allow_pdf):
+def _per_range(postings: DataFrame, side: DataFrame | None, fn, schema: str,
+               range_size: int) -> DataFrame:
+    """Run ``fn(recs, base, side_pdf)`` once per docId-range: ``postings``
+    grouped by ``range_id``, cogrouped with ``side`` when given
+    (``side_pdf`` is None otherwise — an EMPTY cogrouped side is
+    meaningful: no allowed docs in the range, or no dead docs). ``recs``
+    are the range's posting records and ``base`` its first docId; ``fn``
+    returns a pandas frame of ``schema`` (a DDL string). Ranges with no
+    postings — the cogroup also yields side-only ranges — return an
+    empty frame without calling ``fn`` (no mask is built just to be
+    discarded, r3 review)."""
+    empty = pd.DataFrame({
+        name: pd.Series(dtype=_PD_DTYPES[typ])
+        for name, typ in (c.split() for c in schema.split(","))
+    })
+
+    def run(key, pdf, side_pdf):
         _limit_arrow_threads()
-        if postings.empty:
-            # before the mask build: under dead-only masking the cogroup
-            # also yields ranges with tombstones but none of the query's
-            # terms — allocating a range_size mask just to discard it
-            # wasted an array per such range per query (r3 review)
-            return pd.DataFrame({"doc_id": [], "score": []}).astype(
-                {"doc_id": "int64", "score": "float64"}
-            )
-        base = int(key[0]) * range_size
-        mask = (_range_mask(_side_ids(allow_pdf), base, range_size, mask_is_dead)
-                if use_allowed else None)
-        doc_ids, scores = kernel(postings.itertuples(index=False), base, mask)
-        return pd.DataFrame({"doc_id": doc_ids.astype("int64"), "score": scores})
+        if pdf.empty:
+            return empty
+        return fn(pdf.itertuples(index=False), int(key[0]) * range_size,
+                  side_pdf)
 
-    def grouped(key, pdf):
-        return score_range_impl(key, pdf, None)
-
-    def cogrouped(key, left, right):
-        return score_range_impl(key, left, right)
-
-    return cogrouped if use_allowed else grouped
+    grouped = postings.groupBy("range_id")
+    if side is None:
+        return grouped.applyInPandas(lambda key, pdf: run(key, pdf, None),
+                                     schema)
+    return grouped.cogroup(side.groupBy("range_id")).applyInPandas(run, schema)
 
 
 def _phrase_hits(per_tid: dict, instances: list, tids: list, slop: int,
@@ -487,10 +492,30 @@ def _phrase_hits(per_tid: dict, instances: list, tids: list, slop: int,
     streams: returns (hit_docs, freqs) — range-local doc offsets and
     anchor counts — or None when nothing matches. ``per_tid`` maps
     tid -> (docs, dls, token_docs, token_pos); ``instances`` is the
-    phrase's (tid, position) list, ``m`` its length. Shared by the
-    single-phrase scorer (``_phrase_exec``) and the batched
-    ``search_many_phrase`` so their match semantics can never diverge
-    (Lucene sum-of-moves slop; see ``_phrase_exec`` docstring)."""
+    phrase's (tid, position) list, ``m`` its length. The one phrase
+    matcher: the phrase scorer (``search_phrase`` /
+    ``search_many_phrase``), the parsed-query phrase gates and the
+    ids-only ``_phrase_match_ids`` all call it, so their match
+    semantics can never diverge.
+
+    Match semantics: the phrase is tokenized in order (duplicates
+    kept); anchor at each occurrence p of term_0. The anchor matches iff
+
+        sum over instances i of min_q |q - i - p| <= slop
+
+    where q ranges over term_i's occurrences — i.e. the total
+    move-distance to align every instance against the anchor, which is
+    Lucene's sloppy-phrase budget (one SHARED slop across all terms, not
+    a per-term window), INCLUDING out-of-order matches: for a two-term
+    phrase the condition reduces to |pos_b - pos_a - 1| <= slop, so
+    ``slop=2`` matches the reversed adjacent pair exactly as Lucene does
+    (``LuceneFactoryTest.java:351-367`` asserts that case). Documented
+    divergences: repeated phrase terms may map to the same occurrence
+    (Lucene requires distinct positions), and each instance
+    independently picks its nearest occurrence (for non-repeated terms
+    that IS the minimal total alignment cost). ``slop=0`` is the exact
+    consecutive phrase (separate vectorized fast path). The returned
+    ``freqs`` (phrase_freq) count the matching anchors."""
     from dbsyncer_spark.index.codec import POS_CAP
 
     if slop == 0:
@@ -568,6 +593,14 @@ def _phrase_hits(per_tid: dict, instances: list, tids: list, slop: int,
         return None
     return (np.asarray(hit_l, dtype=np.int64),
             np.asarray(freq_l, dtype=np.int64))
+
+
+def _phrase_spec(terms: list) -> tuple:
+    """A tokenized phrase as ``_phrase_hits`` takes it: ``(instances,
+    tids, m)`` — its (tid, position) list, sorted distinct tids and
+    length."""
+    instances = [(term_id(t), i) for i, t in enumerate(terms)]
+    return instances, sorted({tid for tid, _ in instances}), len(terms)
 
 
 def _decode_positional_range(recs, base: int) -> dict:
@@ -668,7 +701,7 @@ class SearchIndex:
     def docstats(self) -> DataFrame:
         return self._union_read("docstats")
 
-    def _mask_plan(self, doc_filter, allowed_docs, tomb,
+    def _mask_plan(self, doc_filter, tomb,
                    filter_selectivity: float | None = None):
         """Choose the cogroup mask side for one query: returns
         ``(mask_side | None, inverted)``.
@@ -690,46 +723,36 @@ class SearchIndex:
           a per-session cache keyed by the predicate's expression string,
           or ONE pushed-down docstats count job. A stale cached fraction
           can only pick the larger side — never wrong results.
-        - an explicit ``allowed_docs`` id set stays allowed-side: the
-          caller already materialized exactly that set; deriving its
-          complement would cost the very anti-join shuffle this avoids.
         """
-        if doc_filter is None and allowed_docs is None:
+        if doc_filter is None:
             if tomb is None:
                 return None, False
             return _dead_ranges(tomb, self.range_size), True
-        allowed = self.docstats()
-        if doc_filter is not None:
-            allowed = allowed.filter(doc_filter)
-        if allowed_docs is not None:
-            allowed = allowed.join(
-                allowed_docs.select("doc_id"), "doc_id", "left_semi"
-            )
-        if doc_filter is not None and allowed_docs is None:
-            sel = filter_selectivity
+        allowed = self.docstats().filter(doc_filter)
+        sel = filter_selectivity
+        if sel is None:
+            key = str(doc_filter)
+            sel = self._sel_cache.get(key)
             if sel is None:
-                key = str(doc_filter)
-                sel = self._sel_cache.get(key)
-                if sel is None:
-                    sel = allowed.count() / max(self.n_docs, 1)
-                    if len(self._sel_cache) > 256:
-                        self._sel_cache.clear()
-                    self._sel_cache[key] = sel
-            if sel > 0.5:
-                # NULL-safe complement: rows where the predicate is FALSE
-                # or NULL (.filter() keeps only TRUE rows)
-                comp = self.docstats().filter(
-                    ~F.coalesce(doc_filter.cast("boolean"), F.lit(False))
-                ).select("range_id", "doc_id")
-                if tomb is not None:
-                    # dead docs that MATCH the filter aren't in comp;
-                    # union the dead set (duplicates for dead non-matching
-                    # docs are harmless — the mask just re-clears a bit)
-                    comp = comp.unionByName(
-                        _dead_ranges(tomb, self.range_size)
-                        .select("range_id", "doc_id")
-                    )
-                return comp, True
+                sel = allowed.count() / max(self.n_docs, 1)
+                if len(self._sel_cache) > 256:
+                    self._sel_cache.clear()
+                self._sel_cache[key] = sel
+        if sel > 0.5:
+            # NULL-safe complement: rows where the predicate is FALSE
+            # or NULL (.filter() keeps only TRUE rows)
+            comp = self.docstats().filter(
+                ~F.coalesce(doc_filter.cast("boolean"), F.lit(False))
+            ).select("range_id", "doc_id")
+            if tomb is not None:
+                # dead docs that MATCH the filter aren't in comp;
+                # union the dead set (duplicates for dead non-matching
+                # docs are harmless — the mask just re-clears a bit)
+                comp = comp.unionByName(
+                    _dead_ranges(tomb, self.range_size)
+                    .select("range_id", "doc_id")
+                )
+            return comp, True
         if tomb is not None:
             allowed = allowed.join(tomb.select("doc_id"), "doc_id", "left_anti")
         return allowed.select("range_id", "doc_id"), False
@@ -883,8 +906,7 @@ class SearchIndex:
         Filtered queries stay zero-job: ``doc_filter`` Columns are
         evaluated against a LocalRelation copy of docstats (Catalyst's
         ConvertToLocalRelation folds Filter+Project driver-side), with
-        the allowed id set cached per predicate string. ``allowed_docs``
-        (arbitrary DataFrame lineage) still routes to the cluster path.
+        the allowed id set cached per predicate string.
 
         ``decode_cache_bytes`` bounds the decoded-postings LRU
         (``_DecodedPostingsCache``) the local kernels consult before
@@ -1294,7 +1316,6 @@ class SearchIndex:
         k: int = 10,
         mode: str = "wand",
         doc_filter=None,
-        allowed_docs: DataFrame | None = None,
         after: tuple[float, int] | None = None,
         boosts: dict[str, float] | None = None,
         filter_selectivity: float | None = None,
@@ -1309,9 +1330,6 @@ class SearchIndex:
         ``doc_filter``: optional Column predicate over docstats columns
         (repo/path/lang/...) — the reference's MUST clauses. Corpus-level
         stats (idf, avgdl) stay global, matching filtered Lucene queries.
-        ``allowed_docs``: optional DataFrame with a ``doc_id`` column —
-        candidates are restricted to it (the boolean-clause gate used by
-        ``search_parsed``).
         ``after``: cursor ``(score, doc_id)`` of the previous page's last
         row — results are strictly after it in (score desc, doc_id asc)
         order (the reference's searchAfter paging, ``Shard.java:57-58,
@@ -1321,10 +1339,8 @@ class SearchIndex:
         scales WAND's per-block upper bounds by the same factor, so
         block-max pruning stays exact under boosting.
         """
-        if self._local is not None and allowed_docs is None:
+        if self._local is not None:
             # warm_local fast path: same scorer, zero Spark jobs
-            # (allowed_docs carries arbitrary DataFrame lineage the
-            # driver can't evaluate — cluster path below handles it)
             return self._search_local(query, k, mode, doc_filter, after, boosts)
         terms = sorted(set(tokenize_py(query)))
         dfs = self.lookup(terms)
@@ -1344,28 +1360,28 @@ class SearchIndex:
             F.col("shard").isin(shards) & F.col("tid").isin(list(idfs))
         )
 
-        tomb = self._tombstones()
         # mask-side selection is adaptive: small dead set inverted for
         # tombstones-only, allowed set for selective filters, COMPLEMENT
-        # inverted for broad filters (see _mask_plan — r3 VERDICT #1)
+        # inverted for broad filters (see _mask_plan — r3 VERDICT #1; an
+        # inverted side is the EXCLUDED set, r3 review)
         mask_side, mask_inverted = self._mask_plan(
-            doc_filter, allowed_docs, tomb, filter_selectivity
+            doc_filter, self._tombstones(), filter_selectivity
         )
-        use_allowed = mask_side is not None
-        scorer = _make_scorer(
+        kernel = _range_kernel(
             idfs, self.k1, self.b, self.avgdl, k, self.range_size,
-            prune=(mode == "wand" and after is None), use_allowed=use_allowed,
-            after=after, mask_is_dead=mask_inverted,
+            prune=(mode == "wand" and after is None), after=after,
         )
-        if use_allowed:
-            scored = (
-                postings.groupBy("range_id")
-                .cogroup(mask_side.groupBy("range_id"))
-                .applyInPandas(scorer, _SCORE_SCHEMA)
+        range_size = self.range_size
+
+        def score(recs, base, side_pdf):
+            doc_ids, scores = kernel(
+                recs, base, _side_mask(side_pdf, base, range_size, mask_inverted)
             )
-        else:
-            scored = postings.groupBy("range_id").applyInPandas(scorer, _SCORE_SCHEMA)
-        return scored.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
+            return pd.DataFrame({"doc_id": doc_ids.astype("int64"),
+                                 "score": scores})
+
+        return _top_k(_per_range(postings, mask_side, score, _SCORE_SCHEMA,
+                                 range_size), k)
 
     def search_after(
         self,
@@ -1373,7 +1389,6 @@ class SearchIndex:
         after: tuple[float, int],
         k: int = 10,
         doc_filter=None,
-        allowed_docs: DataFrame | None = None,
         boosts: dict[str, float] | None = None,
     ) -> DataFrame:
         """Next ``k`` results strictly after cursor ``after=(score,
@@ -1385,28 +1400,13 @@ class SearchIndex:
         materialization). Union of cursor pages is row-identical to one
         big top-K (pytest-gated).
 
-        ``boosts`` / ``allowed_docs`` must match the page-1 call exactly
+        ``boosts`` / ``doc_filter`` must match the page-1 call exactly
         (the cursor's float-equality test assumes the SAME ranking —
-        paging a boosted or parsed query with different knobs would skip
-        or duplicate rows at the page boundary)."""
+        paging a boosted query with different knobs would skip or
+        duplicate rows at the page boundary)."""
         return self.search(
             query, k=k, mode="exhaustive", doc_filter=doc_filter, after=after,
-            allowed_docs=allowed_docs, boosts=boosts,
-        )
-
-    def _docs_with_term(self, term: str) -> DataFrame:
-        """All doc_ids containing ``term`` (shard/tid-pruned postings scan,
-        decode-ids only — the blob's docId stream, never scores)."""
-        tid = term_id(term)
-        postings = self._postings().filter(
-            (F.col("shard") == py_shard(term, self.num_shards)) & (F.col("tid") == tid)
-        )
-        return postings.select(
-            F.explode(
-                _decode_ids_udf()(
-                    F.col("blob"), F.col("block_first"), F.col("block_n"), F.col("block_off")
-                )
-            ).alias("doc_id")
+            boosts=boosts,
         )
 
     def search_parsed(self, query: str, k: int = 10):
@@ -1424,6 +1424,13 @@ class SearchIndex:
         (pinned by ``tests/test_parser.py``) while the index path routes
         to ``match_all`` as described below. Phrase clauses need a
         positional index.
+
+        A query with scored terms is a batch of one through the gated
+        batch kernel (``_search_many_gated``) on every tier: its gates
+        are evaluated range-locally against the shared decode — one
+        cogroup job on the cluster ending in the single-query TakeOrdered
+        top-k, zero Spark jobs on a ``warm_local`` snapshot — so the
+        per-query and batched parsed paths are one kernel.
 
         A query with NO scored terms (filter-only: just field clauses,
         phrases, and/or exclusions — or fully empty) routes to
@@ -1443,60 +1450,33 @@ class SearchIndex:
         pq = parse_query(query)
         check_fields(pq, self.docstats().columns)
         scored, must_any, not_any = self._fold_parsed(pq)
-        if self._local is not None and scored:
-            # warm_local: evaluate gates range-locally against the
-            # driver snapshot via the shared gated kernel — zero Spark
-            # jobs (filter-only queries keep the cluster match_all
-            # route; expansion units were resolved above). Rank- and
-            # score-identical to the cluster path (pytest-gated).
+        if scored:
             return self._search_many_gated(
                 {"q": (pq, scored, must_any, not_any)}, k=k, single=True
             )
-        allowed: DataFrame | None = None
-
-        def intersect(df: DataFrame | None, other: DataFrame, anti: bool = False):
-            base = self.docstats().select("doc_id") if df is None else df
-            return base.join(
-                other.select("doc_id"), "doc_id", "left_anti" if anti else "left_semi"
-            )
-
-        for t in pq.must:
-            allowed = intersect(allowed, self._docs_with_term(t))
-        for t in pq.must_not:
-            allowed = intersect(allowed, self._docs_with_term(t), anti=True)
-        for p in pq.phrases:
-            allowed = intersect(allowed, self._phrase_match_ids(p))
-        for p in pq.not_phrases:
-            allowed = intersect(allowed, self._phrase_match_ids(p), anti=True)
-        for terms in must_any:
-            allowed = intersect(
-                allowed,
-                self._docs_with_any_term(terms) if terms
-                # empty expansion on a MUST clause: unsatisfiable gate
-                else self.docstats().select("doc_id").limit(0),
-            )
-        for terms in not_any:
-            if terms:
-                allowed = intersect(
-                    allowed, self._docs_with_any_term(terms), anti=True
-                )
-
-        doc_filter = field_filter(pq)
-
-        if not scored:
-            if any(e.mod != "-" for e in pq.expansions):
-                # a scoring expansion that matched ZERO dictionary terms:
-                # Lucene's rewritten empty BooleanQuery matches nothing —
-                # routing to match_all would invert the semantics
-                return empty_df(self.spark, _SCORE_SCHEMA_T)
-            rows = self.match_all(doc_filter=doc_filter, allowed_docs=allowed, k=k)
-            return rows.select("doc_id", F.lit(1.0).alias("score"))
-        return self.search(
-            " ".join(scored), k=k, mode="exhaustive",
-            doc_filter=doc_filter, allowed_docs=allowed,
-            boosts=pq.boosts or None,
-        )
-
+        if any(e.mod != "-" for e in pq.expansions):
+            # a scoring expansion that matched ZERO dictionary terms:
+            # Lucene's rewritten empty BooleanQuery matches nothing —
+            # routing to match_all would invert the semantics
+            return empty_df(self.spark, _SCORE_SCHEMA_T)
+        # filter-only: MUST terms, MUST groups and '+' expansions all
+        # score, so the only gates left are phrases and exclusions (a doc
+        # is excluded iff it holds ANY MUST_NOT term or group/expansion
+        # member — one anti-join covers them all)
+        gates = ([(self._phrase_match_ids(p), "left_semi") for p in pq.phrases]
+                 + [(self._phrase_match_ids(p), "left_anti")
+                    for p in pq.not_phrases])
+        excluded = [*pq.must_not, *(t for g in not_any for t in g)]
+        if excluded:
+            gates.append((self._docs_with_any_term(excluded), "left_anti"))
+        allowed = None
+        if gates:
+            allowed = self.docstats().select("doc_id")
+            for ids, how in gates:
+                allowed = allowed.join(ids, "doc_id", how)
+        rows = self.match_all(doc_filter=field_filter(pq),
+                              allowed_docs=allowed, k=k)
+        return rows.select("doc_id", F.lit(1.0).alias("score"))
 
     def _fold_parsed(self, pq):
         """Resolve ``pq.expansions`` against the terms table and fold the
@@ -1559,16 +1539,44 @@ class SearchIndex:
         extra_scored, must_any, not_any = fold_expansions(pq, expanded)
         return sorted(set(pq.scored_terms) | extra_scored), must_any, not_any
 
+    def _require_positions(self) -> None:
+        if not self.params.get("store_positions"):
+            raise ValueError("phrase queries need a positional index — "
+                             "build with store_positions=True")
+
     def _phrase_match_ids(self, query: str, slop: int = 0) -> DataFrame:
         """All doc_ids matching the phrase — UNSORTED, no top-k cut, no
-        tombstone/filter masking: the boolean-gate shape ``search_parsed``
-        semi-joins against (liveness and filters are applied there).
+        tombstone/filter masking: the boolean-gate shape a filter-only
+        ``search_parsed`` semi-/anti-joins against (liveness and filters
+        are applied there).
 
-        This exists because gating through ``search_phrase(k=2**30)`` made
-        Spark global-sort the ENTIRE match set just to throw the order
-        away (VERDICT r2 'What's wrong #1') — the gate only needs a doc_id
-        set, which the matcher already has before any scoring."""
-        return self._phrase_exec(query, k=0, slop=slop, doc_filter=None, ids_only=True)
+        Ids only, straight from ``_phrase_hits``: gating through
+        ``search_phrase(k=2**30)`` made Spark global-sort the ENTIRE
+        match set just to throw the order away (VERDICT r2 'What's wrong
+        #1') — the gate only needs a doc_id set, which the matcher
+        already has before any scoring."""
+        self._require_positions()
+        terms = tokenize_py(query)
+        uniq = sorted(set(terms))
+        if not terms or len(self.lookup(uniq)) < len(uniq):
+            # a phrase containing an unindexed term matches nothing
+            return empty_df(self.spark, "doc_id long")
+        instances, tids, m = _phrase_spec(terms)
+
+        def ids(recs, base, _side):
+            recs = list(recs)
+            hf = None
+            if {int(r.tid) for r in recs}.issuperset(tids):  # else no match
+                hf = _phrase_hits(_decode_positional_range(recs, base),
+                                  instances, tids, slop, m)
+            return pd.DataFrame({"doc_id": np.zeros(0, dtype=np.int64)
+                                 if hf is None else base + hf[0]})
+
+        shards = sorted({py_shard(t, self.num_shards) for t in uniq})
+        postings = self._postings().filter(
+            F.col("shard").isin(shards) & F.col("tid").isin(tids)
+        )
+        return _per_range(postings, None, ids, "doc_id long", self.range_size)
 
     def search_phrase(
         self,
@@ -1578,143 +1586,27 @@ class SearchIndex:
         doc_filter=None,
         filter_selectivity: float | None = None,
     ) -> DataFrame:
-        """Phrase top-k (see ``_phrase_exec`` for semantics): the
-        reference's PhraseQuery / sloppy PhraseQuery
-        (``LuceneFactoryTest.java:351-367``)."""
-        return self._phrase_exec(query, k=k, slop=slop, doc_filter=doc_filter,
-                                 ids_only=False,
-                                 filter_selectivity=filter_selectivity)
-
-    def _phrase_exec(
-        self,
-        query: str,
-        k: int,
-        slop: int,
-        doc_filter,
-        ids_only: bool,
-        filter_selectivity: float | None = None,
-    ) -> DataFrame:
         """Phrase top-k over a positional index (build with
-        ``store_positions=True``) — the reference's PhraseQuery
-        (``LuceneFactoryTest.java:351-367``).
-
-        Match semantics: tokenize the phrase in order (duplicates kept);
-        anchor at each occurrence p of term_0. The anchor matches iff
-
-            sum over instances i of min_q |q - i - p| <= slop
-
-        where q ranges over term_i's occurrences — i.e. the total
-        move-distance to align every instance against the anchor, which
-        is Lucene's sloppy-phrase budget (one SHARED slop across all
-        terms, not a per-term window), INCLUDING out-of-order matches:
-        for a two-term phrase the condition reduces to
-        |pos_b - pos_a - 1| <= slop, so ``slop=2`` matches the reversed
-        adjacent pair exactly as Lucene does
-        (``LuceneFactoryTest.java:351-367`` asserts that case).
-        Documented divergences: repeated phrase terms may map to the
-        same occurrence (Lucene requires distinct positions), and each
-        instance independently picks its nearest occurrence (for
-        non-repeated terms that IS the minimal total alignment cost).
-        ``slop=0`` is the exact consecutive phrase (separate vectorized
-        fast path). ``phrase_freq`` = number of matching anchors.
+        ``store_positions=True``) — the reference's PhraseQuery / sloppy
+        PhraseQuery (``LuceneFactoryTest.java:351-367``). Match semantics
+        (Lucene's shared sum-of-moves slop): see ``_phrase_hits``.
 
         Scoring mirrors Lucene's PhraseQuery: score = (sum of the phrase
         terms' idfs, duplicates counted, in phrase order) *
         tfnorm(phrase_freq, dl). Returns (doc_id, score) ordered
         (score desc, doc_id asc), <= k rows. Tombstones and
         ``doc_filter`` (a Column over docstats) mask candidates BEFORE
-        the per-range top-k cut (cogrouped allowed set, same shape as
-        ``search()``) — masking after the cut would silently drop live
+        the per-range top-k cut (adaptive cogrouped mask side, see
+        ``_mask_plan``) — masking after the cut would silently drop live
         docs ranked behind excluded ones within a range.
-        """
-        if not self.params.get("store_positions"):
-            raise ValueError(
-                "search_phrase needs a positional index — build with store_positions=True"
-            )
-        out_schema = "doc_id long" if ids_only else _SCORE_SCHEMA
-        terms = tokenize_py(query)
-        spark = self.spark
-        if not terms:
-            return empty_df(spark, out_schema)
-        uniq = sorted(set(terms))
-        dfs = self.lookup(uniq)
-        if len(dfs) < len(uniq):
-            # a phrase containing an unindexed term matches nothing
-            return empty_df(spark, out_schema)
-        n, avgdl, k1, b = self.n_docs, self.avgdl, self.k1, self.b
-        idf = {t: log(1.0 + (n - dfs[t] + 0.5) / (dfs[t] + 0.5)) for t in uniq}
-        idf_sum = 0.0
-        for t in terms:  # duplicates counted, phrase order (oracle twin)
-            idf_sum += idf[t]
-        instances = [(term_id(t), i) for i, t in enumerate(terms)]
-        tids = sorted({tid for tid, _ in instances})
-        shards = sorted({py_shard(t, self.num_shards) for t in uniq})
-        range_size, m = self.range_size, len(terms)
-        tomb = None if ids_only else self._tombstones()
-        # adaptive mask side (same rationale as search(), see _mask_plan):
-        # dead set inverted for tombstones-only, complement inverted for
-        # broad filters, allowed set for selective filters
-        mask_side, mask_inverted = self._mask_plan(
-            doc_filter, None, tomb, filter_selectivity
-        )
-        use_allowed = mask_side is not None
 
-        def score_impl(key, pdf, allow_pdf):
-            _limit_arrow_threads()
-            if ids_only:
-                empty = pd.DataFrame({"doc_id": []}).astype({"doc_id": "int64"})
-            else:
-                empty = pd.DataFrame({"doc_id": [], "score": []}).astype(
-                    {"doc_id": "int64", "score": "float64"}
-                )
-            if pdf.empty or len(pdf["tid"].unique()) < len(tids):
-                return empty
-            base = int(key[0]) * range_size
-            per_tid = _decode_positional_range(pdf.itertuples(index=False), base)
-            hf = _phrase_hits(per_tid, instances, tids, slop, m)
-            if hf is None:
-                return empty
-            hit_docs, freqs = hf
-            if ids_only:
-                # gate shape: the match set itself, no scoring, no cut —
-                # the caller semi-joins it (and applies liveness there)
-                return pd.DataFrame({"doc_id": (base + hit_docs).astype("int64")})
-            if use_allowed:
-                amask = _range_mask(_side_ids(allow_pdf), base, range_size,
-                                    mask_inverted)
-                if amask is not None:
-                    keep = amask[hit_docs]
-                    hit_docs, freqs = hit_docs[keep], freqs[keep]
-                    if hit_docs.size == 0:
-                        return empty
-            # dl lookup from term_0's doc list
-            d0, dl0 = per_tid[instances[0][0]][0], per_tid[instances[0][0]][1]
-            order0 = np.argsort(d0)
-            dl = dl0[order0[np.searchsorted(d0[order0], hit_docs)]].astype(np.float64)
-            f = freqs.astype(np.float64)
-            tfn = f * (k1 + 1.0) / (f + k1 * (1.0 - b + b * dl / avgdl))
-            scores = idf_sum * tfn
-            idx, scores = _cut_topk(hit_docs, scores, k)
-            return pd.DataFrame(
-                {"doc_id": (base + idx).astype("int64"), "score": scores}
-            )
-
-        postings = self._postings().filter(
-            F.col("shard").isin(shards) & F.col("tid").isin(tids)
-        )
-        if use_allowed:
-            scored = (
-                postings.groupBy("range_id")
-                .cogroup(mask_side.groupBy("range_id"))
-                .applyInPandas(lambda key, l, r: score_impl(key, l, r), out_schema)
-            )
-        else:
-            scored = postings.groupBy("range_id").applyInPandas(
-                lambda key, pdf: score_impl(key, pdf, None), out_schema
-            )
-        if ids_only:
-            return scored
-        return scored.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
+        A batch of one through ``search_many_phrase``'s per-range kernel,
+        ending in the single-query TakeOrdered top-k."""
+        scored = self._phrase_ranges({"q": query}, k, slop, doc_filter,
+                                     filter_selectivity)
+        if scored is None:
+            return empty_df(self.spark, _SCORE_SCHEMA_T)
+        return _top_k(scored[0].select("doc_id", "score"), k)
 
     def _terms_table(self) -> DataFrame:
         dirs = [d for d in self._seg_dirs if os.path.exists(os.path.join(d, "terms"))]
@@ -1780,9 +1672,11 @@ class SearchIndex:
         return terms
 
     def _docs_with_any_term(self, terms: list[str]) -> DataFrame:
-        """doc_ids containing >= 1 of ``terms`` (shard/tid-pruned ids-only
-        decode) — the candidate gate for MUST/MUST_NOT expansion clauses.
-        May emit duplicate ids (semi/anti-join right sides tolerate them)."""
+        """doc_ids containing >= 1 of ``terms`` (shard/tid-pruned
+        postings scan, decode-ids only — the blob's docId stream, never
+        scores; no tombstone masking) — the one docId decode behind the
+        filter-only exclusion gate and ``_matching_doc_ids``. May emit
+        duplicate ids (semi/anti-join right sides tolerate them)."""
         tids = sorted({term_id(t) for t in terms})
         shards = sorted({py_shard(t, self.num_shards) for t in terms})
         postings = self._postings().filter(
@@ -1918,12 +1812,10 @@ class SearchIndex:
         Returns DataFrame(query_id string, doc_id long, score double),
         per query ordered (score desc, doc_id asc), <= k rows each.
         """
-        spark = self.spark
         all_terms = sorted({t for q in queries.values() for t in tokenize_py(q)})
         dfs = self.lookup(all_terms)
-        out_schema = "query_id string, doc_id long, score double"
         if not dfs:
-            return empty_df(spark, out_schema)
+            return empty_df(self.spark, _QSCORE_SCHEMA_T)
         n, avgdl, k1, b = self.n_docs, self.avgdl, self.k1, self.b
         idfs = {term_id(t): log(1.0 + (n - df_ + 0.5) / (df_ + 0.5)) for t, df_ in dfs.items()}
         # query_id -> {tid} for terms present in the index
@@ -1933,7 +1825,7 @@ class SearchIndex:
         }
         qterms = {qid: ts for qid, ts in qterms.items() if ts}
         if not qterms:
-            return empty_df(spark, out_schema)
+            return empty_df(self.spark, _QSCORE_SCHEMA_T)
         by_tid: dict[int, list[str]] = {}
         for qid, ts in qterms.items():
             for t in ts:
@@ -2041,22 +1933,11 @@ class SearchIndex:
                 out.append((qid, base + idx, scores))
             return out
 
-        def score_impl(key, pdf, mask_pdf):
-            _limit_arrow_threads()
-            if pdf.empty:
-                return _qframe([])
-            base = int(key[0]) * range_size
-            # allowed-mask via the shared helpers (adaptive side choice,
-            # see _mask_plan), not a fourth hand-rolled copy (r3 review).
-            # mask_pdf is None ONLY in the no-cogroup branch (no masking
-            # at all); an EMPTY cogrouped side is meaningful (no allowed
-            # docs in this range under a filter / no dead docs inverted)
-            allowed = (None if mask_pdf is None else
-                       _range_mask(_side_ids(mask_pdf), base, range_size,
-                                   mask_inverted))
+        def score(recs, base, mask_pdf):
+            allowed = _side_mask(mask_pdf, base, range_size, mask_inverted)
             # heaviest terms first raises thetas early, and the fixed
             # order pins float summation (see _ranked_rows)
-            rows = _ranked_rows(pdf.itertuples(index=False), idfs, k1, b, avgdl)
+            rows = _ranked_rows(recs, idfs, k1, b, avgdl)
             n_postings = sum(int(np.asarray(r.block_n).sum()) for _, _, r, _ in rows)
             # adaptive engage (r3 VERDICT #2/#3 — see docstring)
             if (prune and n_postings >= prune_min
@@ -2069,24 +1950,16 @@ class SearchIndex:
         postings = self._postings().filter(
             F.col("shard").isin(shards) & F.col("tid").isin(list(idfs))
         )
-        tomb = self._tombstones()
         # ONE mask side serves the whole batch: a front-end batching
         # queries under a common MUST filter (e.g. lang) pays the
         # adaptive mask-plan count once per batch, not per query (r4)
         mask_side, mask_inverted = self._mask_plan(
-            doc_filter, None, tomb, filter_selectivity
+            doc_filter, self._tombstones(), filter_selectivity
         )
-        if mask_side is not None:
-            scored = (
-                postings.groupBy("range_id")
-                .cogroup(mask_side.groupBy("range_id"))
-                .applyInPandas(lambda key, l, r: score_impl(key, l, r), out_schema)
-            )
-        else:
-            scored = postings.groupBy("range_id").applyInPandas(
-                lambda key, pdf: score_impl(key, pdf, None), out_schema
-            )
-        return self._reduce_per_query(scored, n_queries, k)
+        return self._reduce_per_query(
+            _per_range(postings, mask_side, score, _QSCORE_SCHEMA, range_size),
+            n_queries, k,
+        )
 
     def search_many_phrase(self, queries: dict[str, str], k: int = 10,
                            slop: int = 0, doc_filter=None,
@@ -2095,21 +1968,29 @@ class SearchIndex:
         of ``search_many`` (r3 VERDICT stretch #9): positional postings
         for the union of every phrase's terms are read and DECODED once
         per docId-range (the decode dominates phrase cost), then each
-        phrase matches against the shared streams via the same
-        ``_phrase_hits`` kernel ``search_phrase`` uses — per-query rows
-        are rank-identical to per-query ``search_phrase`` (pytest-gated).
+        phrase matches against the shared streams via ``_phrase_hits``.
+        ``search_phrase`` is a batch of one through the same kernel, so
+        per-query rows are rank-identical to it (pytest-gated).
 
         Phrases with an unindexed term (or no tokens) match nothing, like
         ``search_phrase``. ``slop`` applies to every phrase in the batch.
         Returns DataFrame(query_id string, doc_id long, score double),
         per query ordered (score desc, doc_id asc), <= k rows each."""
-        if not self.params.get("store_positions"):
-            raise ValueError(
-                "search_many_phrase needs a positional index — build with "
-                "store_positions=True"
-            )
-        spark = self.spark
-        out_schema = "query_id string, doc_id long, score double"
+        scored = self._phrase_ranges(queries, k, slop, doc_filter,
+                                     filter_selectivity)
+        if scored is None:
+            return empty_df(self.spark, _QSCORE_SCHEMA_T)
+        return self._reduce_per_query(*scored, k)
+
+    def _phrase_ranges(self, queries: dict[str, str], k: int, slop: int,
+                       doc_filter, filter_selectivity):
+        """The phrase scorer's per-range job: ``(rows, n_queries)`` where
+        ``rows`` are each docId-range's per-query top-k (query_id,
+        doc_id, score) — not yet reduced across ranges — or None when no
+        phrase can match. Tombstones and ``doc_filter`` mask hits before
+        the per-range cut (one adaptive mask side for the whole batch,
+        see ``search_many``)."""
+        self._require_positions()
         all_terms = sorted({t for q in queries.values() for t in tokenize_py(q)})
         dfs = self.lookup(all_terms)
         n, avgdl, k1, b = self.n_docs, self.avgdl, self.k1, self.b
@@ -2118,37 +1999,33 @@ class SearchIndex:
         qinfo: dict[str, tuple] = {}
         for qid, q in queries.items():
             terms = tokenize_py(q)
-            uniq = sorted(set(terms))
-            if not terms or any(t not in dfs for t in uniq):
+            if not terms or any(t not in dfs for t in terms):
                 continue  # unindexed term -> phrase matches nothing
             idf_sum = 0.0
             for t in terms:  # duplicates counted, phrase order (oracle twin)
                 idf_sum += idf[t]
-            instances = [(term_id(t), i) for i, t in enumerate(terms)]
-            tids_q = sorted({tid for tid, _ in instances})
-            qinfo[qid] = (instances, tids_q, len(terms), idf_sum)
+            qinfo[qid] = (*_phrase_spec(terms), idf_sum)
         if not qinfo:
-            return empty_df(spark, out_schema)
+            return None
         all_tids = sorted({t for _, tids_q, _, _ in qinfo.values() for t in tids_q})
         shards = sorted({py_shard(t, self.num_shards)
                          for t in dfs if term_id(t) in set(all_tids)})
         range_size = self.range_size
-        n_queries = len(qinfo)
 
-        def score_impl(key, pdf, mask_pdf):
-            _limit_arrow_threads()
-            if pdf.empty:
+        def score(recs, base, mask_pdf):
+            recs = list(recs)
+            present = {int(r.tid) for r in recs}
+            # only phrases with every term in this range can match, and
+            # only their terms are worth a positional decode
+            here = {qid: q for qid, q in qinfo.items() if present.issuperset(q[1])}
+            if not here:
                 return _qframe([])
-            base = int(key[0]) * range_size
-            # None only in the no-cogroup branch; an EMPTY cogrouped side
-            # is meaningful (see search_many)
-            amask = (None if mask_pdf is None else
-                     _range_mask(_side_ids(mask_pdf), base, range_size, mask_inverted))
-            per_tid = _decode_positional_range(pdf.itertuples(index=False), base)
+            need = {t for q in here.values() for t in q[1]}
+            per_tid = _decode_positional_range(
+                [r for r in recs if int(r.tid) in need], base)
+            amask = _side_mask(mask_pdf, base, range_size, mask_inverted)
             out = []
-            for qid, (instances, tids_q, m, idf_sum) in qinfo.items():
-                if any(t not in per_tid for t in tids_q):
-                    continue  # a term of this phrase is absent from the range
+            for qid, (instances, tids_q, m, idf_sum) in here.items():
                 hf = _phrase_hits(per_tid, instances, tids_q, slop, m)
                 if hf is None:
                     continue
@@ -2158,6 +2035,7 @@ class SearchIndex:
                     hit_docs, freqs = hit_docs[keep], freqs[keep]
                     if hit_docs.size == 0:
                         continue
+                # dl lookup from term_0's doc list
                 d0, dl0 = per_tid[instances[0][0]][0], per_tid[instances[0][0]][1]
                 order0 = np.argsort(d0)
                 dl = dl0[order0[np.searchsorted(d0[order0], hit_docs)]].astype(np.float64)
@@ -2171,22 +2049,11 @@ class SearchIndex:
         postings = self._postings().filter(
             F.col("shard").isin(shards) & F.col("tid").isin(all_tids)
         )
-        tomb = self._tombstones()
-        # one adaptive mask side for the whole batch (see search_many)
         mask_side, mask_inverted = self._mask_plan(
-            doc_filter, None, tomb, filter_selectivity
+            doc_filter, self._tombstones(), filter_selectivity
         )
-        if mask_side is not None:
-            scored = (
-                postings.groupBy("range_id")
-                .cogroup(mask_side.groupBy("range_id"))
-                .applyInPandas(lambda key, l, r: score_impl(key, l, r), out_schema)
-            )
-        else:
-            scored = postings.groupBy("range_id").applyInPandas(
-                lambda key, pdf: score_impl(key, pdf, None), out_schema
-            )
-        return self._reduce_per_query(scored, n_queries, k)
+        return (_per_range(postings, mask_side, score, _QSCORE_SCHEMA,
+                           range_size), len(qinfo))
 
     def search_many_parsed(self, queries: dict[str, str], k: int = 10) -> DataFrame:
         """Batched parsed serving: each query string is parsed and routed
@@ -2225,8 +2092,9 @@ class SearchIndex:
         gated: dict[str, tuple] = {}
         fallback: dict[str, str] = {}
         fallback_gated = False  # any fallback part that is NOT a pure
-        # field-filter match_all (term/phrase/expansion gates build
-        # cluster-lineage semi-joins even on warm_local snapshots)
+        # field-filter match_all (exclusion/phrase gates build
+        # cluster-lineage semi-joins even on warm_local snapshots; a
+        # filter-only query holds no other gate — see search_parsed)
         for qid, q in queries.items():
             pq = parse_query(q)
             check_fields(pq, cols)
@@ -2234,8 +2102,7 @@ class SearchIndex:
             if not scored:
                 fallback[qid] = q
                 fallback_gated = fallback_gated or bool(
-                    pq.must or pq.must_not or pq.phrases or pq.not_phrases
-                    or must_any or not_any
+                    pq.must_not or pq.phrases or pq.not_phrases or not_any
                 )
                 continue
             if not (pq.must or pq.must_not or pq.phrases or pq.not_phrases
@@ -2260,7 +2127,7 @@ class SearchIndex:
                 )
             )
         if not parts:
-            return empty_df(self.spark, "query_id string, doc_id long, score double")
+            return empty_df(self.spark, _QSCORE_SCHEMA_T)
         if len(parts) == 1 and not fallback:
             # the batch KERNELS already emit the contract order
             # (query_id, score desc, doc_id asc) — no re-sort needed. A
@@ -2303,16 +2170,18 @@ class SearchIndex:
         evaluates its own gates RANGE-LOCALLY against the shared decode
         and scores exhaustively in its own summation order.
 
-        Range-local gate equivalence: every gate ``search_parsed``
-        evaluates with a global semi-join is a per-document property —
-        "contains term t" (MUST/MUST_NOT), "contains >= 1 of set S"
-        (expansion gates), "matches phrase p" (positional streams never
-        cross documents), "field f = v" (a docstats row), "is live"
-        (tombstones) — and a document lives in exactly one range, so
-        intersecting boolean masks inside the range task yields exactly
-        the semi-join's candidate set without any gate shuffle.
+        Range-local gate equivalence: every parsed gate is a
+        per-document property — "contains term t" (MUST/MUST_NOT),
+        "contains >= 1 of set S" (expansion and group gates), "matches
+        phrase p" (positional streams never cross documents), "field f =
+        v" (a docstats row), "is live" (tombstones) — and a document
+        lives in exactly one range, so intersecting boolean masks inside
+        the range task yields exactly the candidate set a global
+        semi-join chain would, without any gate shuffle.
 
-        Bit-identity to per-query ``search_parsed`` (pytest-gated): per
+        Bit-identity to ``search``'s exhaustive scorer over the same
+        terms and boosts (pytest-gated against the DataFrame twin and
+        the pure-term batch): per
         query, present scored terms are accumulated in that query's own
         (-boosted_upper_bound, tid) order — the same total order
         ``_range_kernel``'s exhaustive path uses — with contributions
@@ -2337,10 +2206,10 @@ class SearchIndex:
         nothing, like the Spark cast yielding NULL).
 
         On a warm_local snapshot the batch runs driver-side with zero
-        Spark jobs; ``single`` then returns the lone query's rows as a
-        (doc_id, score) frame — the ``search_parsed`` shape."""
+        Spark jobs. ``single``: the batch is one ``search_parsed`` query —
+        return its rows as a (doc_id, score) frame, merged across ranges
+        by the single-query TakeOrdered top-k on the cluster."""
         spark = self.spark
-        out_schema = "query_id string, doc_id long, score double"
         n, avgdl, k1, b = self.n_docs, self.avgdl, self.k1, self.b
         range_size = self.range_size
 
@@ -2356,12 +2225,8 @@ class SearchIndex:
         dfs = self.lookup(sorted(all_terms))
         tid_of = {t: term_id(t) for t in all_terms}
 
-        if any(pq.phrases or pq.not_phrases for pq, *_ in gated.values()) \
-                and not self.params.get("store_positions"):
-            raise ValueError(
-                "phrase clauses need a positional index — build with "
-                "store_positions=True"
-            )
+        if any(pq.phrases or pq.not_phrases for pq, *_ in gated.values()):
+            self._require_positions()
 
         plans: dict[str, dict] = {}
         scoring_tids: set[int] = set()
@@ -2395,8 +2260,7 @@ class SearchIndex:
                 if any(t not in dfs for t in toks):
                     dead = True  # unindexed term -> phrase matches nothing
                     break
-                inst = [(term_id(t), i) for i, t in enumerate(toks)]
-                phrases.append((inst, sorted({t for t, _ in inst}), len(toks)))
+                phrases.append(_phrase_spec(toks))
             if dead:
                 continue
             not_phrases = []
@@ -2404,8 +2268,7 @@ class SearchIndex:
                 toks = tokenize_py(p)
                 if not toks or any(t not in dfs for t in toks):
                     continue  # matches nothing -> exclusion is a no-op
-                inst = [(term_id(t), i) for i, t in enumerate(toks)]
-                not_phrases.append((inst, sorted({t for t, _ in inst}), len(toks)))
+                not_phrases.append(_phrase_spec(toks))
             plan = {
                 "qidf": qidf,
                 "must": sorted({tid_of[t] for t in pq.must}),
@@ -2430,7 +2293,7 @@ class SearchIndex:
             for _, tids, _ in plan["phrases"] + plan["not_phrases"]:
                 pos_tids.update(tids)
         if not plans:
-            return empty_df(spark, _SCORE_SCHEMA_T if single else out_schema)
+            return empty_df(spark, _SCORE_SCHEMA_T if single else _QSCORE_SCHEMA_T)
 
         decode_tids = scoring_tids | gate_tids
         all_tids = sorted(decode_tids | pos_tids)
@@ -2438,7 +2301,6 @@ class SearchIndex:
             {f for p in plans.values() for f, _, _ in p["fields"]}
             | {f for p in plans.values() for f, _, _, _ in p["ranges"]}
         )
-        n_queries = len(plans)
 
         def gated_range(recs, base, live, side, decode=_decode_row):
             """The gated batch's range kernel: per-query ``(query_id,
@@ -2688,6 +2550,7 @@ class SearchIndex:
             F.col("shard").isin(shards) & F.col("tid").isin(all_tids)
         )
         tomb = self._tombstones()
+        side = None  # no field clause, no tombstone: every doc is live
         if field_cols:
             # doc_id/range_id already ride along (a field clause on them
             # is odd but legal — check_fields allows any docstats column)
@@ -2695,39 +2558,21 @@ class SearchIndex:
             side = self.docstats().select("range_id", "doc_id", *extra)
             if tomb is not None:
                 side = side.join(tomb.select("doc_id"), "doc_id", "left_anti")
-            side_mode = "live"
         elif tomb is not None:
             side = _dead_ranges(tomb, self.range_size)
-            side_mode = "dead"
-        else:
-            side, side_mode = None, "none"
 
-        def score_impl(key, pdf, side_pdf):
-            _limit_arrow_threads()
-            if pdf.empty:
-                return _qframe([])
-            base = int(key[0]) * range_size
-            cols = None
-            if side_mode == "dead":
-                live = _range_mask(_side_ids(side_pdf), base, range_size, True)
-            elif side_mode == "live":
-                cols = {c: side_pdf[c].to_numpy() for c in side_pdf.columns}
-                live = _range_mask(cols["doc_id"], base, range_size, False)
-            else:
-                live = None
-            return _qframe(gated_range(pdf.itertuples(index=False), base, live, cols))
+        def score(recs, base, side_pdf):
+            if not field_cols:  # the side is the dead set (or absent)
+                live = _side_mask(side_pdf, base, range_size, True)
+                return _qframe(gated_range(recs, base, live, None))
+            cols = {c: side_pdf[c].to_numpy() for c in side_pdf.columns}
+            live = _range_mask(cols["doc_id"], base, range_size, False)
+            return _qframe(gated_range(recs, base, live, cols))
 
-        if side is not None:
-            scored_df = (
-                postings.groupBy("range_id")
-                .cogroup(side.groupBy("range_id"))
-                .applyInPandas(lambda key, l, r: score_impl(key, l, r), out_schema)
-            )
-        else:
-            scored_df = postings.groupBy("range_id").applyInPandas(
-                lambda key, pdf: score_impl(key, pdf, None), out_schema
-            )
-        return self._reduce_per_query(scored_df, n_queries, k)
+        scored_df = _per_range(postings, side, score, _QSCORE_SCHEMA, range_size)
+        if single:
+            return _top_k(scored_df.select("doc_id", "score"), k)
+        return self._reduce_per_query(scored_df, len(plans), k)
 
     def fetch(self, topk: DataFrame,
               sort_cols: list[tuple[str, bool]] | None = None) -> DataFrame:
@@ -2760,17 +2605,7 @@ class SearchIndex:
         source of match semantics for count / facet_counts /
         search_sorted (three prior copies had already diverged on
         tombstone handling — r2 review)."""
-        shards = sorted({py_shard(t, self.num_shards) for t in dfs})
-        postings = self._postings().filter(
-            F.col("shard").isin(shards) & F.col("tid").isin([term_id(t) for t in dfs])
-        )
-        ids = postings.select(
-            F.explode(
-                _decode_ids_udf()(
-                    F.col("blob"), F.col("block_first"), F.col("block_n"), F.col("block_off")
-                )
-            ).alias("doc_id")
-        ).distinct()
+        ids = self._docs_with_any_term(list(dfs)).distinct()
         tomb = self._tombstones()
         if tomb is not None:
             ids = ids.join(tomb.select("doc_id"), "doc_id", "left_anti")
@@ -2852,7 +2687,6 @@ class SearchIndex:
         k: int = 10,
         after: tuple | None = None,
         allowed_docs: DataFrame | None = None,
-        exclude_docs: DataFrame | None = None,
     ) -> DataFrame:
         """Filter-only (match-all) query: page the whole live corpus by a
         field sort, with no keyword clause — the reference's
@@ -2863,9 +2697,9 @@ class SearchIndex:
         doc ids are assigned in ingest order, so newest-first is the
         updateTime DESC analog.
 
-        ``doc_filter``: Column predicate over docstats. ``allowed_docs``
-        / ``exclude_docs``: optional doc_id frames semi-/anti-joined
-        (the parsed-query gates). ``after``: cursor = previous page's
+        ``doc_filter``: Column predicate over docstats. ``allowed_docs``:
+        optional doc_id frame semi-joined (a filter-only parsed query's
+        phrase/exclusion gates). ``after``: cursor = previous page's
         last (sort key values..., doc_id) — same paging contract as
         ``search_sorted``. Tombstones always masked.
 
@@ -2877,17 +2711,16 @@ class SearchIndex:
         Spark jobs (``_match_all_local``) — the reference UI's DEFAULT
         query (filter-only newest-first browse) was the last serving
         shape still paying the per-job scheduling floor after r5's
-        warm_local tier (r5 review). ``allowed_docs``/``exclude_docs``
-        carry arbitrary DataFrame lineage and keep the cluster path,
-        same rule as ``search`` — as does a sort column containing
+        warm_local tier (r5 review). ``allowed_docs`` carries arbitrary
+        DataFrame lineage and keeps the cluster path — as does a sort
+        column containing
         NULLs (pandas and Spark disagree on NULL placement). Tombstone
         masking on the local route follows warm_local's snapshot
         semantics like every other local surface: deletes landing after
         ``warm_local()`` become visible at ``refresh()``; the cluster
         path re-reads the pinned generation per query."""
         sort_cols = sort_cols if sort_cols is not None else [("doc_id", False)]
-        if (self._local is not None and allowed_docs is None
-                and exclude_docs is None):
+        if self._local is not None and allowed_docs is None:
             local = self._match_all_local(doc_filter, sort_cols, k, after)
             if local is not None:
                 return local
@@ -2896,8 +2729,6 @@ class SearchIndex:
             stats = stats.filter(doc_filter)
         if allowed_docs is not None:
             stats = stats.join(allowed_docs.select("doc_id"), "doc_id", "left_semi")
-        if exclude_docs is not None:
-            stats = stats.join(exclude_docs.select("doc_id"), "doc_id", "left_anti")
         tomb = self._tombstones()
         if tomb is not None:
             stats = stats.join(tomb.select("doc_id"), "doc_id", "left_anti")

@@ -85,16 +85,6 @@ def test_local_budget_refusal(spark, pair, tmp_path_factory):
         SearchIndex(spark, hot.index_dir).warm_local(max_bytes=1)
 
 
-def test_local_allowed_docs_falls_back_to_cluster(pair):
-    """allowed_docs carries arbitrary DataFrame lineage — the local path
-    must route it to the (identical) cluster path, not drop the gate."""
-    cold, hot = pair
-    gate = cold.docstats().filter(F.col("lang") == "python").select("doc_id")
-    want = _rows(cold.search("merge", k=10, allowed_docs=gate))
-    got = _rows(hot.search("merge", k=10, allowed_docs=gate))
-    assert got == want and len(got) > 0
-
-
 def test_local_masks_tombstones(spark, corpus, tmp_path_factory):
     """Deletes present at warm_local time are masked by the local
     scorer's inverted dead-set mask, identical to the cluster path."""

@@ -191,7 +191,7 @@ def test_phrase_broad_filter_inverted_mask_with_tombstones(spark, tmp_path_facto
     vic = idx.docstats().filter(F.col("doc_id") == before[0].doc_id).select("repo", "path")
     assert delete_docs(spark, d, vic) == 1
     idx2 = SearchIndex(spark, d)
-    side, inverted = idx2._mask_plan(flt, None, idx2._tombstones())
+    side, inverted = idx2._mask_plan(flt, idx2._tombstones())
     assert inverted is True
     assert side.count() == 2 + 1  # 2 java + the dead python doc
     got = [(r.doc_id, round(r.score, 9))

@@ -485,3 +485,65 @@ def test_search_many_parsed_single_fallback_contract_order(spark, parsed_idx):
     assert alone == mixed
     # and the contract order itself: constant score -> doc_id ascending
     assert alone == sorted(alone, key=lambda t: (-t[1], t[0]))
+
+
+@pytest.fixture(scope="module")
+def parsed_hot(parsed_idx):
+    """A warm_local twin of ``parsed_idx`` (same files)."""
+    from dbsyncer_spark.index.search import SearchIndex
+
+    hot = SearchIndex(parsed_idx.spark, parsed_idx.index_dir)
+    hot.warm_local()
+    return hot
+
+
+@pytest.mark.parametrize("q", [
+    '"merge scan"',
+    'lang:go -"merge scan"',
+    "lang:python -shar*",
+    "lang:go -(sync OR shard)",
+])
+def test_filter_only_gates_match_reference(parsed_idx, parsed_hot, q):
+    """Filter-only parsed queries keep their phrase and exclusion gates
+    (they route to match_all): on both tiers the rows equal a reference
+    built from docstats and the phrase / any-term match sets — constant
+    score 1.0, doc_id DESC, k rows."""
+    stats = parsed_idx.docstats().select("doc_id", "lang").toPandas()
+    n = parsed_idx.n_docs
+
+    def lang(v):
+        return set(stats.loc[stats["lang"] == v, "doc_id"].tolist())
+
+    def any_term(terms):
+        return {r.doc_id for r in parsed_idx.search_sorted(
+            " ".join(terms), [("doc_id", True)], k=n).collect()}
+
+    phrase = {r.doc_id for r in parsed_idx._phrase_match_ids("merge scan").collect()}
+    ref = {
+        '"merge scan"': set(stats["doc_id"].tolist()) & phrase,
+        'lang:go -"merge scan"': lang("go") - phrase,
+        "lang:python -shar*": lang("python")
+        - any_term(parsed_idx.expand_prefix("shar")),
+        "lang:go -(sync OR shard)": lang("go") - any_term(["sync", "shard"]),
+    }[q]
+    k = 12
+    want = [(d, 1.0) for d in sorted(ref, reverse=True)[:k]]
+    # non-empty, and more matches than k so the page cut is exercised
+    assert len(ref) > k, f"{q} matched {len(ref)} docs: weak test query"
+    for idx in (parsed_idx, parsed_hot):
+        got = [(r.doc_id, r.score) for r in idx.search_parsed(q, k=k).collect()]
+        assert got == want, q
+
+
+def test_parsed_cluster_plan_has_no_semi_join_chain(parsed_idx):
+    """A scored parsed query on the cluster is a batch of one through
+    the gated kernel: one pandas cogroup (postings x live docstats side)
+    and the single-query TakeOrdered top-k — its MUST / MUST_NOT terms
+    and field clause are range-local masks, never semi-/anti-joins."""
+    assert parsed_idx._tombstones() is None
+    df = parsed_idx.search_parsed("merge +scan -sync lang:python", k=10)
+    p = df._jdf.queryExecution().executedPlan().toString()
+    assert p.count("FlatMapCoGroupsInPandas") == 1, p
+    assert "TakeOrderedAndProject" in p
+    assert "LeftSemi" not in p and "LeftAnti" not in p, p
+    assert df.collect(), "weak test query: no rows"

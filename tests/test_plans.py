@@ -238,13 +238,13 @@ def test_broad_filter_cogroups_complement_not_match_set(spark, pindex):
     )
     match_n = stats.filter(flt).count()
     assert match_n > total / 2, "fixture must give a majority-matching filter"
-    side, inverted = pindex._mask_plan(flt, None, pindex._tombstones())
+    side, inverted = pindex._mask_plan(flt, pindex._tombstones())
     assert inverted is True, "broad filter must ship the complement, inverted"
     assert side.count() == total - match_n
     # a selective (minority) filter stays allowed-side
     minority = min(counts, key=counts.get)
     side2, inv2 = pindex._mask_plan(
-        F.col("lang") == F.lit(minority), None, pindex._tombstones()
+        F.col("lang") == F.lit(minority), pindex._tombstones()
     )
     assert inv2 is False
     assert side2.count() == counts[minority]
