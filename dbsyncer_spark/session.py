@@ -11,6 +11,37 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Cap on the default driver heap: the whole 48 GB machine the reference's
+# numbers come from (BASELINE.md).
+_DRIVER_MEM_CAP_MB = 48 * 1024
+# Container memory limits, read as the JVM's UseContainerSupport reads them
+# (cgroup v2, then v1); "max" or a missing file means no limit.
+_CGROUP_MEMORY_LIMITS = (
+    "/sys/fs/cgroup/memory.max",
+    "/sys/fs/cgroup/memory/memory.limit_in_bytes",
+)
+
+
+def default_driver_memory() -> str:
+    """Default ``spark.driver.memory``: the JVM's own ergonomic max heap
+    (``MaxRAMPercentage`` = 25% of the memory available to the process),
+    capped at 48g, as a ``"<n>m"`` string.
+
+    Available memory is the host's physical pages, or a smaller cgroup
+    memory limit. A fixed 48g heap on a smaller host is never honoured:
+    under ParallelGC the heap grows without collecting until the kernel
+    OOM-kills the driver JVM."""
+    avail = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    for path in _CGROUP_MEMORY_LIMITS:
+        try:
+            with open(path) as f:
+                limit = f.read().strip()
+        except OSError:
+            continue
+        if limit.isdigit():
+            avail = min(avail, int(limit))
+    return f"{min(avail // 4 >> 20, _DRIVER_MEM_CAP_MB)}m"
+
 
 def get_spark(
     app_name: str = "dbsyncer_spark",
@@ -24,11 +55,17 @@ def get_spark(
     ``spark.sql.shuffle.partitions`` is sized to the core count — at
     cluster scale this would be ~2-3x total cores (or left to AQE
     coalescing, which we enable).
+    ``spark.driver.memory`` is $SPARK_DRIVER_MEM when set, passed through
+    unchanged, else ``default_driver_memory()``: the JVM's 25% ergonomic
+    max heap of the host (or its cgroup limit), capped at 48g.
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if shuffle_partitions is None:
         shuffle_partitions = max(cpus, 8)
+    driver_mem = os.environ.get("SPARK_DRIVER_MEM")
+    if driver_mem is None:
+        driver_mem = default_driver_memory()
 
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
@@ -48,7 +85,7 @@ def get_spark(
         # maxRecordsPerBatch still bounds batch memory (rows here are
         # fixed-width, so 10k rows << 64m anyway).
         .config("spark.sql.execution.arrow.maxBytesPerBatch", str(2**31 - 1))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Throughput GC. JDK17's default G1 collapses under this workload
