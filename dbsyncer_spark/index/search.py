@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from dbsyncer_spark.functions.tokenizer import tokenize_py
+from dbsyncer_spark.index import local_filter
 from dbsyncer_spark.index.build import _limit_arrow_threads, py_shard, term_id
 from dbsyncer_spark.index.codec import unpack_blocks
 from dbsyncer_spark.session import empty_df
@@ -119,6 +120,20 @@ def _range_mask(ids, base: int, range_size: int, inverted: bool):
     if ids is not None and len(ids):
         m[ids - base] = True
     return m
+
+
+def _ids_by_range(ids: np.ndarray, range_size: int, dead_of: dict) -> dict:
+    """``{range_id: sorted doc_id array}`` of ``ids`` minus the dead set
+    (``dead_of``: range_id -> dead doc_id array)."""
+    ids = np.sort(ids)
+    if dead_of:
+        ids = ids[np.isin(ids, np.concatenate(list(dead_of.values())),
+                          invert=True)]
+    if not len(ids):
+        return {}
+    rids = ids // range_size
+    cuts = np.flatnonzero(np.diff(rids)) + 1
+    return dict(zip(rids[np.r_[0, cuts]].tolist(), np.split(ids, cuts)))
 
 
 def _side_mask(side_pdf, base: int, range_size: int, inverted: bool):
@@ -903,10 +918,14 @@ class SearchIndex:
         serves; the fast path is for the reference's single-node serving
         shape (DiskStorageService keeps its whole index on one node).
 
-        Filtered queries stay zero-job: ``doc_filter`` Columns are
-        evaluated against a LocalRelation copy of docstats (Catalyst's
-        ConvertToLocalRelation folds Filter+Project driver-side), with
-        the allowed id set cached per predicate string.
+        Filtered queries stay zero-job: a ``doc_filter`` Column's
+        allowed id set is computed once per predicate string and cached
+        (``_local_allowed_of``). Equality, IN, NULL tests, integer
+        comparisons and their Boolean combinations are lowered to numpy
+        over the docstats frame (``local_filter``: ~1-2 ms first use at
+        6,000 docs, no py4j beyond the cache key); any other Column is
+        evaluated by Spark against a LocalRelation copy of docstats,
+        built on its first need (~20 ms first use).
 
         ``decode_cache_bytes`` bounds the decoded-postings LRU
         (``_DecodedPostingsCache``) the local kernels consult before
@@ -944,19 +963,17 @@ class SearchIndex:
                 .toPandas().itertuples(index=False):
             rows_by_range.setdefault(int(r.range_id), {}) \
                 .setdefault(int(r.tid), []).append(r)
-        stats_pdf = self.docstats().toPandas()
+        stats = self.docstats()
         self._local = {
             "rows": rows_by_range,
-            "docstats_pdf": stats_pdf,
-            # LocalRelation twin of docstats: Column predicates fold
-            # driver-side (no job) when filtering it. The ORIGINAL schema
-            # is passed explicitly — schema inference would crash on an
-            # all-NULL metadata column and drift nullable-int dtypes to
-            # double, where a doc_filter could evaluate differently than
-            # on the cluster path (r5 review)
-            "docstats_df": self.spark.createDataFrame(
-                stats_pdf, self.docstats().schema
-            ),
+            "docstats_pdf": stats.toPandas(),
+            # the ORIGINAL schema: doc_filter lowering types its columns
+            # from it, and the lazy LocalRelation twin (the fallback's
+            # input) is built with it — schema inference would crash on
+            # an all-NULL metadata column and drift nullable-int dtypes
+            # to double, where a doc_filter could evaluate differently
+            # than on the cluster path (r5 review)
+            "docstats_schema": stats.schema,
             "filters": {},  # predicate str -> {range_id: allowed doc_id ndarray}
             # field-column tuple -> {range_id: {column: live-doc values}}
             # (the gated kernel's side data)
@@ -1112,26 +1129,37 @@ class SearchIndex:
                                               range_size, False)
 
     def _local_allowed_of(self, doc_filter) -> dict | None:
-        """range_id -> live doc_ids matching ``doc_filter``, evaluated
-        against the warm_local docstats LocalRelation (no Spark job) and
-        cached per predicate string; None without a filter."""
+        """range_id -> sorted live doc_ids matching ``doc_filter``, cached
+        per predicate string; None without a filter.
+
+        A miss lowers the predicate to numpy over ``docstats_pdf``
+        (``local_filter.lower`` parses ``str(doc_filter)``, the cache key
+        itself): no py4j call, no Spark job. A predicate outside that
+        grammar is evaluated by Spark against a LocalRelation copy of
+        docstats (Catalyst's ConvertToLocalRelation folds the
+        Filter+Project driver-side — no job, but ~20 py4j round trips
+        and Row unpickling), the semantic authority for arbitrary
+        Columns. Both branches end in ``_ids_by_range``."""
         if doc_filter is None:
             return None
         loc = self._local
         key = str(doc_filter)
         allowed_of = loc["filters"].get(key)
         if allowed_of is None:
-            # ConvertToLocalRelation folds this Filter+Project into
-            # the LocalRelation — executeCollect, no Spark job
-            rows = loc["docstats_df"].filter(doc_filter) \
-                .select("range_id", "doc_id").collect()
-            dead = loc["dead_ids"]
-            allowed_of = {}
-            for r in rows:
-                if r.doc_id not in dead:
-                    allowed_of.setdefault(int(r.range_id), []).append(r.doc_id)
-            allowed_of = {rid: np.asarray(ids, dtype=np.int64)
-                          for rid, ids in allowed_of.items()}
+            pdf = loc["docstats_pdf"]
+            keep = local_filter.lower(key, pdf, loc["docstats_schema"],
+                                      loc.setdefault("filter_cols", {}))
+            if keep is not None:
+                ids = pdf["doc_id"].to_numpy()[keep]
+            else:
+                df = loc.get("docstats_df")
+                if df is None:
+                    df = loc["docstats_df"] = self.spark.createDataFrame(
+                        pdf, loc["docstats_schema"])
+                rows = df.filter(doc_filter).select("doc_id").collect()
+                ids = np.fromiter((r.doc_id for r in rows), np.int64,
+                                  len(rows))
+            allowed_of = _ids_by_range(ids, self.range_size, loc["dead"])
             if len(loc["filters"]) > 256:
                 loc["filters"].clear()
             loc["filters"][key] = allowed_of
@@ -2747,7 +2775,9 @@ class SearchIndex:
         interpreted predicate evaluation + full-frame collect (measured
         — worse than the cluster path it replaces). Instead,
         ``doc_filter`` goes through the cached ``_local_allowed_of``
-        sets (so repeated UI pages of one filter evaluate it once), the
+        sets (so repeated UI pages of one filter evaluate it once; a
+        first use is lowered to numpy, and only forms outside that
+        grammar pay the LocalRelation evaluation), the
         cursor mask is the vectorized numpy mirror of
         ``_strictly_after``'s lexicographic expansion, and the
         (sort_cols..., doc_id asc) order is an argsort cached per

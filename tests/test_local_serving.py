@@ -474,6 +474,136 @@ def test_match_all_local_null_sort_falls_back(spark, tmp_path_factory):
         hot.match_all(k=5).collect()
 
 
+# (predicate, lowered to numpy?) over the NULL-metadata index below
+_LOWERING_CASES = [
+    (lambda: F.col("lang") == "go", True),
+    (lambda: F.col("lang") == F.lit(None), True),  # = NULL: nothing
+    (lambda: ~(F.col("lang") == F.lit(None)), True),  # !(NULL) is NULL
+    (lambda: ~(F.col("lang") == "go"), True),  # NULL langs stay out
+    (lambda: (F.col("lang") == "go") | (F.col("lang") == F.lit(None)), True),
+    (lambda: (F.col("lang") == "go") | F.col("lang").isNull(), True),
+    (lambda: ~(F.lit(None) & (F.col("lang") == "go")), True),
+    (lambda: (F.col("lang") != "go") & (F.col("dl") > 3), True),
+    (lambda: F.col("lang").eqNullSafe("go"), True),
+    (lambda: F.col("lang").eqNullSafe(None), True),
+    (lambda: ~F.col("lang").eqNullSafe(None), True),
+    (lambda: F.col("lang").eqNullSafe(F.col("repo")), True),
+    (lambda: F.col("lang").isin("go", "python"), True),
+    (lambda: F.col("lang").isin("go", None), True),
+    (lambda: ~F.col("lang").isin("go", None), True),
+    (lambda: F.col("repo").isin("r0", "r2"), True),
+    (lambda: F.col("lang").isNull(), True),
+    (lambda: F.col("lang").isNotNull(), True),
+    (lambda: F.col("dl") > 5, True),
+    (lambda: F.col("dl") <= 3, True),
+    (lambda: F.col("dl").between(3, 6), True),
+    (lambda: F.lit(4) < F.col("dl"), True),
+    (lambda: F.col("dl").isin(2, 4), True),
+    (lambda: F.col("doc_id") >= 2 ** 33, True),  # long literal: nothing
+    (lambda: F.lit(True), True),
+    (lambda: F.lit(False) | (F.col("repo") == "r1"), True),
+    # Spark-evaluated forms
+    (lambda: F.expr("lang = 'go'"), False),
+    (lambda: F.col("lang").startswith("g"), False),
+    (lambda: F.col("dl") == 2.5, False),  # float literal
+    (lambda: F.col("lang") == 3, False),  # string vs int: Spark raises
+    (lambda: F.col("lang") == "it's", False),  # backslash-escaped literal
+    (lambda: F.col("lang") < "h", False),  # string ordering
+    (lambda: F.col("LANG") == "go", False),  # Spark resolves names
+]                                             # case-insensitively
+
+
+def test_doc_filter_lowering_matches_spark(spark, tmp_path_factory):
+    """A warm_local filter's allowed ids — lowered to numpy, or evaluated
+    by Spark for forms outside the lowered grammar — equal Spark's own
+    filter over the persisted docstats minus the tombstoned doc, as exact
+    per-range id sets, on metadata with NULLs. The lowering must take
+    the predicates it covers (Kleene logic, ``<=>``, IN with NULL,
+    integer comparisons) and leave the rest to Spark."""
+    from dbsyncer_spark.index import local_filter
+    from dbsyncer_spark.streaming.incremental import delete_docs
+
+    langs = [None, "go", "python"]
+    rows = [
+        (f"r{i % 3}", f"p{i}.py", f"c{i}", langs[i % 4 % 3],
+         " ".join(["merge", "scan"] + [f"tok{j}" for j in range(i % 7)]))
+        for i in range(80)
+    ]
+    df = spark.createDataFrame(
+        rows, "repo string, path string, commit string, lang string, "
+              "content string")
+    d = str(tmp_path_factory.mktemp("lowering"))
+    build_index(spark, df, d, num_shards=2, range_size=16, num_id_buckets=4)
+    victim = SearchIndex(spark, d).docstats().filter(
+        (F.col("lang") == "go") & (F.col("dl") > 5)).orderBy("doc_id").first()
+    delete_docs(spark, d, spark.createDataFrame(
+        [(victim.repo, victim.path)], "repo string, path string"))
+    cold = SearchIndex(spark, d)
+    hot = SearchIndex(spark, d)
+    hot.warm_local()
+    loc = hot._local
+    assert loc["dead_ids"] == {victim.doc_id}
+
+    covered = set()
+    for make, lowered in _LOWERING_CASES:
+        pred = make()
+        key = str(pred)
+        assert (local_filter.lower(key, loc["docstats_pdf"],
+                                   loc["docstats_schema"], {})
+                is not None) == lowered, key
+        try:
+            spark_rows = cold.docstats().filter(pred).select("doc_id").collect()
+        except Exception as e:  # ANSI: 'go' does not cast to a number
+            with pytest.raises(type(e)):  # the same error, never a
+                hot._local_allowed_of(pred)  # silently empty id set
+            continue
+        want: dict = {}
+        for r in spark_rows:
+            if r.doc_id != victim.doc_id:
+                want.setdefault(r.doc_id // 16, []).append(r.doc_id)
+        got = hot._local_allowed_of(pred)
+        assert {rid: ids.tolist() for rid, ids in got.items()} == \
+            {rid: sorted(ids) for rid, ids in want.items()}, key
+        covered |= {rid for rid in want}
+        if lowered:  # the Spark twin of docstats is built on first need
+            assert "docstats_df" not in loc, key
+    assert len(covered) > 1, "one range only: the range split is untested"
+    assert "docstats_df" in loc
+    # the tombstoned doc matched a filter and was dropped from it
+    assert cold.docstats().filter(F.col("doc_id") == victim.doc_id).count()
+    pred = F.col("lang") == "go"
+    assert hot.search_rows("merge scan", k=50, doc_filter=pred) == \
+        cold.search_rows("merge scan", k=50, doc_filter=pred)
+
+
+def test_first_filter_use_sends_one_py4j_command(spark, pair, monkeypatch):
+    """The first use of a plain equality filter on warm_local costs one
+    py4j command (the ``str()`` that keys the cache) and no Spark job:
+    the predicate is lowered to numpy from its rendering. A Spark
+    version that renders Columns differently fails here instead of
+    silently falling back to the ~20 ms Spark evaluation."""
+    from py4j.clientserver import ClientServerConnection
+
+    cold, hot = pair
+    h = SearchIndex(spark, hot.index_dir)
+    h.warm_local()
+    pred = F.col("lang") == "python"
+    sent = []
+    send = ClientServerConnection.send_command
+
+    def counting(self, command):
+        sent.append(command)
+        return send(self, command)
+
+    with zero_spark_jobs(spark, "first_filter_gate"):
+        monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+        got = h.search_rows("merge scan", k=10, doc_filter=pred)
+        monkeypatch.undo()
+    assert len(sent) <= 1, sent
+    assert got and got == cold.search_rows("merge scan", k=10,
+                                           doc_filter=pred)
+
+
 def test_misaligned_direct_append_warm_local_identity(spark, corpus, tmp_path_factory):
     """A direct build_index append at a NON-range-aligned offset passes
     the publish overlap guard and legally shares a docId-range with its
