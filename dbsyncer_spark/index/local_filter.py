@@ -55,12 +55,6 @@ class _Unlowerable(Exception):
     """The predicate is outside the lowered grammar."""
 
 
-def _b(x):
-    """A comparison result as a numpy bool (array or scalar): ``~`` on a
-    Python bool is integer negation."""
-    return x if isinstance(x, np.ndarray) else np.bool_(x)
-
-
 def _column(name: str, pdf: pd.DataFrame, schema: T.StructType,
             cache: dict):
     """``(kind, values, null)`` of a docstats column, cached per name;
@@ -165,11 +159,11 @@ class _Lowering:
         if op == "<=>":
             if ka == "null" or kb == "null":
                 return (nb if ka == "null" else na), _FALSE
-            eq = _b(va == vb)
+            eq = np.asarray(va == vb)  # ~ on a Python bool is -1 or -2
             return (eq & ~na & ~nb) | (na & nb), _FALSE
         if "null" in (ka, kb):
             return _FALSE, np.bool_(True)
-        hit = _b(va == vb) if op == "=" else _b(_ORDER[op](va, vb))
+        hit = np.asarray(va == vb if op == "=" else _ORDER[op](va, vb))
         null = na | nb
         return hit & ~null, null
 

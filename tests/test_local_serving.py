@@ -544,7 +544,7 @@ def test_doc_filter_lowering_matches_spark(spark, tmp_path_factory):
     loc = hot._local
     assert loc["dead_ids"] == {victim.doc_id}
 
-    covered = set()
+    covered, victim_matched, raised = set(), False, 0
     for make, lowered in _LOWERING_CASES:
         pred = make()
         key = str(pred)
@@ -556,21 +556,24 @@ def test_doc_filter_lowering_matches_spark(spark, tmp_path_factory):
         except Exception as e:  # ANSI: 'go' does not cast to a number
             with pytest.raises(type(e)):  # the same error, never a
                 hot._local_allowed_of(pred)  # silently empty id set
+            raised += 1
             continue
         want: dict = {}
         for r in spark_rows:
             if r.doc_id != victim.doc_id:
                 want.setdefault(r.doc_id // 16, []).append(r.doc_id)
+            else:
+                victim_matched = True
         got = hot._local_allowed_of(pred)
         assert {rid: ids.tolist() for rid, ids in got.items()} == \
             {rid: sorted(ids) for rid, ids in want.items()}, key
-        covered |= {rid for rid in want}
+        covered |= set(want)
         if lowered:  # the Spark twin of docstats is built on first need
             assert "docstats_df" not in loc, key
     assert len(covered) > 1, "one range only: the range split is untested"
+    assert victim_matched, "no predicate matched the tombstoned doc"
+    assert raised == 1  # only the string-vs-int comparison
     assert "docstats_df" in loc
-    # the tombstoned doc matched a filter and was dropped from it
-    assert cold.docstats().filter(F.col("doc_id") == victim.doc_id).count()
     pred = F.col("lang") == "go"
     assert hot.search_rows("merge scan", k=50, doc_filter=pred) == \
         cold.search_rows("merge scan", k=50, doc_filter=pred)
