@@ -9,9 +9,11 @@ the same semantics as append/delete batches against the segmented index:
   the reference's 3 s commit cycle, ``DiskStorageService.java:62-95``).
 - ``delete_docs``: tombstones by key; the scorer masks tombstoned docs
   (reference delete-by-Term, ``Shard.java:122-145``).
-- ``compact_segments``: decode + re-pack all live postings into a fresh
-  single segment, dropping tombstoned docs — the TieredMergePolicy analog
-  (``Shard.java:361-368``), run out-of-band like Lucene's merge threads.
+- ``maybe_merge``: the TieredMergePolicy analog (``Shard.java:361-368``)
+  — decode + re-pack a selected run of segments into one, dropping
+  tombstoned docs; ``compact_segments`` (forceMerge) is the same merge
+  transaction over every segment. Both run out-of-band like Lucene's
+  merge threads.
 - ``stream_to_index``: Structured Streaming ``foreachBatch`` wrapper — a
   micro-batch of new docs runs the same deterministic build pipeline
   (exactly-once by segment-name idempotence: batchId names the segment).
@@ -22,14 +24,17 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dbsyncer_spark.index.build import (
     append_segment,
+    atomic_write_meta,
     build_index,
     claim_heartbeat as _claim_heartbeat,
+    meta_lock,
     read_meta_for_update as _read_meta_for_update,
     reserve_segment_name as _reserve_segment_name,
     unreserve_segment_name as _unreserve_segment_name,
@@ -79,10 +84,8 @@ def _pin_tomb_generation(index_dir: str, segment: str, meta: dict | None) -> Non
     review). ``claim_heartbeat`` re-stamps the pin alongside the name
     claim (``touch_reservations``); the TTL is the crash story — a dead
     pack stops beating and its pin expires like any claim."""
-    import time as _time
-
     gen = os.path.basename(_active_tomb_dir(index_dir, meta))
-    now = _time.time()
+    now = time.time()
 
     def mut(fresh):
         return {**fresh, "tomb_pins": {
@@ -111,7 +114,15 @@ def delete_docs(spark: SparkSession, index_dir: str, keys: DataFrame) -> int:
     """
     if not keys.columns:
         raise ValueError("delete requires at least one key column")
-    idx = SearchIndex(spark, index_dir)
+    return _append_tombstones(index_dir, _doomed_docs(SearchIndex(spark, index_dir), keys))
+
+
+def _doomed_docs(idx: SearchIndex, keys: DataFrame) -> DataFrame:
+    """The doomed-docs plan of ``delete_docs`` and ``update_docs``:
+    doc_ids of ``idx``'s docstats rows matching ``keys`` on all of its
+    columns, minus the ids already tombstoned. Lazy, over the segment and
+    tombstone files ``idx`` listed at open — evaluating it later never
+    sees a segment appended since."""
     doomed = idx.docstats().join(keys, on=list(keys.columns), how="left_semi").select("doc_id")
     tomb = idx._tombstones()
     if tomb is not None:
@@ -119,7 +130,7 @@ def delete_docs(spark: SparkSession, index_dir: str, keys: DataFrame) -> int:
         # never appends duplicate rows (repeated CDC delete events would
         # otherwise grow the tombstone set unboundedly)
         doomed = doomed.join(tomb.select("doc_id"), "doc_id", "left_anti")
-    return _append_tombstones(index_dir, doomed)
+    return doomed
 
 
 def _append_tombstones(index_dir: str, doomed: DataFrame) -> int:
@@ -130,19 +141,20 @@ def _append_tombstones(index_dir: str, doomed: DataFrame) -> int:
     HWM, merge publishes) behind each CDC delete (r3 review). The lock
     is taken only for the final step: re-resolve the ACTIVE tombstone
     generation and rename the staged part files in (unique Spark part
-    names — concurrent appenders compose). Correctness against the
-    covered-GC flip: the GC's list+rewrite+flip runs entirely under this
-    same lock, so a staged file can never land in a generation after the
-    GC listed it (where the flip would silently drop it); and the plan's
-    own anti-join listing (pinned at planning, possibly the PREVIOUS
-    generation) stays readable because retired generations survive the
-    grace window. A flip between planning and the move can't introduce
-    duplicates either: the new generation's rows are a subset of the old
-    one's (the rewrite only drops covered ids, whose docs left docstats
-    and so can never be re-doomed)."""
+    names — concurrent appenders compose). Correctness against a
+    generation flip (``_flip_tomb_generation``): the rewrite reads a
+    pinned file listing outside the lock, but the flip re-lists the
+    generation under this same lock and commits only if the listing is
+    unchanged — a file moved in after the listing was pinned makes the
+    rewriter discard its result and recompute, so the flip can never
+    silently drop it; and the plan's own anti-join listing (pinned at
+    planning, possibly the PREVIOUS generation) stays readable because
+    retired generations survive the grace window. A flip between
+    planning and the move can't introduce duplicates either: the new
+    generation's rows are a subset of the old one's (the rewrite only
+    drops covered ids, whose docs left docstats and so can never be
+    re-doomed)."""
     import uuid
-
-    from dbsyncer_spark.index.build import meta_lock
 
     doomed = doomed.persist()
     try:
@@ -211,13 +223,9 @@ def update_docs(
             "exactly one row per key — pre-reduce the batch (e.g. keep the "
             "latest version per key) before calling")
     keys = new_docs.select(*key_cols).distinct()
-    idx = SearchIndex(spark, index_dir)
     # lazy plan over pre-append segment files only, so evaluating it
     # after the append cannot see (or self-tombstone) the new segment
-    doomed = idx.docstats().join(keys, on=list(key_cols), how="left_semi").select("doc_id")
-    tomb = idx._tombstones()
-    if tomb is not None:
-        doomed = doomed.join(tomb.select("doc_id"), "doc_id", "left_anti")
+    doomed = _doomed_docs(SearchIndex(spark, index_dir), keys)
     meta = append_segment(spark, new_docs, index_dir, **build_kwargs)
     n_del = _append_tombstones(index_dir, doomed)
     return {**meta, "deleted": n_del}
@@ -278,146 +286,218 @@ def _pack_segment(
     return seg_meta
 
 
+class _InputsTaken(RuntimeError):
+    """A concurrent maintenance run took (some of) a merge's input
+    segments before the merge could publish."""
+
+
+def _merge_run(
+    spark: SparkSession,
+    index_dir: str,
+    meta: dict,
+    names: list[str],
+    tomb: DataFrame | None,
+    tomb_meta: dict,
+    retire_grace_s: float,
+) -> dict | None:
+    """The one merge transaction behind ``maybe_merge`` and
+    ``compact_segments``: rewrite the live docs of segments ``names``
+    (a run consecutive in doc-id order, described by the root-meta
+    snapshot ``meta``) as one fresh segment and publish it in one
+    root-meta swap. ``tomb`` is the tombstone DataFrame the anti-join
+    masks with (None: no tombstones), read from the generation named by
+    the snapshot ``tomb_meta``.
+
+    Returns the new segment's meta; ``{"segment": None, "n_docs": 0}``
+    when every doc of the run was tombstoned and the run was dropped
+    instead; None when every doc of the whole index is tombstoned
+    (nothing changes and the tombstones keep masking). Raises
+    ``_InputsTaken`` when a concurrent run took an input first. Any
+    failure undoes what this call reserved, pinned or wrote.
+
+    Readers are never disturbed: the output is written under
+    ``segments/`` (invisible until referenced), the swap re-reads fresh
+    meta under the meta lock (segments appended and HWMs recorded since
+    the snapshot survive it), and the inputs stay on disk for
+    ``retire_grace_s`` seconds for warm readers pinned to the pre-merge
+    meta (purged on a later maintenance call)."""
+    params = meta["params"]
+    segments = meta["segments"]
+    seg_root = os.path.join(index_dir, "segments")
+    sel_dirs = [os.path.join(seg_root, n) for n in names]
+
+    def union_read(sub: str) -> DataFrame:
+        dfs = [spark.read.parquet(os.path.join(d, sub)) for d in sel_dirs]
+        out = dfs[0]
+        for d in dfs[1:]:
+            out = out.unionByName(d)
+        return out
+
+    # rather than re-tokenizing, decode every live posting back to
+    # (tid, doc_id, tf, dl[, pos]) rows and re-pack — a pure shuffle job,
+    # no Python-per-row, no re-analysis
+    decoded = decode_postings(union_read("postings"),
+                              with_positions=bool(params.get("store_positions")))
+    stats = union_read("docstats")
+    if tomb is not None:
+        # no distinct: a left-anti join ignores duplicate right-side
+        # keys, and a distinct would add a shuffle stage to both plans
+        tomb_ids = tomb.select("doc_id")
+        decoded = decoded.join(tomb_ids, "doc_id", "left_anti")
+        # persist: the fully-deleted probe (isEmpty) below and the
+        # pack's docstats write would otherwise each run the full
+        # docstats union + tombstone anti-join (one extra Spark job
+        # per merge; same pattern as _append_tombstones/_compute —
+        # r5 review)
+        stats = stats.join(tomb_ids, "doc_id", "left_anti").persist()
+    try:
+        drop = tomb is not None and stats.isEmpty()
+        if drop:
+            # every doc in the run is tombstoned: nothing to write. Drop the
+            # segments outright, folding their doc-id high-water mark into the
+            # largest remaining segment so append_segment never reuses ids
+            # (safe: the covered tombstones are GC'd below, and deletes can
+            # only target ids present in docstats, never the dropped range).
+            if all(n in names for n in segments):
+                return None  # fully-deleted index: leave tombstone masking in place
+            hwm = max(s["max_doc_id"] for s in segments.values())
+            tag, seg_meta = f"drop_{names[0]}_{int(time.time())}", None
+
+            def splice(rest: dict):
+                survivors = {n: dict(s) for n, s in rest.items()}
+                if not survivors:
+                    return None
+                top = max(survivors, key=lambda n: survivors[n]["max_doc_id"])
+                survivors[top]["max_doc_id"] = max(survivors[top]["max_doc_id"], hwm)
+                return survivors, top
+        else:
+            # name allocated + reserved under the meta lock: a concurrent
+            # auto-named append can never claim the same seg_NNNNNN (r3 review)
+            tag = _reserve_segment_name(index_dir)
+            if tomb is not None:
+                # keep our pinned generation's files alive however long the
+                # pack runs (heartbeat-refreshed; see _pin_tomb_generation)
+                _pin_tomb_generation(index_dir, tag, tomb_meta)
+
+            def splice(rest: dict):
+                return {**rest, tag: {k: seg_meta[k] for k in (
+                    "n_docs", "sum_dl", "doc_id_offset", "max_doc_id")}}, tag
+
+        def _abort():
+            # failed/lost publication: drop the unreferenced output dir and
+            # staged covered set, release the pin and the name (r3 review:
+            # an exception after the reservation leaked all of them until
+            # the TTL). A dropped run owns only its staged set; the other
+            # steps find nothing to undo.
+            shutil.rmtree(os.path.join(seg_root, tag), ignore_errors=True)
+            shutil.rmtree(os.path.join(index_dir, "tombstones_covered", tag),
+                          ignore_errors=True)
+            _unpin_tomb_generation(index_dir, tag)
+            _unreserve_segment_name(index_dir, tag)
+
+        try:
+            if not drop:
+                # heartbeat keeps the output-name reservation alive for packs
+                # that outlive RESERVATION_TTL_S (r5 review — a competing
+                # writer's expiry prune could otherwise hand our seg_NNNNNN to
+                # an auto-named append mid-pack)
+                with _claim_heartbeat(index_dir, tag):
+                    seg_meta = _pack_segment(
+                        spark, decoded, stats, os.path.join(seg_root, tag), params,
+                        segment=tag,
+                        doc_id_offset=min(segments[n]["doc_id_offset"] for n in names),
+                        # inputs' doc-id high-water mark survives even if their
+                        # tail docs were all tombstoned — append_segment must
+                        # never reuse ids (and the floor goes into seg_meta.json
+                        # too, so rebuilding root meta from per-segment files can
+                        # never shrink the HWM)
+                        max_doc_id_floor=max(segments[n]["max_doc_id"] for n in names),
+                    )
+            # stage covered tombstones for deferred GC (their docs are
+            # physically absent from the output; the live rows stay until
+            # the retire grace expires so warm readers keep masking — pure
+            # hygiene after). Every tombstone id came from docstats, so it
+            # lies in some input's interval; ids of runs dropped earlier
+            # were staged under their own drop tag.
+            staged = tomb is not None and _stage_covered_tombstones(index_dir, [
+                (segments[n]["doc_id_offset"], segments[n]["max_doc_id"])
+                for n in names
+            ], tomb, tag)
+        except BaseException:
+            _abort()
+            raise
+        now = time.time()
+        into: dict = {}
+
+        def mut(fresh):
+            if any(n not in fresh["segments"] for n in names):
+                # a concurrent maintenance run already took (some of) our
+                # inputs: publishing would duplicate their docs/doc_ids in
+                # two live segments (r3 review) — abort, caller cleans up
+                return None
+            spliced = splice({n: s for n, s in fresh["segments"].items() if n not in names})
+            if spliced is None:
+                return None
+            into["segment"] = spliced[1]
+            covered_gc = dict(fresh.get("covered_gc", {}))
+            if staged:
+                covered_gc[tag] = now
+            # fold the swap into FRESH meta: segments appended (and HWMs
+            # recorded) since our snapshot survive the rewrite
+            return {
+                **fresh,
+                "params": params,
+                "segments": spliced[0],
+                "retired": {**fresh.get("retired", {}), **{n: now for n in names}},
+                "reserved": {n: t for n, t in fresh.get("reserved", {}).items() if n != tag},
+                "covered_gc": covered_gc,
+                # pin released atomically with the publish (see
+                # _pin_tomb_generation); the abort path unpins explicitly
+                "tomb_pins": {n: p for n, p in fresh.get("tomb_pins", {}).items()
+                              if n != tag},
+            }
+
+        try:
+            published = _write_meta_locked(index_dir, mut)
+        except BaseException:
+            _abort()
+            raise
+        if published is None:
+            _abort()
+            raise _InputsTaken(
+                "input segments changed during the merge (a concurrent "
+                "merge/compact took them) — re-run")
+        _preserve_quarantines(sel_dirs, names, os.path.join(seg_root, into["segment"]))
+        _purge_retired(spark, index_dir, retire_grace_s)
+        return seg_meta or {"segment": None, "n_docs": 0}
+    finally:
+        if tomb is not None:
+            stats.unpersist()
+
+
 def compact_segments(
     spark: SparkSession,
     index_dir: str,
     *,
-    retire_grace_s: float | None = None,
-) -> dict:
+    retire_grace_s: float = DEFAULT_RETIRE_GRACE_S,
+) -> dict | None:
     """Merge all segments into one, dropping tombstones (the forceMerge /
     optimize analog). Doc ids and content are preserved; stats recomputed.
+    Returns the compacted segment's meta, or None when every doc of the
+    index is tombstoned: then no segment changes and the tombstones keep
+    masking (``maybe_merge`` does the same), and later appends still get
+    ids above the old high-water mark.
 
-    Implementation: rather than re-tokenizing, decode every live posting
-    back to (term, doc_id, tf, dl) rows and re-pack — a pure shuffle
-    job, no Python-per-row, no re-analysis. For routine maintenance at
-    scale use ``maybe_merge`` (tiered policy) instead: full compaction
-    rewrites the entire index in one job.
-
-    Visibility follows ``maybe_merge``'s discipline (r3 review — the old
-    whole-directory swap left a window where meta referenced segment
-    dirs that no longer existed, failing every reader): the compacted
-    segment is written under ``segments/`` with a fresh name (invisible
-    until referenced), the root-meta swap under the meta lock retires
-    the inputs, and the input dirs stay on disk for ``retire_grace_s``
-    seconds for warm readers pinned to the pre-compaction meta.
+    This is ``maybe_merge``'s merge transaction (``_merge_run``) over
+    every live segment; for routine maintenance at scale use
+    ``maybe_merge`` (tiered policy) instead: full compaction rewrites the
+    entire index in one job. Raises ``RuntimeError`` when a concurrent
+    merge/compaction took an input segment first (re-run it).
     """
-    if retire_grace_s is None:
-        retire_grace_s = DEFAULT_RETIRE_GRACE_S
     _purge_retired(spark, index_dir, retire_grace_s)
     idx = SearchIndex(spark, index_dir)
-    params = idx.params
-    tomb = idx._tombstones()
-    inputs = dict(idx.meta["segments"])
-
-    decoded = decode_postings(idx._postings(), with_positions=bool(params.get("store_positions")))
-    stats = idx.docstats()
-    if tomb is not None:
-        tomb_ids = tomb.select("doc_id").distinct()
-        decoded = decoded.join(tomb_ids, "doc_id", "left_anti")
-        stats = stats.join(tomb_ids, "doc_id", "left_anti")
-
-    seg_root = os.path.join(index_dir, "segments")
-    # name allocated + reserved under the meta lock (see maybe_merge)
-    new_name = _reserve_segment_name(index_dir)
-    seg_dir = os.path.join(seg_root, new_name)
-    if tomb is not None:
-        # keep our pinned generation's files alive however long the
-        # pack runs (heartbeat-refreshed; see _pin_tomb_generation)
-        _pin_tomb_generation(index_dir, new_name, idx.meta)
-
-    def _abort():
-        # failed/lost publication: nothing references the output dir or
-        # the staged covered set, and the reservation must not squat the
-        # name for RESERVATION_TTL_S (r3 review: an exception after the
-        # reservation leaked both)
-        shutil.rmtree(seg_dir, ignore_errors=True)
-        shutil.rmtree(os.path.join(index_dir, "tombstones_covered", new_name),
-                      ignore_errors=True)
-        _unpin_tomb_generation(index_dir, new_name)
-        _unreserve_segment_name(index_dir, new_name)
-
-    try:
-        # heartbeat keeps the output-name reservation alive for packs
-        # that outlive RESERVATION_TTL_S (r5 review — a competing
-        # writer's expiry prune could otherwise hand our seg_NNNNNN to
-        # an auto-named append mid-pack)
-        with _claim_heartbeat(index_dir, new_name):
-            seg_meta = _pack_segment(
-                spark, decoded, stats, seg_dir, params, segment=new_name,
-                doc_id_offset=min(s["doc_id_offset"] for s in inputs.values()),
-                # HWM survives even when the highest-id docs were
-                # tombstoned: append_segment must never reuse a dropped
-                # doc id
-                max_doc_id_floor=max(s["max_doc_id"] for s in inputs.values()),
-            )
-    except BaseException:
-        _abort()
-        raise
-    import time as _time
-
-    now = _time.time()
-    # stage covered tombstones for deferred GC: only those visible when
-    # the anti-join above was planned — a delete landing DURING
-    # compaction targets a doc that was re-packed live, so its tombstone
-    # must survive to keep masking
-    try:
-        staged = tomb is not None and _stage_covered_tombstones(
-            index_dir, [(0, 1 << 62)], tomb, new_name
-        )
-    except BaseException:
-        _abort()
-        raise
-
-    def mut(fresh):
-        if any(n not in fresh["segments"] for n in inputs):
-            return None  # inputs taken by a concurrent maintenance run
-        # segments appended since our snapshot (not compacted here) and
-        # extra root keys (e.g. streaming_hwm) survive the rewrite
-        retired = dict(fresh.get("retired", {}))
-        for n in inputs:
-            retired[n] = now
-        reserved = dict(fresh.get("reserved", {}))
-        reserved.pop(new_name, None)
-        covered_gc = dict(fresh.get("covered_gc", {}))
-        if staged:
-            covered_gc[new_name] = now
-        return {
-            **fresh,
-            "params": params,
-            "segments": {
-                **{n: s for n, s in fresh["segments"].items() if n not in inputs},
-                new_name: {
-                    "n_docs": seg_meta["n_docs"],
-                    "sum_dl": seg_meta["sum_dl"],
-                    "doc_id_offset": seg_meta["doc_id_offset"],
-                    "max_doc_id": seg_meta["max_doc_id"],
-                },
-            },
-            "retired": retired,
-            "reserved": reserved,
-            "covered_gc": covered_gc,
-            # pin released atomically with the publish; abort path
-            # releases it via _unpin_tomb_generation
-            "tomb_pins": {n: p for n, p in fresh.get("tomb_pins", {}).items()
-                          if n != new_name},
-        }
-
-    try:
-        published = _write_meta_locked(index_dir, mut)
-    except BaseException:
-        _abort()
-        raise
-    if published is None:
-        _abort()
-        raise RuntimeError(
-            "compact_segments: input segments changed during compaction "
-            "(concurrent merge/compact took them) — re-run"
-        )
-    _preserve_quarantines(
-        [os.path.join(seg_root, n) for n in inputs], list(inputs), seg_dir,
-    )
-    _purge_retired(spark, index_dir, retire_grace_s)
-    return seg_meta
+    return _merge_run(spark, index_dir, idx.meta, sorted(idx.meta["segments"]),
+                      idx._tombstones(), idx.meta, retire_grace_s)
 
 
 def _preserve_quarantines(old_dirs: list, old_names: list, new_seg_dir: str) -> None:
@@ -545,13 +625,8 @@ def maybe_merge(
 
     Unlike ``compact_segments`` this rewrites only the selected segments
     — the steady-state maintenance path for a continuously-appending
-    index. Readers are never disturbed: the merged segment is written
-    under ``segments/`` (invisible until referenced), the root
-    ``meta.json`` swap atomically retires the inputs (re-reading fresh
-    meta under the meta lock, so concurrent appends/HWM updates
-    survive), and the input dirs stay on disk for ``retire_grace_s``
-    seconds so warm readers pinned to the pre-merge meta finish
-    unharmed (purged on a later maintenance call). Doc ids are global
+    index; both publish through the same merge transaction
+    (``_merge_run``), so readers are never disturbed. Doc ids are global
     and range-aligned per segment, so merging preserves them verbatim
     and untouched segments' postings are never read.
     """
@@ -628,191 +703,11 @@ def maybe_merge(
     )
     if not merged:
         return None
-
-    seg_root = os.path.join(index_dir, "segments")
-    sel_dirs = [os.path.join(seg_root, n) for n in merged]
-
-    def union_read(sub: str) -> DataFrame:
-        dfs = [spark.read.parquet(os.path.join(d, sub)) for d in sel_dirs]
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d)
-        return out
-
-    decoded = decode_postings(union_read("postings"),
-                              with_positions=bool(params.get("store_positions")))
-    stats = union_read("docstats")
-    if tomb is not None:
-        tomb_ids = tomb.select("doc_id").distinct()
-        decoded = decoded.join(tomb_ids, "doc_id", "left_anti")
-        stats = stats.join(tomb_ids, "doc_id", "left_anti")
-
-    if tomb is not None:
-        # persist: the fully-deleted probe (isEmpty) below and the
-        # pack's docstats write would otherwise each run the full
-        # docstats union + tombstone anti-join (one extra Spark job
-        # per merge; same pattern as _append_tombstones/_compute —
-        # r5 review)
-        stats = stats.persist()
     try:
-        if tomb is not None and stats.isEmpty():
-            # every doc in the run is tombstoned: nothing to write. Drop the
-            # segments outright, folding their doc-id high-water mark into the
-            # largest remaining segment so append_segment never reuses ids
-            # (safe: the covered tombstones are GC'd below, and deletes can
-            # only target ids present in docstats, never the dropped range).
-            if all(n in merged for n in segments):
-                return None  # fully-deleted index: leave tombstone masking in place
-            hwm = max(s["max_doc_id"] for s in segments.values())
-            import time as _time
-
-            now = _time.time()
-            gc_tag = f"drop_{merged[0]}_{int(now)}"
-            try:
-                staged = _stage_covered_tombstones(index_dir, [
-                    (segments[n]["doc_id_offset"], segments[n]["max_doc_id"])
-                    for n in merged
-                ], tomb, gc_tag)
-            except BaseException:
-                shutil.rmtree(os.path.join(index_dir, "tombstones_covered", gc_tag),
-                              ignore_errors=True)
-                raise
-            picked: dict = {}
-
-            def mut(fresh):
-                if any(n not in fresh["segments"] for n in merged):
-                    return None  # inputs taken by a concurrent maintenance run
-                survivors = {n: dict(s) for n, s in fresh["segments"].items() if n not in merged}
-                if not survivors:
-                    return None
-                top = max(survivors, key=lambda n: survivors[n]["max_doc_id"])
-                survivors[top]["max_doc_id"] = max(survivors[top]["max_doc_id"], hwm)
-                picked["top"] = top
-                retired = dict(fresh.get("retired", {}))
-                for n in merged:
-                    retired[n] = now
-                covered_gc = dict(fresh.get("covered_gc", {}))
-                if staged:
-                    covered_gc[gc_tag] = now
-                return {**fresh, "params": params, "segments": survivors,
-                        "retired": retired, "covered_gc": covered_gc}
-
-            try:
-                published = _write_meta_locked(index_dir, mut)
-            except BaseException:
-                shutil.rmtree(os.path.join(index_dir, "tombstones_covered", gc_tag),
-                              ignore_errors=True)
-                raise
-            if published is None:
-                if staged:
-                    shutil.rmtree(
-                        os.path.join(index_dir, "tombstones_covered", gc_tag),
-                        ignore_errors=True,
-                    )
-                return None
-            _preserve_quarantines(sel_dirs, merged, os.path.join(seg_root, picked["top"]))
-            _purge_retired(spark, index_dir, retire_grace_s)
-            return {"segment": None, "n_docs": 0, "merged": merged}
-
-        # name allocated + reserved under the meta lock: a concurrent
-        # auto-named append can never claim the same seg_NNNNNN (r3 review)
-        new_name = _reserve_segment_name(index_dir)
-        if tomb is not None:
-            # see _pin_tomb_generation (and compact_segments): the pack's
-            # pinned generation must survive concurrent flips + purges
-            _pin_tomb_generation(index_dir, new_name, snap_meta)
-
-        def _abort():
-            # failed/lost publication: drop the unreferenced output dir and
-            # staged covered set, release the name (r3 review: an exception
-            # after the reservation leaked all three until the TTL)
-            shutil.rmtree(os.path.join(seg_root, new_name), ignore_errors=True)
-            shutil.rmtree(os.path.join(index_dir, "tombstones_covered", new_name),
-                          ignore_errors=True)
-            _unpin_tomb_generation(index_dir, new_name)
-            _unreserve_segment_name(index_dir, new_name)
-
-        try:
-            # heartbeat: see compact_segments — same name-expiry hazard
-            with _claim_heartbeat(index_dir, new_name):
-                seg_meta = _pack_segment(
-                    spark, decoded, stats, os.path.join(seg_root, new_name), params,
-                    segment=new_name,
-                    doc_id_offset=min(segments[n]["doc_id_offset"] for n in merged),
-                    # inputs' doc-id high-water mark survives even if their
-                    # tail docs were all tombstoned — append_segment must
-                    # never reuse ids (and the floor goes into seg_meta.json
-                    # too, so rebuilding root meta from per-segment files can
-                    # never shrink the HWM)
-                    max_doc_id_floor=max(segments[n]["max_doc_id"] for n in merged),
-                )
-
-            import time as _time
-
-            now = _time.time()
-            # stage covered tombstones for deferred GC (their docs are
-            # physically absent from the merged output; the live rows stay
-            # until the retire grace expires so warm readers keep masking —
-            # pure hygiene after)
-            staged = tomb is not None and _stage_covered_tombstones(index_dir, [
-                (segments[n]["doc_id_offset"], segments[n]["max_doc_id"])
-                for n in merged
-            ], tomb, new_name)
-        except BaseException:
-            _abort()
-            raise
-
-        def mut(fresh):
-            if any(n not in fresh["segments"] for n in merged):
-                # a concurrent maintenance run already took (some of) our
-                # inputs: publishing would duplicate their docs/doc_ids in
-                # two live segments (r3 review) — abort, caller cleans up
-                return None
-            # fold the swap into FRESH meta: segments appended (and HWMs
-            # recorded) since our snapshot survive the rewrite
-            retired = dict(fresh.get("retired", {}))
-            for n in merged:
-                retired[n] = now
-            reserved = dict(fresh.get("reserved", {}))
-            reserved.pop(new_name, None)
-            covered_gc = dict(fresh.get("covered_gc", {}))
-            if staged:
-                covered_gc[new_name] = now
-            return {
-                **fresh,
-                "params": params,
-                "segments": {
-                    **{n: s for n, s in fresh["segments"].items() if n not in merged},
-                    new_name: {
-                        "n_docs": seg_meta["n_docs"],
-                        "sum_dl": seg_meta["sum_dl"],
-                        "doc_id_offset": seg_meta["doc_id_offset"],
-                        "max_doc_id": seg_meta["max_doc_id"],
-                    },
-                },
-                "retired": retired,
-                "reserved": reserved,
-                "covered_gc": covered_gc,
-                # pin released atomically with the publish (see
-                # _pin_tomb_generation); abort path unpins explicitly
-                "tomb_pins": {n: p for n, p in fresh.get("tomb_pins", {}).items()
-                              if n != new_name},
-            }
-
-        try:
-            published = _write_meta_locked(index_dir, mut)
-        except BaseException:
-            _abort()
-            raise
-        if published is None:
-            _abort()
-            return None
-        _preserve_quarantines(sel_dirs, merged, os.path.join(seg_root, new_name))
-        _purge_retired(spark, index_dir, retire_grace_s)
-        return {**seg_meta, "merged": merged}
-    finally:
-        if tomb is not None:
-            stats.unpersist()
+        out = _merge_run(spark, index_dir, meta, merged, tomb, snap_meta, retire_grace_s)
+    except _InputsTaken:
+        return None
+    return None if out is None else {**out, "merged": merged}
 
 
 def _stage_covered_tombstones(
@@ -852,20 +747,14 @@ def _stage_covered_tombstones(
     shutil.rmtree(dest, ignore_errors=True)
     removed = pinned.select("doc_id").filter(cond).distinct()
     removed.write.mode("overwrite").parquet(dest)
-    if not _written_has_rows(dest, removed):
+    # emptiness checked on the WRITTEN files (one cheap footer-count
+    # scan), not by re-running the source plan
+    if not pinned.sparkSession.read.parquet(dest).head(1):
         # nothing covered: registering an empty tag would later trigger a
         # pointless full-copy rewrite + generation flip (r3 review)
         shutil.rmtree(dest, ignore_errors=True)
         return False
     return True
-
-
-def _written_has_rows(written_dir: str, df: DataFrame) -> bool:
-    """True when the just-written parquet dir has any rows — checked on
-    the WRITTEN files (one cheap footer-count scan), not by re-running
-    the source plan."""
-    out = df.sparkSession.read.parquet(written_dir)
-    return bool(out.head(1))
 
 
 def _tomb_data_files(d: str) -> list:
@@ -887,50 +776,96 @@ def _tomb_data_files(d: str) -> list:
 TOMB_COMPACT_MAX_FILES = 64
 
 
+def _commit_tomb_flip(index_dir: str, meta: dict, cur: str, tmp: str | None) -> None:
+    """Publish the next generation after ``cur`` — the rewrite in ``tmp``
+    renamed in, or no dir at all when ``tmp`` is None (readers treat an
+    absent generation as "no tombstones") — and flip root meta's
+    ``tombstones_dir`` to it, retiring ``cur`` on the same grace clock as
+    merged-away segment dirs. The caller holds the meta lock and passes
+    the meta it read under it."""
+    nxt_name = _next_tomb_gen(os.path.basename(cur))
+    nxt = os.path.join(index_dir, nxt_name)
+    shutil.rmtree(nxt, ignore_errors=True)
+    if tmp is not None:
+        os.replace(tmp, nxt)  # rename(2): atomic dir publish
+    meta["tombstones_dir"] = nxt_name
+    meta.setdefault("tomb_retired", {})[os.path.basename(cur)] = time.time()
+    atomic_write_meta(index_dir, meta)
+
+
+def _inflight_dir(index_dir: str, cur: str) -> str:
+    """Temp dir of a rewrite of generation ``cur`` (see ``_purge_retired``)."""
+    return os.path.join(
+        index_dir, f".{_next_tomb_gen(os.path.basename(cur))}.inflight-{os.getpid()}")
+
+
+def _flip_tomb_generation(index_dir: str, rewrite, verify=lambda: True,
+                          on_flip=lambda: None) -> bool:
+    """The one optimistic tombstone-generation flip, shared by the
+    file-count compaction and the covered-tombstone GC. The rewrite —
+    full Spark jobs over the live generation — runs OUTSIDE the meta
+    lock, which it would otherwise hold for an unbounded time, stalling
+    every CDC delete's staged-file move and every streaming HWM write
+    (r4 ADVICE). Each of up to three attempts:
+
+    1. snapshots the active generation ``cur`` and its exact data-file
+       listing ``pinned`` (``_tomb_data_files``);
+    2. calls ``rewrite(cur, pinned, tmp)``, which reads only the pinned
+       files (a mid-scan append must not leak into the rewrite) and
+       writes the next generation into the temp dir ``tmp``. It returns
+       True when it wrote rows, False when the next generation is empty
+       (nothing written), or None to stop without a flip;
+    3. takes the lock only to check that the generation and its listing
+       are unchanged and that ``verify()`` holds, then commits
+       (``_commit_tomb_flip``) and calls ``on_flip()``, still under the
+       lock.
+
+    Tombstone appends move their files in under this same lock, so the
+    listing compare is a complete conflict detector: a file that landed
+    after the listing was pinned would be silently dropped by the flip
+    (resurrecting its deleted doc), so a conflict discards the rewrite
+    and recomputes from a fresh snapshot — as does a rewrite that fails
+    because a concurrent run purged what it read. A crash before the
+    meta write leaves only an orphan temp dir (swept by
+    ``_purge_retired``). Returns True when a flip was committed."""
+    for _ in range(3):
+        cur = _active_tomb_dir(index_dir)
+        pinned = _tomb_data_files(cur)
+        tmp = _inflight_dir(index_dir, cur)
+        try:
+            wrote = rewrite(cur, pinned, tmp)
+        except Exception:
+            shutil.rmtree(tmp, ignore_errors=True)
+            continue
+        if wrote is None:
+            return False
+        with meta_lock(index_dir):
+            fresh = _read_meta_for_update(index_dir) or {}
+            if (_active_tomb_dir(index_dir, fresh) == cur
+                    and _tomb_data_files(cur) == pinned and verify()):
+                _commit_tomb_flip(index_dir, fresh, cur, tmp if wrote else None)
+                on_flip()
+                return True
+        shutil.rmtree(tmp, ignore_errors=True)
+    return False
+
+
 def _compact_tombstones(spark: SparkSession, index_dir: str,
                         max_files: int = TOMB_COMPACT_MAX_FILES) -> bool:
     """Rewrite the live tombstone generation compacted (distinct doc_ids,
     bounded file count) when its data-file count exceeds ``max_files`` —
-    even when nothing is covered. Same optimistic shape as
-    ``_gc_staged_tombstones``: Spark jobs run OUTSIDE the meta lock from
-    a pinned file listing; the lock is taken only to verify the pointer
-    and listing are unchanged (appends move files in under this lock)
-    and flip. Returns True when a compaction flip happened."""
-    import time as _time
+    even when nothing is covered — through ``_flip_tomb_generation``.
+    Returns True when a compaction flip happened."""
 
-    from dbsyncer_spark.index.build import atomic_write_meta, meta_lock
-
-    for _ in range(3):
-        meta = _read_root_meta(index_dir) or {}
-        cur = _active_tomb_dir(index_dir, meta)
-        pinned = _tomb_data_files(cur)
+    def rewrite(cur: str, pinned: list, tmp: str) -> bool | None:
         if len(pinned) <= max_files:
-            return False
-        nxt_name = _next_tomb_gen(os.path.basename(cur))
-        nxt = os.path.join(index_dir, nxt_name)
-        tmp = os.path.join(index_dir, f".{nxt_name}.inflight-{os.getpid()}")
-        try:
-            (spark.read.parquet(*pinned).select("doc_id").distinct()
-             .repartition(max(1, len(pinned) // max_files))
-             .write.mode("overwrite").parquet(tmp))
-        except Exception:
-            # generation purged mid-scan by a concurrent run — resnapshot
-            shutil.rmtree(tmp, ignore_errors=True)
-            continue
-        with meta_lock(index_dir):
-            fresh = _read_meta_for_update(index_dir) or {}
-            if (_active_tomb_dir(index_dir, fresh) == cur
-                    and _tomb_data_files(cur) == pinned):
-                shutil.rmtree(nxt, ignore_errors=True)
-                os.replace(tmp, nxt)
-                fresh["tombstones_dir"] = nxt_name
-                fresh.setdefault("tomb_retired", {})[
-                    os.path.basename(cur)] = _time.time()
-                atomic_write_meta(index_dir, fresh)
-                return True
-        # an append landed (or a flip raced us) — discard and recompute
-        shutil.rmtree(tmp, ignore_errors=True)
-    return False
+            return None
+        (spark.read.parquet(*pinned).select("doc_id").distinct()
+         .repartition(max(1, len(pinned) // max_files))
+         .write.mode("overwrite").parquet(tmp))
+        return True
+
+    return _flip_tomb_generation(index_dir, rewrite)
 
 
 def _gc_staged_tombstones(spark: SparkSession, index_dir: str, tags: list) -> None:
@@ -945,108 +880,59 @@ def _gc_staged_tombstones(spark: SparkSession, index_dir: str, tags: list) -> No
     clock as merged-away segment dirs (in-flight readers/merges pinned
     to it keep reading real files).
 
-    r4 (ADVICE): the rewrite — full Spark jobs over the live generation —
-    no longer runs under the exclusive meta lock (it stalled every CDC
-    delete's staged-file move and every streaming HWM write for the
-    whole rewrite, unbounded on a large tombstone set). Optimistic shape
-    instead: pin the generation's exact FILE LISTING, compute + write
-    the next generation to a temp dir lock-free, then take the lock only
-    to verify nothing moved (same active generation, byte-identical file
-    listing, tags still staged — tombstone appends move their files in
-    under this same lock, so the listing compare is a complete conflict
-    detector) and rename+flip the pointer. On contention the cheap path
-    retries; after 3 conflicts it falls back to the r3 fully-locked
-    rewrite, so progress is guaranteed. A crash anywhere before the meta
-    write leaves only an orphan temp/next-generation dir; the retried GC
-    (the tags stay registered until applied) overwrites it."""
-    import time as _time
-
-    from dbsyncer_spark.index.build import atomic_write_meta, meta_lock
-
+    The rewrite runs lock-free through ``_flip_tomb_generation``, whose
+    under-lock check here also requires the tags to be still staged. On
+    contention the optimistic path retries; after 3 conflicts it falls
+    back to the r3 fully-locked rewrite, so progress is guaranteed. The
+    tags stay registered until applied, so a crashed GC is retried."""
     cov_root = os.path.join(index_dir, "tombstones_covered")
 
     def _staged_dirs() -> list:
         return [d for d in (os.path.join(cov_root, t) for t in tags)
                 if os.path.exists(d)]
 
-    # one definition of the listing both optimistic rewriters verify
-    # against — see _tomb_data_files (review r4: a drifted copy here
-    # would silently break the compaction/GC pinned-listing compare)
-    _data_files = _tomb_data_files
-
     def _compute(dirs: list, pinned: list, tmp: str) -> bool:
-        """Anti-join the PINNED file listing (not the dir — a mid-scan
-        append must not leak into the rewrite) against the staged
-        covered ids; write survivors to ``tmp``. True = empty result
-        (no dir written; the flip targets an absent generation, which
-        readers treat as "no tombstones")."""
+        """Anti-join the PINNED file listing against the staged covered
+        ids; write survivors to ``tmp``. False = empty result (no dir
+        written; the flip targets an absent generation)."""
         if not pinned:
-            return True
+            return False
         covered = spark.read.parquet(*dirs).select("doc_id").distinct()
         keep = spark.read.parquet(*pinned).join(covered, "doc_id", "left_anti")
         # persist: isEmpty + write would otherwise run the anti-join twice
         keep = keep.persist()
         try:
             if keep.isEmpty():
-                return True
+                return False
             keep.write.mode("overwrite").parquet(tmp)
-            return False
+            return True
         finally:
             keep.unpersist()
 
-    def _flip(fresh: dict, cur: str, nxt_name: str, dirs: list) -> None:
-        """Pointer flip + staged-dir cleanup; caller holds the meta lock.
-        Deleting the applied staged dirs INSIDE the lock matters: their
-        existence doubles as "not yet applied" for concurrent runs (r3
-        review — a post-lock delete window let a concurrent purge
-        re-apply the same tags as a pointless full rewrite)."""
-        fresh["tombstones_dir"] = nxt_name
-        fresh.setdefault("tomb_retired", {})[os.path.basename(cur)] = _time.time()
-        atomic_write_meta(index_dir, fresh)
+    def _drop_applied(dirs: list) -> None:
+        # INSIDE the lock: the staged dirs' existence doubles as "not yet
+        # applied" for concurrent runs (r3 review — a post-lock delete
+        # window let a concurrent purge re-apply the same tags as a
+        # pointless full rewrite)
         for d in dirs:
             shutil.rmtree(d, ignore_errors=True)
 
-    for _ in range(3):  # optimistic lock-free rewrite attempts
-        dirs = _staged_dirs()
-        if not dirs:
-            return  # a concurrent run applied these tags already
-        meta = _read_root_meta(index_dir) or {}
-        cur = _active_tomb_dir(index_dir, meta)
-        if not os.path.exists(cur):
-            break  # no tombstones at all — just deregister under the lock
-        pinned = _data_files(cur)
-        nxt_name = _next_tomb_gen(os.path.basename(cur))
-        nxt = os.path.join(index_dir, nxt_name)
-        tmp = os.path.join(index_dir, f".{nxt_name}.inflight-{os.getpid()}")
-        try:
-            empty = _compute(dirs, pinned, tmp)
-        except Exception:
-            # staged dirs / generation files purged mid-scan by a
-            # concurrent run (the r3 TOCTOU) — re-snapshot and retry
-            shutil.rmtree(tmp, ignore_errors=True)
-            continue
-        with meta_lock(index_dir):
-            dirs_now = _staged_dirs()
-            if not dirs_now:
-                shutil.rmtree(tmp, ignore_errors=True)
-                return
-            fresh = _read_meta_for_update(index_dir) or {}
-            if (_active_tomb_dir(index_dir, fresh) == cur
-                    and _data_files(cur) == pinned
-                    and dirs_now == dirs):
-                shutil.rmtree(nxt, ignore_errors=True)
-                if not empty:
-                    os.replace(tmp, nxt)  # rename(2): atomic dir publish
-                _flip(fresh, cur, nxt_name, dirs)
-                return
-        # an append landed in the old generation (or a flip/apply raced
-        # us) between the pinned listing and the lock: the computed
-        # rewrite would silently drop it and resurrect the deleted doc —
-        # discard and recompute from a fresh snapshot
-        shutil.rmtree(tmp, ignore_errors=True)
+    staged: dict = {}
 
-    # contended (or generation absent): guaranteed progress the r3 way —
-    # listing, rewrite, and flip all under the lock
+    def rewrite(cur: str, pinned: list, tmp: str) -> bool | None:
+        staged["dirs"] = _staged_dirs()
+        if not staged["dirs"] or not os.path.exists(cur):
+            # applied by a concurrent run, or no tombstones at all: the
+            # locked path below settles both without a rewrite
+            return None
+        return _compute(staged["dirs"], pinned, tmp)
+
+    if _flip_tomb_generation(index_dir, rewrite,
+                             verify=lambda: _staged_dirs() == staged["dirs"],
+                             on_flip=lambda: _drop_applied(staged["dirs"])):
+        return
+    # contended (or nothing to rewrite): the r3 way — listing, rewrite
+    # and flip all under the lock
     with meta_lock(index_dir):
         dirs = _staged_dirs()
         if not dirs:
@@ -1054,17 +940,11 @@ def _gc_staged_tombstones(spark: SparkSession, index_dir: str, tags: list) -> No
         meta = _read_meta_for_update(index_dir) or {}
         cur = _active_tomb_dir(index_dir, meta)
         if os.path.exists(cur):
-            nxt_name = _next_tomb_gen(os.path.basename(cur))
-            nxt = os.path.join(index_dir, nxt_name)
-            tmp = os.path.join(index_dir, f".{nxt_name}.inflight-{os.getpid()}")
-            shutil.rmtree(nxt, ignore_errors=True)
-            if not _compute(dirs, _data_files(cur), tmp):
-                os.replace(tmp, nxt)
-            _flip(meta, cur, nxt_name, dirs)
-        else:
-            # covered ids with no live tombstones are trivially applied
-            for d in dirs:
-                shutil.rmtree(d, ignore_errors=True)
+            tmp = _inflight_dir(index_dir, cur)
+            wrote = _compute(dirs, _tomb_data_files(cur), tmp)
+            _commit_tomb_flip(index_dir, meta, cur, tmp if wrote else None)
+        # covered ids with no live tombstones are trivially applied
+        _drop_applied(dirs)
 
 
 def decode_postings(postings: DataFrame, with_positions: bool = False) -> DataFrame:
@@ -1158,17 +1038,19 @@ def _purge_retired(spark: SparkSession, index_dir: str, grace_s: float) -> list:
     ]
     from dbsyncer_spark.index.build import RESERVATION_TTL_S
 
-    # generations pinned by an in-flight merge/compaction pack survive
-    # the grace clock for as long as the pack heartbeats its pin (see
-    # _pin_tomb_generation; a crashed pack's pin expires with the TTL)
-    pinned_gens = {
-        p["gen"] for p in meta.get("tomb_pins", {}).values()
-        if now - p.get("ts", 0.0) < RESERVATION_TTL_S
-    }
-    tomb_doomed = [
-        n for n, ts in meta.get("tomb_retired", {}).items()
-        if now - ts >= grace_s and n not in pinned_gens
-    ]
+    def expired_gens(m: dict, at: float) -> list:
+        # retired tombstone generations past grace at time ``at``. Those
+        # pinned by an in-flight merge/compaction pack survive the grace
+        # clock for as long as the pack heartbeats its pin (see
+        # _pin_tomb_generation; a crashed pack's pin expires with the
+        # TTL); the active generation is never purged
+        active = os.path.basename(_active_tomb_dir(index_dir, m))
+        pins = {p["gen"] for p in m.get("tomb_pins", {}).values()
+                if at - p.get("ts", 0.0) < RESERVATION_TTL_S}
+        return [n for n, ts in m.get("tomb_retired", {}).items()
+                if at - ts >= grace_s and n != active and n not in pins]
+
+    tomb_doomed = expired_gens(meta, now)
     # crash-orphaned append stagings (the appender died between the
     # parquet write and the locked move): swept unconditionally — a
     # delete-heavy index that never merges would otherwise accumulate
@@ -1316,17 +1198,7 @@ def _purge_retired(spark: SparkSession, index_dir: str, grace_s: float) -> list:
         # the GC may have just retired the then-active generation: with
         # grace 0 (tests / explicit force) it is purgeable in this same
         # call, so re-derive the expired set from the post-flip registry
-        fresh_meta = _read_root_meta(index_dir) or {}
-        active = os.path.basename(_active_tomb_dir(index_dir, fresh_meta))
-        fresh_pins = {
-            p["gen"] for p in fresh_meta.get("tomb_pins", {}).values()
-            if time.time() - p.get("ts", 0.0) < RESERVATION_TTL_S
-        }
-        tomb_doomed = [
-            n for n, ts in fresh_meta.get("tomb_retired", {}).items()
-            if time.time() - ts >= grace_s and n != active
-            and n not in fresh_pins
-        ]
+        tomb_doomed = expired_gens(_read_root_meta(index_dir) or {}, time.time())
     for n in tomb_doomed:
         shutil.rmtree(os.path.join(index_dir, n), ignore_errors=True)
     gone, gone_tags, gone_gens = set(doomed), set(gc_tags), set(tomb_doomed)

@@ -325,3 +325,30 @@ def test_tomb_generation_pin_survives_purge(spark, tmp_path_factory):
     inc._unpin_tomb_generation(d, "seg_packer")
     inc._purge_retired(spark, d, grace_s=0.0)
     assert not os.path.exists(cur), "unpinned retired generation must purge"
+
+
+def test_compact_fully_deleted_index_is_a_no_op(spark, tmp_path_factory):
+    """Compacting an index whose every doc is tombstoned writes nothing:
+    it returns None like ``maybe_merge`` and leaves the segments and the
+    masking tombstones in place (it used to crash packing an empty
+    postings dir), and a later append still gets ids above the old
+    high-water mark."""
+    pdf = gen_corpus_pdf(n_docs=90, seed=5)
+    d = str(tmp_path_factory.mktemp("fully_deleted"))
+    build_index(spark, spark.createDataFrame(pdf.iloc[:30], schema=SCHEMA), d, **PARAMS)
+    append_segment(spark, spark.createDataFrame(pdf.iloc[30:60], schema=SCHEMA), d,
+                   num_id_buckets=8)
+    idx = SearchIndex(spark, d)
+    assert idx.search("import", k=10).count() > 0
+    hwm = max(s["max_doc_id"] for s in idx.meta["segments"].values())
+    assert delete_docs(spark, d, idx.docstats().select("doc_id")) == 60
+
+    assert compact_segments(spark, d, retire_grace_s=0) is None
+    idx2 = SearchIndex(spark, d)
+    assert idx2.meta["segments"] == idx.meta["segments"]
+    assert idx2.search("import", k=10).count() == 0
+
+    meta = append_segment(spark, spark.createDataFrame(pdf.iloc[60:], schema=SCHEMA), d,
+                          num_id_buckets=8)
+    assert meta["doc_id_offset"] > hwm
+    assert SearchIndex(spark, d).n_docs == 90
