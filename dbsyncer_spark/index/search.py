@@ -34,6 +34,7 @@ from math import log
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -57,8 +58,8 @@ _SCORE_SCHEMA = "doc_id long, score double"
 _QSCORE_SCHEMA = "query_id string, doc_id long, score double"
 
 # Parsed-once StructType twins of the serving result schemas. The
-# zero-job warm_local paths build their results with createDataFrame /
-# empty_df on EVERY query; passing the DDL string there costs a JVM
+# zero-job warm_local paths build their results with createDataFrame
+# on EVERY query; passing the DDL string there costs a JVM
 # parseDataType py4j round-trip (~5-10 ms) per call — measurable against
 # a ~10 ms scoring kernel. Distributed paths keep the DDL strings (one
 # parse per job is noise there).
@@ -155,45 +156,74 @@ def _dead_ranges(tomb: DataFrame, range_size: int) -> DataFrame:
     )
 
 
-def _decode_row(base: int, r, keep=None):
-    """Default posting-row decode: straight ``unpack_blocks`` on the raw
-    blob (``base`` — the range's first docId, unique per range — is
-    unused here; it exists so a caching decode can key on it). This is
-    the seam the executor scorers always use; the warm_local driver
-    paths may inject a ``_DecodedPostingsCache`` instead."""
-    return unpack_blocks(r.blob, r.block_off, r.block_n, r.block_first,
-                         keep=keep)
+def _tfnorm(tf, dl, k1: float, b: float, avgdl: float):
+    """BM25 tf-norm ``tf*(k1+1) / (tf + k1*(1-b+b*dl/avgdl))`` in
+    float64: the one copy of the expression, so its operation order (and
+    every float score) is the same in every kernel and tier. At a block's
+    (max tf, min dl) it is the block's upper bound: the norm rises with
+    tf and falls with dl, for any avgdl."""
+    tf = np.asarray(tf, dtype=np.float64)
+    dl = np.asarray(dl, dtype=np.float64)
+    return tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dl / avgdl))
+
+
+def _impacts(k1: float, b: float, avgdl: float, cache=None):
+    """The scorers' one decode seam for BM25 params ``(k1, b, avgdl)``:
+    ``decode(base, r, keep=None) -> (idx, tfn)``, each posting's int64
+    offset in its docId-range (``base`` is the range's first docId) and
+    its float64 ``_tfnorm``, over the kept blocks (``keep``: block
+    indexes, None = all). Without ``cache`` it is a closure over
+    ``unpack_blocks`` (the executor kernels); with one it is that
+    warm_local ``_DecodedPostingsCache``, which must have been built for
+    exactly these params — a kernel must never score from the tf-norms
+    of another snapshot's avgdl, so a mismatch raises."""
+    if cache is not None:
+        if cache.params != (k1, b, avgdl):
+            raise ValueError(
+                f"cached impacts are for (k1, b, avgdl) = {cache.params}; "
+                f"the kernel scores with {(k1, b, avgdl)}"
+            )
+        return cache
+
+    def decode(base: int, r, keep=None):
+        d, tf, dl = unpack_blocks(r.blob, r.block_off, r.block_n,
+                                  r.block_first, keep=keep)
+        return ((d - np.uint64(base)).astype(np.int64),
+                _tfnorm(tf, dl, k1, b, avgdl))
+
+    return decode
 
 
 class _DecodedPostingsCache:
-    """Byte-budgeted LRU of fully-decoded posting rows for warm_local
-    serving, keyed by (range base docId, tid).
+    """Byte-budgeted LRU of posting-row impacts for warm_local serving,
+    keyed by (range base docId, tid, first docId, blob length): the
+    ``_impacts`` seam with memory.
 
     Profiling the warm_local kernel showed ~50% of per-query latency was
     ``_vbyte_decode_arr`` re-decoding the SAME hot-term rows on every
-    query ('import'/'return'-class terms touch every range). Postings
-    are immutable within a meta generation (the same invariant
-    ``_local_refresh_tombstones`` relies on), so decoded (doc, tf, dl)
-    arrays can be reused verbatim across queries — the Python analog of
-    Lucene serving hot postings from the OS page cache, except here the
-    saved cost is decode CPU, not I/O. Strictly bounded: decoded arrays
-    are ~24 B/posting vs ~4-8 B on disk, so the default budget
-    (4x the warm_local on-disk budget) admits the whole working set of a
-    budget-sized index while staying O(budget) if it can't.
+    query, and a batch then re-derived every posting's tf-norm. Postings
+    are immutable within a meta generation (the invariant
+    ``_local_refresh_tombstones`` relies on) and a tf-norm depends only
+    on the posting and ``(k1, b, avgdl)``, so the cache is built with
+    those params and stores each row's ``(idx, tfn)`` — the analog of
+    Lucene's ``BM25Similarity`` caching its length norm. Strictly
+    bounded: impacts are ~16 B/posting vs ~4-8 B on disk, so the default
+    budget (4x the warm_local on-disk budget) admits the whole working
+    set of a budget-sized index while staying O(budget) if it can't.
 
-    When a WAND call wants a block subset (``keep``), the kept blocks
-    are gathered from the cached FULL decode via the per-block posting
-    offsets — value-identical to ``unpack_blocks(keep=...)``
-    (pytest-gated). The first touch of a row decodes all its blocks even
-    if WAND would have skipped some; hot rows amortize that immediately
-    and cold rows are the ones WAND skips anyway. Callers must not
-    mutate returned arrays (the scorers ``.astype``-copy before any
-    arithmetic). Not thread-safe, like the rest of the warm_local
-    snapshot; never shipped to executors."""
+    A ``keep`` block subset is gathered from the cached FULL row via the
+    per-block posting offsets — value-identical to ``_impacts`` over
+    ``unpack_blocks(keep=...)`` (pytest-gated); a row's first touch
+    decodes all its blocks (hot rows amortize that, cold rows are the
+    ones WAND skips). Callers must not mutate returned arrays. Not
+    thread-safe, like the rest of the warm_local snapshot; never shipped
+    to executors."""
 
-    def __init__(self, max_bytes: int):
+    def __init__(self, max_bytes: int, k1: float, b: float, avgdl: float):
         from collections import OrderedDict
         self.max_bytes = int(max_bytes)
+        self.params = (k1, b, avgdl)
+        self._decode = _impacts(k1, b, avgdl)
         self._rows: "OrderedDict[tuple, tuple]" = OrderedDict()
         self._bytes = 0
 
@@ -210,62 +240,54 @@ class _DecodedPostingsCache:
                len(r.blob))
         hit = self._rows.get(key)
         if hit is None:
-            d, tf, dl = unpack_blocks(r.blob, r.block_off, r.block_n,
-                                      r.block_first, keep=None)
             bn = np.asarray(r.block_n, dtype=np.int64)
             p0 = np.zeros(bn.size + 1, dtype=np.int64)
             np.cumsum(bn, out=p0[1:])
-            hit = (d, tf, dl, p0)
-            cost = d.nbytes + tf.nbytes + dl.nbytes + p0.nbytes
+            hit = (*self._decode(base, r), p0)
+            cost = sum(a.nbytes for a in hit)
             if cost <= self.max_bytes:
                 while self._bytes + cost > self.max_bytes and self._rows:
-                    _, (ed, etf, edl, ep0) = self._rows.popitem(last=False)
-                    self._bytes -= ed.nbytes + etf.nbytes + edl.nbytes + ep0.nbytes
+                    _, old = self._rows.popitem(last=False)
+                    self._bytes -= sum(a.nbytes for a in old)
                 self._rows[key] = hit
                 self._bytes += cost
             # else: a single row larger than the whole budget is decoded
             # per call rather than evicting the entire cache for it
         else:
             self._rows.move_to_end(key)
-        d, tf, dl, p0 = hit
+        idx, tfn, p0 = hit
         if keep is None:
-            return d, tf, dl
+            return idx, tfn
         kb = np.asarray(keep, dtype=np.int64)
         lens = p0[kb + 1] - p0[kb]
         total = int(lens.sum())
-        if total == d.size:
-            return d, tf, dl
+        if total == idx.size:
+            return idx, tfn
         # output offset of each kept block, then one flat gather
         o0 = np.zeros(kb.size, dtype=np.int64)
         np.cumsum(lens[:-1], out=o0[1:])
         gidx = np.repeat(p0[kb] - o0, lens) + np.arange(total, dtype=np.int64)
-        return d[gidx], tf[gidx], dl[gidx]
+        return idx[gidx], tfn[gidx]
 
 
 def _shared_taat_range(rows, base: int, allowed, idfs: dict, by_tid: dict,
-                       k1: float, b: float, avgdl: float, k: int,
-                       decode=_decode_row) -> list:
-    """Sparse shared-decode TAAT over ONE docId-range: decode every block
-    of every term once; per query hold REFERENCES to the shared
-    (idx, contrib) arrays, then finalize one query at a time with a
-    transient bincount (accumulation order = the fixed global term
-    order, so float sums are bit-identical to the single-query
-    exhaustive scorer's). ``rows`` are (ub_max, tid, row, ub_blocks)
-    already sorted by (-ub_max, tid); ``allowed`` is an optional boolean
-    mask (applied BEFORE the per-query top-k cut — found r2). Returns a
-    list of per-query ``(query_id, doc_ids, scores)`` array triples.
-    Shared by ``search_many``'s executor-side scorer and the
-    ``warm_local`` driver-side batch path so the two can never
-    diverge."""
+                       k: int, decode) -> list:
+    """Sparse shared-impact TAAT over ONE docId-range: take every term's
+    impacts once (``decode``, the ``_impacts`` seam); per query hold
+    REFERENCES to the shared (idx, contrib) arrays, then finalize one
+    query at a time with a transient bincount (accumulation order = the
+    fixed global term order, so float sums are bit-identical to the
+    single-query exhaustive scorer's); its candidates are the nonzero
+    bins of an unweighted bincount — sorted like ``np.unique``, in O(n).
+    ``rows`` are (ub_max, tid, row, ub_blocks) sorted by (-ub_max, tid);
+    ``allowed`` is an optional boolean mask (applied BEFORE the per-query
+    top-k cut — found r2). Returns per-query ``(query_id, doc_ids,
+    scores)`` triples. Shared by ``search_many``'s executor-side scorer
+    and the ``warm_local`` batch path so the two can never diverge."""
     hits: dict[str, list] = {}
     for _, tid_v, r, _ in rows:
-        idf = idfs[tid_v]
-        d, tf, dl = decode(base, r, keep=None)
-        tf = tf.astype(np.float64)
-        dl = dl.astype(np.float64)
-        tfn = tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dl / avgdl))
-        idx = (d - np.uint64(base)).astype(np.int64)
-        contrib = idf * tfn
+        idx, tfn = decode(base, r)
+        contrib = idfs[tid_v] * tfn
         if allowed is not None:
             m = allowed[idx]
             idx, contrib = idx[m], contrib[m]
@@ -275,35 +297,37 @@ def _shared_taat_range(rows, base: int, allowed, idfs: dict, by_tid: dict,
             hits.setdefault(qid, []).append((idx, contrib))
     out = []
     for qid, parts in hits.items():
-        if len(parts) == 1:
-            cat_idx, cat_c = parts[0]
-        else:
-            cat_idx = np.concatenate([p[0] for p in parts])
-            cat_c = np.concatenate([p[1] for p in parts])
-        S = np.bincount(cat_idx, weights=cat_c)
-        uniq = np.unique(cat_idx)
+        cat_idx = _cat([p[0] for p in parts])
+        S = np.bincount(cat_idx, weights=_cat([p[1] for p in parts]))
+        uniq = np.flatnonzero(np.bincount(cat_idx))
         fidx, scores = _cut_topk(uniq, S[uniq], k)
         out.append((qid, base + fidx, scores))
     return out
+
+
+def _cat(arrays: list) -> np.ndarray:
+    """``np.concatenate`` that hands a lone array back uncopied (cached
+    impacts are shared and never mutated)."""
+    return arrays[0] if len(arrays) == 1 else np.concatenate(arrays)
 
 
 def _ranked_rows(recs, idfs: dict, k1: float, b: float, avgdl: float) -> list:
     """One range's posting records as ``(ub_max, tid, rec, ub_blocks)``
     in the fixed processing order every scorer uses.
 
-    ``ub_blocks`` is the per-block BM25 upper bound (idf x tfnorm
-    bound). (-ub, tid, first docId) is a TOTAL order over the range's
-    records, so summation order — and thus every float score — is the
-    same in every execution, which cursor paging's exact score-equality
-    test requires. The first-docId tiebreak matters when a range holds
-    TWO records for one term (non-aligned direct appends share ranges):
-    (-ub, tid) alone left their order to shuffle arrival (r5 review)."""
+    ``ub_blocks`` is the per-block BM25 upper bound (idf x the tf-norm
+    of the block's max tf and min dl). (-ub, tid, first docId) is a
+    TOTAL order over the range's records, so summation order — and thus
+    every float score — is the same in every execution, which cursor
+    paging's exact score-equality test requires. The first-docId
+    tiebreak matters when a range holds TWO records for one term
+    (non-aligned direct appends share ranges): (-ub, tid) alone left
+    their order to shuffle arrival (r5 review)."""
     rows = []
     for r in recs:
         tid = int(r.tid)
-        ub_blocks = idfs[tid] * _tfnorm_bound(
-            np.asarray(r.block_max_tf), np.asarray(r.block_min_dl), k1, b, avgdl
-        )
+        ub_blocks = idfs[tid] * _tfnorm(r.block_max_tf, r.block_min_dl,
+                                        k1, b, avgdl)
         rows.append((float(ub_blocks.max()), tid, r, ub_blocks))
     rows.sort(key=lambda x: (
         -x[0], x[1], int(x[2].block_first[0]) if len(x[2].block_first) else -1,
@@ -382,17 +406,9 @@ def _cut_topk(idx: np.ndarray, scores: np.ndarray, k: int):
     return idx[order], scores[order]
 
 
-def _tfnorm_bound(max_tf, min_dl, k1: float, b: float, avgdl: float):
-    """Upper bound of tfnorm for any posting with tf<=max_tf, dl>=min_dl
-    (monotone increasing in tf, decreasing in dl — valid for any avgdl)."""
-    mt = np.asarray(max_tf, dtype=np.float64)
-    md = np.asarray(min_dl, dtype=np.float64)
-    return mt * (k1 + 1.0) / (mt + k1 * (1.0 - b + b * md / avgdl))
-
-
 def _range_kernel(idfs: dict, k1: float, b: float, avgdl: float, k: int,
                   range_size: int, prune: bool,
-                  after: tuple[float, int] | None = None, decode=_decode_row):
+                  after: tuple[float, int] | None = None, decode=None):
     """Build the per-range BM25 kernel ``kernel(recs, base, mask) ->
     (doc_ids, scores)``: top-k of one docId-range over an iterable of
     posting records (anything with the postings columns as attributes —
@@ -411,8 +427,10 @@ def _range_kernel(idfs: dict, k1: float, b: float, avgdl: float, k: int,
     addition is then performed in an execution-independent order, so a
     page-2 run reproduces page-1's scores bit-for-bit (ADVICE r2: the
     previous input-order sort made cursor equality depend on shuffle
-    arrival order)."""
+    arrival order). ``decode``: the warm_local impacts cache, or None
+    (both go through ``_impacts``)."""
     assert not (prune and after is not None)
+    decode = _impacts(k1, b, avgdl, decode)
 
     def kernel(recs, base: int, mask):
         rows = _ranked_rows(recs, idfs, k1, b, avgdl)
@@ -437,14 +455,10 @@ def _range_kernel(idfs: dict, k1: float, b: float, avgdl: float, k: int,
                 # all kept blocks of this term decode in ONE vectorized
                 # pass (theta only updates per TERM, so this is WAND-
                 # identical to the old per-block loop)
-                d, tf, dl = decode(
+                idx, tfn = decode(
                     base, r,
                     keep=None if keep.all() else np.flatnonzero(keep),
                 )
-                tf = tf.astype(np.float64)
-                dl = dl.astype(np.float64)
-                tfn = tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dl / avgdl))
-                idx = (d - np.uint64(base)).astype(np.int64)
                 if mask is not None:
                     m = mask[idx]
                     idx, tfn = idx[m], tfn[m]
@@ -693,6 +707,7 @@ class SearchIndex:
         self._local: dict | None = None
         self._local_budget: int = 256 << 20
         self._warmed: dict | None = None  # warm() args, replayed by refresh()
+        self._empty_frames: dict = {}  # schema -> empty frame (``_empty``)
 
     # -- paths ----------------------------------------------------------
     def _union_read(self, sub: str) -> DataFrame:
@@ -927,11 +942,12 @@ class SearchIndex:
         evaluated by Spark against a LocalRelation copy of docstats,
         built on its first need (~20 ms first use).
 
-        ``decode_cache_bytes`` bounds the decoded-postings LRU
+        ``decode_cache_bytes`` bounds the impacts LRU
         (``_DecodedPostingsCache``) the local kernels consult before
-        VByte-decoding a posting row; default 4x ``max_bytes`` — decoded
-        arrays are ~24 B/posting vs ~4-8 B on disk, so that admits the
-        whole working set of a budget-sized index. 0 disables it.
+        VByte-decoding a posting row and computing its tf-norms; default
+        4x ``max_bytes`` — cached impacts are ~16 B/posting vs ~4-8 B on
+        disk, so that admits the whole working set of a budget-sized
+        index. 0 disables it (every call decodes).
 
         Snapshot semantics like ``warm(cache_postings=True)``: deletes /
         merges landing after warm_local are not visible — call
@@ -978,13 +994,14 @@ class SearchIndex:
             # field-column tuple -> {range_id: {column: live-doc values}}
             # (the gated kernel's side data)
             "live_sides": {},
-            # decoded-postings LRU consulted by the local kernels; valid
-            # for this snapshot's lifetime (postings are immutable within
-            # a meta generation — tombstone-only refresh keeps it)
+            # impacts LRU consulted by the local kernels; valid for this
+            # snapshot's lifetime (postings and avgdl are fixed within a
+            # meta generation — tombstone-only refresh keeps it)
             "decoded": (
                 _DecodedPostingsCache(
                     4 * max_bytes if decode_cache_bytes is None
-                    else decode_cache_bytes
+                    else decode_cache_bytes,
+                    self.k1, self.b, self.avgdl,
                 )
                 if (decode_cache_bytes is None or decode_cache_bytes > 0)
                 else None
@@ -1031,11 +1048,20 @@ class SearchIndex:
                                  _SCORE_SCHEMA_T)
 
     def _local_frame(self, cols: dict, schema) -> DataFrame:
-        """LocalRelation over driver-side result arrays — the one pandas
-        frame of a DataFrame-returning warm_local call (zero jobs)."""
+        """LocalRelation over driver-side result arrays (zero jobs), from
+        a ``pyarrow.Table`` — no pandas frame; ``schema`` fixes every type
+        and nullable flag."""
         if not len(cols["doc_id"]):
-            return empty_df(self.spark, schema)
-        return self.spark.createDataFrame(pd.DataFrame(cols), schema)
+            return self._empty(schema)
+        return self.spark.createDataFrame(pa.table(cols), schema)
+
+    def _empty(self, schema) -> DataFrame:
+        """One job-free empty frame per ``schema``: an ``empty_df`` costs
+        ~15 ms of py4j, which every no-hit warm query (a typo) paid."""
+        df = self._empty_frames.get(schema)
+        if df is None:
+            df = self._empty_frames[schema] = empty_df(self.spark, schema)
+        return df
 
     def search_rows(
         self,
@@ -1097,7 +1123,7 @@ class SearchIndex:
         kernel = _range_kernel(
             idfs, self.k1, self.b, self.avgdl, k, self.range_size,
             prune=(mode == "wand" and after is None), after=after,
-            decode=self._local["decoded"] or _decode_row,
+            decode=self._local["decoded"],
         )
         hits = [kernel(recs, base, mask) for base, recs, mask in
                 self._local_ranges(idfs, self._local_allowed_of(doc_filter))]
@@ -1197,16 +1223,16 @@ class SearchIndex:
         Spark job; past the warm_local budget the cluster batch is the
         only path, unchanged."""
         k1, b, avgdl = self.k1, self.b, self.avgdl
-        decode = self._local["decoded"] or _decode_row
+        decode = _impacts(k1, b, avgdl, self._local["decoded"])
         parts = []
         for base, recs, mask in self._local_ranges(
                 idfs, self._local_allowed_of(doc_filter)):
             parts.extend(_shared_taat_range(
                 _ranked_rows(recs, idfs, k1, b, avgdl), base, mask, idfs,
-                by_tid, k1, b, avgdl, k, decode=decode,
+                by_tid, k, decode,
             ))
         if not parts:
-            return empty_df(self.spark, _QSCORE_SCHEMA_T)
+            return self._empty(_QSCORE_SCHEMA_T)
         q, d, s = _topk_per_query(parts, k)
         return self._local_frame({"query_id": q, "doc_id": d, "score": s},
                                  _QSCORE_SCHEMA_T)
@@ -1374,7 +1400,7 @@ class SearchIndex:
         dfs = self.lookup(terms)
         spark = self.spark
         if not dfs:
-            return empty_df(spark, _SCORE_SCHEMA_T)
+            return self._empty(_SCORE_SCHEMA_T)
 
         n = self.n_docs
         boosts = boosts or {}
@@ -1486,7 +1512,7 @@ class SearchIndex:
             # a scoring expansion that matched ZERO dictionary terms:
             # Lucene's rewritten empty BooleanQuery matches nothing —
             # routing to match_all would invert the semantics
-            return empty_df(self.spark, _SCORE_SCHEMA_T)
+            return self._empty(_SCORE_SCHEMA_T)
         # filter-only: MUST terms, MUST groups and '+' expansions all
         # score, so the only gates left are phrases and exclusions (a doc
         # is excluded iff it holds ANY MUST_NOT term or group/expansion
@@ -1633,7 +1659,7 @@ class SearchIndex:
         scored = self._phrase_ranges({"q": query}, k, slop, doc_filter,
                                      filter_selectivity)
         if scored is None:
-            return empty_df(self.spark, _SCORE_SCHEMA_T)
+            return self._empty(_SCORE_SCHEMA_T)
         return _top_k(scored[0].select("doc_id", "score"), k)
 
     def _terms_table(self) -> DataFrame:
@@ -1720,7 +1746,7 @@ class SearchIndex:
 
     def _search_expanded(self, terms: list[str], k: int) -> DataFrame:
         if not terms:
-            return empty_df(self.spark, _SCORE_SCHEMA_T)
+            return self._empty(_SCORE_SCHEMA_T)
         return self.search(" ".join(terms), k=k)
 
     def search_prefix(self, prefix: str, k: int = 10, limit: int = 1024) -> DataFrame:
@@ -1843,7 +1869,7 @@ class SearchIndex:
         all_terms = sorted({t for q in queries.values() for t in tokenize_py(q)})
         dfs = self.lookup(all_terms)
         if not dfs:
-            return empty_df(self.spark, _QSCORE_SCHEMA_T)
+            return self._empty(_QSCORE_SCHEMA_T)
         n, avgdl, k1, b = self.n_docs, self.avgdl, self.k1, self.b
         idfs = {term_id(t): log(1.0 + (n - df_ + 0.5) / (df_ + 0.5)) for t, df_ in dfs.items()}
         # query_id -> {tid} for terms present in the index
@@ -1853,7 +1879,7 @@ class SearchIndex:
         }
         qterms = {qid: ts for qid, ts in qterms.items() if ts}
         if not qterms:
-            return empty_df(self.spark, _QSCORE_SCHEMA_T)
+            return self._empty(_QSCORE_SCHEMA_T)
         by_tid: dict[int, list[str]] = {}
         for qid, ts in qterms.items():
             for t in ts:
@@ -1868,6 +1894,7 @@ class SearchIndex:
         prune_min = (_BATCH_PRUNE_MIN_POSTINGS if prune_min_postings is None
                      else prune_min_postings)
         n_queries = len(qterms)
+        decode = _impacts(k1, b, avgdl)
 
         def _wand(rows, base, allowed):
             """Per-query block-max pruning over the shared decode (see
@@ -1909,14 +1936,9 @@ class SearchIndex:
                 elif not union_keep.any():
                     continue
                 kept_idx = np.flatnonzero(union_keep)
-                d, tf, dl = unpack_blocks(
-                    r.blob, r.block_off, r.block_n, r.block_first,
-                    keep=None if union_keep.all() else kept_idx,
+                idx, tfn = decode(
+                    base, r, keep=None if union_keep.all() else kept_idx,
                 )
-                tf = tf.astype(np.float64)
-                dl = dl.astype(np.float64)
-                tfn = tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dl / avgdl))
-                idx = (d - np.uint64(base)).astype(np.int64)
                 contrib = idf * tfn
                 live = None
                 if allowed is not None:
@@ -1972,7 +1994,7 @@ class SearchIndex:
                     and n_queries <= _BATCH_PRUNE_MAX_QUERIES):
                 return _qframe(_wand(rows, base, allowed))
             return _qframe(_shared_taat_range(
-                rows, base, allowed, idfs, by_tid, k1, b, avgdl, k
+                rows, base, allowed, idfs, by_tid, k, decode
             ))
 
         postings = self._postings().filter(
@@ -2007,7 +2029,7 @@ class SearchIndex:
         scored = self._phrase_ranges(queries, k, slop, doc_filter,
                                      filter_selectivity)
         if scored is None:
-            return empty_df(self.spark, _QSCORE_SCHEMA_T)
+            return self._empty(_QSCORE_SCHEMA_T)
         return self._reduce_per_query(*scored, k)
 
     def _phrase_ranges(self, queries: dict[str, str], k: int, slop: int,
@@ -2066,10 +2088,8 @@ class SearchIndex:
                 # dl lookup from term_0's doc list
                 d0, dl0 = per_tid[instances[0][0]][0], per_tid[instances[0][0]][1]
                 order0 = np.argsort(d0)
-                dl = dl0[order0[np.searchsorted(d0[order0], hit_docs)]].astype(np.float64)
-                f = freqs.astype(np.float64)
-                tfn = f * (k1 + 1.0) / (f + k1 * (1.0 - b + b * dl / avgdl))
-                scores = idf_sum * tfn
+                dl = dl0[order0[np.searchsorted(d0[order0], hit_docs)]]
+                scores = idf_sum * _tfnorm(freqs, dl, k1, b, avgdl)
                 idx, scores = _cut_topk(hit_docs, scores, k)
                 out.append((qid, base + idx, scores))
             return _qframe(out)
@@ -2155,7 +2175,7 @@ class SearchIndex:
                 )
             )
         if not parts:
-            return empty_df(self.spark, _QSCORE_SCHEMA_T)
+            return self._empty(_QSCORE_SCHEMA_T)
         if len(parts) == 1 and not fallback:
             # the batch KERNELS already emit the contract order
             # (query_id, score desc, doc_id asc) — no re-sort needed. A
@@ -2321,7 +2341,7 @@ class SearchIndex:
             for _, tids, _ in plan["phrases"] + plan["not_phrases"]:
                 pos_tids.update(tids)
         if not plans:
-            return empty_df(spark, _SCORE_SCHEMA_T if single else _QSCORE_SCHEMA_T)
+            return self._empty(_SCORE_SCHEMA_T if single else _QSCORE_SCHEMA_T)
 
         decode_tids = scoring_tids | gate_tids
         all_tids = sorted(decode_tids | pos_tids)
@@ -2330,7 +2350,9 @@ class SearchIndex:
             | {f for p in plans.values() for f, _, _, _ in p["ranges"]}
         )
 
-        def gated_range(recs, base, live, side, decode=_decode_row):
+        decode = _impacts(k1, b, avgdl, (self._local or {}).get("decoded"))
+
+        def gated_range(recs, base, live, side):
             """The gated batch's range kernel: per-query ``(query_id,
             doc_ids, scores)`` triples for one docId-range. ``live`` is
             the range's boolean liveness mask (None: every doc is live);
@@ -2390,7 +2412,7 @@ class SearchIndex:
                     fmask_cache[key_] = m
                 return m
 
-            # shared decode: ids for gate terms, ids+tfn for scored
+            # shared impacts: ids for gate terms, ids+tfn for scored
             # terms, positional streams for phrase terms. A range can
             # hold SEVERAL records per term (a direct build_index append
             # at a non-range-aligned offset shares a range) — plain
@@ -2413,27 +2435,13 @@ class SearchIndex:
                 if len(rs) > 1:
                     rs.sort(key=lambda r: (int(r.block_first[0])
                                            if len(r.block_first) else -1))
-                parts_i, parts_t, ub = [], [], 0.0
-                for r in rs:
-                    d, tf, dl = decode(base, r, keep=None)
-                    parts_i.append((d - np.uint64(base)).astype(np.int64))
-                    if tid in scoring_tids:
-                        tf = tf.astype(np.float64)
-                        dl = dl.astype(np.float64)
-                        parts_t.append(tf * (k1 + 1.0) / (
-                            tf + k1 * (1.0 - b + b * dl / avgdl)
-                        ))
-                        ub = max(ub, float(_tfnorm_bound(
-                            np.asarray(r.block_max_tf),
-                            np.asarray(r.block_min_dl),
-                            k1, b, avgdl,
-                        ).max()))
-                idx_of[tid] = (parts_i[0] if len(parts_i) == 1
-                               else np.concatenate(parts_i))
+                imp = [decode(base, r) for r in rs]
+                idx_of[tid] = _cat([i for i, _ in imp])
                 if tid in scoring_tids:
-                    tfn_of[tid] = (parts_t[0] if len(parts_t) == 1
-                                   else np.concatenate(parts_t))
-                    ubmax_of[tid] = ub
+                    tfn_of[tid] = _cat([t for _, t in imp])
+                    ubmax_of[tid] = max(float(_tfnorm(
+                        r.block_max_tf, r.block_min_dl, k1, b, avgdl,
+                    ).max()) for r in rs)
             per_tid_pos = (_decode_positional_range(pos_recs, base)
                            if pos_recs else {})
 
@@ -2467,7 +2475,7 @@ class SearchIndex:
                     if not pres:
                         dead_q = True
                         break
-                    m = member(np.concatenate(pres) if len(pres) > 1 else pres[0])
+                    m = member(_cat(pres))
                     g = m if g is None else (g & m)
                 if dead_q:
                     continue
@@ -2528,16 +2536,10 @@ class SearchIndex:
                 # the query's OWN summation order: (-boosted ub, tid) —
                 # matches the single-query exhaustive scorer bit-for-bit
                 pres.sort(key=lambda t: (-(qidf[t] * ubmax_of[t]), t))
-                if len(pres) == 1:
-                    cat_idx = idx_of[pres[0]]
-                    cat_c = qidf[pres[0]] * tfn_of[pres[0]]
-                else:
-                    cat_idx = np.concatenate([idx_of[t] for t in pres])
-                    cat_c = np.concatenate(
-                        [qidf[t] * tfn_of[t] for t in pres]
-                    )
-                S = np.bincount(cat_idx, weights=cat_c)
-                uniq = np.unique(cat_idx)
+                cat_idx = _cat([idx_of[t] for t in pres])
+                S = np.bincount(cat_idx, weights=_cat(
+                    [qidf[t] * tfn_of[t] for t in pres]))
+                uniq = np.flatnonzero(np.bincount(cat_idx))
                 if g is not None:
                     uniq = uniq[g[uniq]]
                 if uniq.size == 0:
@@ -2556,16 +2558,15 @@ class SearchIndex:
             # clauses, else the dead set (inverted), mirroring the
             # cluster cogroup sides below.
             sides = self._local_live_sides(field_cols) if field_cols else None
-            decode = loc["decoded"] or _decode_row
             parts = []
             allowed_of = (None if sides is None else
                           {rid: side["doc_id"] for rid, side in sides.items()})
             for base, recs, live in self._local_ranges(all_tids, allowed_of):
                 side = None if sides is None else sides[base // range_size]
-                parts.extend(gated_range(recs, base, live, side, decode))
+                parts.extend(gated_range(recs, base, live, side))
             schema = _SCORE_SCHEMA_T if single else _QSCORE_SCHEMA_T
             if not parts:
-                return empty_df(spark, schema)
+                return self._empty(schema)
             q, d, s = _topk_per_query(parts, k)
             cols = {"doc_id": d, "score": s}
             return self._local_frame(cols if single else {"query_id": q, **cols},
@@ -2857,7 +2858,7 @@ class SearchIndex:
             )
         sel = order[mask[order]][:k]
         if not sel.size:
-            return empty_df(self.spark, schema)
+            return self._empty(schema)
         return self.spark.createDataFrame(
             pdf.iloc[sel].reset_index(drop=True), schema
         )

@@ -167,65 +167,94 @@ def test_vbyte_corruption_raises_descriptive_error():
 
 
 def test_decoded_postings_cache_slice_identity_and_budget():
-    """_DecodedPostingsCache gathers kept blocks from the cached FULL
-    decode; must be value-identical to unpack_blocks(keep=...) for any
-    keep subset, and the LRU must respect its byte budget (oversized
-    rows decode per-call instead of evicting the whole cache)."""
+    """_DecodedPostingsCache caches each row's impacts and gathers kept
+    blocks from the cached FULL row; for any keep subset the (idx, tfn)
+    it returns must equal the tf-norm helper applied to
+    unpack_blocks(keep=...), and the LRU must respect its byte budget
+    (oversized rows decode per-call instead of evicting the whole
+    cache)."""
     from types import SimpleNamespace
 
     from dbsyncer_spark.index.codec import pack_postings, unpack_blocks
-    from dbsyncer_spark.index.search import _DecodedPostingsCache
+    from dbsyncer_spark.index.search import _DecodedPostingsCache, _tfnorm
 
     rng = np.random.default_rng(7)
+    k1, b, avgdl = 1.2, 0.75, 87.5
+    base = 1 << 16
 
     def row(tid, n):
         ids = np.sort(rng.choice(200_000, size=n, replace=False)).astype(np.uint64)
         tfs = rng.integers(1, 30, size=n).astype(np.uint64)
         dls = rng.integers(1, 500, size=n).astype(np.uint64)
-        p = pack_postings(ids, tfs, dls, block_size=64)
+        p = pack_postings(ids + np.uint64(base), tfs, dls, block_size=64)
         return SimpleNamespace(
             tid=tid, blob=p["blob"], block_off=p["block_off"],
             block_n=p["block_n"], block_first=p["block_first"],
         )
 
+    def impacts(r, keep=None):
+        d, tf, dl = unpack_blocks(r.blob, r.block_off, r.block_n,
+                                  r.block_first, keep=keep)
+        return ((d - np.uint64(base)).astype(np.int64),
+                _tfnorm(tf, dl, k1, b, avgdl))
+
+    def same(want, got):
+        assert got[0].dtype == np.int64 and got[1].dtype == np.float64
+        return all(w.tolist() == g.tolist() for w, g in zip(want, got))
+
     r = row(1, 1000)
-    cache = _DecodedPostingsCache(1 << 20)
+    cache = _DecodedPostingsCache(1 << 20, k1, b, avgdl)
+    assert cache.params == (k1, b, avgdl)
     nb = len(r.block_n)
     for keep in (None, np.arange(nb), np.array([0]), np.array([nb - 1]),
                  np.flatnonzero(rng.random(nb) < 0.4)):
-        want = unpack_blocks(r.blob, r.block_off, r.block_n, r.block_first,
-                             keep=keep)
-        got = cache(0, r, keep=keep)
-        for w, g in zip(want, got):
-            assert w.tolist() == g.tolist(), keep
+        assert same(impacts(r, keep), cache(base, r, keep=keep)), keep
     assert len(cache._rows) == 1 and 0 < cache._bytes <= cache.max_bytes
+    # idx (8 B) + tfn (8 B) per posting, plus the block offsets
+    assert cache._bytes == 16 * 1000 + 8 * (nb + 1)
 
     # LRU eviction: budget for ~2 rows; insert 3, oldest falls out,
     # bytes stay within budget at every step
     one_row_bytes = cache._bytes
-    small = _DecodedPostingsCache(int(one_row_bytes * 2.5))
+    small = _DecodedPostingsCache(int(one_row_bytes * 2.5), k1, b, avgdl)
     rows = [row(t, 1000) for t in (1, 2, 3)]
     for rr in rows:
-        small(0, rr)
+        small(base, rr)
         assert small._bytes <= small.max_bytes
     # cache keys carry (base, tid, first docId, blob len) since the
     # range-straddling fix — match on the tid component
     cached_tids = {k[1] for k in small._rows}
     assert 1 not in cached_tids and 3 in cached_tids
     # re-touching keeps results correct after eviction
-    want = unpack_blocks(rows[0].blob, rows[0].block_off, rows[0].block_n,
-                         rows[0].block_first)
-    got = small(0, rows[0])
-    assert want[0].tolist() == got[0].tolist()
+    assert same(impacts(rows[0]), small(base, rows[0]))
 
     # a row bigger than the whole budget is served uncached
-    tiny = _DecodedPostingsCache(128)
-    tiny(0, r)
+    tiny = _DecodedPostingsCache(128, k1, b, avgdl)
+    tiny(base, r)
     assert len(tiny._rows) == 0 and tiny._bytes == 0
-    got = tiny(0, r, keep=np.array([0]))
-    want = unpack_blocks(r.blob, r.block_off, r.block_n, r.block_first,
-                         keep=np.array([0]))
-    assert want[0].tolist() == got[0].tolist()
+    keep = np.array([0])
+    assert same(impacts(r, keep), tiny(base, r, keep=keep))
+
+
+def test_impacts_refuse_other_bm25_params():
+    """A kernel must never score from impacts computed with other
+    (k1, b, avgdl): handing a cache built for other params to the seam,
+    or to a kernel through it, raises ValueError."""
+    import pytest
+
+    from dbsyncer_spark.index.search import (
+        _DecodedPostingsCache, _impacts, _range_kernel,
+    )
+
+    k1, b, avgdl = 1.2, 0.75, 87.5
+    cache = _DecodedPostingsCache(1 << 20, k1, b, avgdl)
+    assert _impacts(k1, b, avgdl, cache) is cache
+    for other in ((k1, b, avgdl * 2), (2.0, b, avgdl), (k1, 0.5, avgdl)):
+        with pytest.raises(ValueError, match="cached impacts"):
+            _impacts(*other, cache)
+        with pytest.raises(ValueError, match="cached impacts"):
+            _range_kernel({1: 1.0}, *other, 10, 256, prune=True,
+                          decode=cache)
 
 
 def test_vbyte_truncation_edges_raise():

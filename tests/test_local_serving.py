@@ -357,7 +357,9 @@ def test_decode_cache_populated_and_bounded(pair):
 def test_decode_cache_disabled_identity(spark, pair, corpus,
                                         tmp_path_factory):
     """decode_cache_bytes=0 disables the LRU; results stay identical
-    (the seam degrades to plain unpack_blocks)."""
+    (the seam degrades to impacts computed per call) for single queries,
+    batches and parsed queries: cache on, cache off and the cluster path
+    agree exactly."""
     cold, hot = pair
     off = SearchIndex(spark, hot.index_dir)
     off.warm_local(decode_cache_bytes=0)
@@ -370,6 +372,89 @@ def test_decode_cache_disabled_identity(spark, pair, corpus,
             kw["doc_filter"] = F.col(col) == val
         want = _rows(cold.search(q, k=k, mode=mode, **kw))
         assert off.search_rows(q, k=k, mode=mode, **kw) == want, spec
+    batch = {"q1": "merge scan", "q2": "offset shard token",
+             "q3": "getconfig", "miss": "zzzqx"}
+    for flt in (None, F.col("lang") == "python"):
+        want = [tuple(r) for r in
+                cold.search_many(batch, k=7, doc_filter=flt).collect()]
+        assert want, flt
+        for idx in (hot, off):
+            got = [tuple(r) for r in
+                   idx.search_many(batch, k=7, doc_filter=flt).collect()]
+            assert got == want, flt
+    for q in ("merge +scan lang:python", "merge^2.5 offset scan^0.5",
+              "(merge OR offset) AND scan", "offset -(sync OR shard)",
+              "merge scan"):
+        want = _rows(cold.search_parsed(q, k=10))
+        assert want, q
+        assert _rows(hot.search_parsed(q, k=10)) == want, q
+        assert _rows(off.search_parsed(q, k=10)) == want, q
+
+
+def test_forced_batch_wand_matches_taat(pair):
+    """search_many's per-query WAND (forced on the cluster with
+    prune_min_postings=0) and its shared TAAT (the default at this size,
+    and the warm_local kernel over cached impacts) return the same rows
+    and exact scores, with and without a batch-wide filter."""
+    cold, hot = pair
+    batch = {"q1": "merge scan", "q2": "offset shard token",
+             "q3": "merge offset import return", "q4": "getconfig"}
+    for flt in (None, F.col("lang") == "python"):
+        wand = [tuple(r) for r in cold.search_many(
+            batch, k=5, prune_min_postings=0, doc_filter=flt).collect()]
+        taat = [tuple(r) for r in cold.search_many(
+            batch, k=5, prune_min_postings=1 << 62, doc_filter=flt).collect()]
+        local = [tuple(r) for r in
+                 hot.search_many(batch, k=5, doc_filter=flt).collect()]
+        assert wand and wand == taat == local, flt
+
+
+def test_local_frames_keep_result_schema(pair):
+    """warm_local results are LocalRelations built from arrow tables;
+    each keeps its result StructType, nullable flags included."""
+    from dbsyncer_spark.index.search import _QSCORE_SCHEMA_T, _SCORE_SCHEMA_T
+
+    _, hot = pair
+    assert hot.search("merge scan", k=5).schema == _SCORE_SCHEMA_T
+    assert hot.search_parsed("merge +scan", k=5).schema == _SCORE_SCHEMA_T
+    assert hot.search_many({"a": "merge", "b": "offset scan"},
+                           k=5).schema == _QSCORE_SCHEMA_T
+
+
+def test_local_empty_results_reuse_one_frame(spark, pair, monkeypatch):
+    """A no-hit warm_local query (a typo) returns a cached empty frame of
+    the right schema: no Spark job, and no second frame is built for a
+    schema already served."""
+    import dbsyncer_spark.index.search as search_mod
+
+    _, hot = pair
+    built = []
+
+    def counting_empty_df(spark_, schema):
+        built.append(schema)
+        return search_mod_empty_df(spark_, schema)
+
+    search_mod_empty_df = search_mod.empty_df
+    monkeypatch.setattr(search_mod, "empty_df", counting_empty_df)
+    calls = [
+        lambda: hot.search_parsed("zzzqx", k=5),
+        lambda: hot.search_parsed("merge +zzzqqqx", k=5),
+        lambda: hot.search_many({"a": "zzzqx", "b": "qqzzx"}, k=5),
+        lambda: hot.search_many_parsed({"a": "merge +zzzqqqx"}, k=5),
+    ]
+    first = [f() for f in calls]  # may build (at most) one frame per schema
+    n_built = len(built)
+    assert n_built <= 2
+    with zero_spark_jobs(spark, "empty_frame_gate"):
+        for f, df0 in zip(calls, first):
+            df = f()
+            assert df is df0
+            assert df.collect() == []
+    assert len(built) == n_built
+    assert [f.name for f in first[0].schema.fields] == ["doc_id", "score"]
+    assert first[2].schema == first[3].schema
+    assert [f.name for f in first[2].schema.fields] == [
+        "query_id", "doc_id", "score"]
 
 
 def test_decode_cache_survives_tombstone_refresh(spark, corpus,

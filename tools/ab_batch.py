@@ -43,7 +43,7 @@ def main() -> None:
     from dbsyncer_spark.index.search import SearchIndex
     from dbsyncer_spark.session import get_spark, warm_python_workers
 
-    spark = get_spark("ab_batch", cpus=32)
+    spark = get_spark("ab_batch")  # cpus: $SPARK_GRAFT_CPUS, else 32
     base = "/dev/shm" if os.path.isdir("/dev/shm") else "/tmp"
     idx_dir = os.path.join(base, f"ab_bench_idx_{args.docs}")
     if args.rebuild:
