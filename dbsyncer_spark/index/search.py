@@ -240,9 +240,8 @@ class _DecodedPostingsCache:
                len(r.blob))
         hit = self._rows.get(key)
         if hit is None:
-            bn = np.asarray(r.block_n, dtype=np.int64)
-            p0 = np.zeros(bn.size + 1, dtype=np.int64)
-            np.cumsum(bn, out=p0[1:])
+            # p0: each block's first posting offset, then the total
+            p0 = np.concatenate(([0], np.cumsum(r.block_n, dtype=np.int64)))
             hit = (*self._decode(base, r), p0)
             cost = sum(a.nbytes for a in hit)
             if cost <= self.max_bytes:
@@ -408,7 +407,7 @@ def _cut_topk(idx: np.ndarray, scores: np.ndarray, k: int):
 
 def _range_kernel(idfs: dict, k1: float, b: float, avgdl: float, k: int,
                   range_size: int, prune: bool,
-                  after: tuple[float, int] | None = None, decode=None):
+                  after: tuple[float, int] | None = None, cache=None):
     """Build the per-range BM25 kernel ``kernel(recs, base, mask) ->
     (doc_ids, scores)``: top-k of one docId-range over an iterable of
     posting records (anything with the postings columns as attributes —
@@ -427,10 +426,10 @@ def _range_kernel(idfs: dict, k1: float, b: float, avgdl: float, k: int,
     addition is then performed in an execution-independent order, so a
     page-2 run reproduces page-1's scores bit-for-bit (ADVICE r2: the
     previous input-order sort made cursor equality depend on shuffle
-    arrival order). ``decode``: the warm_local impacts cache, or None
+    arrival order). ``cache``: the warm_local impacts cache, or None
     (both go through ``_impacts``)."""
     assert not (prune and after is not None)
-    decode = _impacts(k1, b, avgdl, decode)
+    decode = _impacts(k1, b, avgdl, cache)
 
     def kernel(recs, base: int, mask):
         rows = _ranked_rows(recs, idfs, k1, b, avgdl)
@@ -1123,7 +1122,7 @@ class SearchIndex:
         kernel = _range_kernel(
             idfs, self.k1, self.b, self.avgdl, k, self.range_size,
             prune=(mode == "wand" and after is None), after=after,
-            decode=self._local["decoded"],
+            cache=self._local["decoded"],
         )
         hits = [kernel(recs, base, mask) for base, recs, mask in
                 self._local_ranges(idfs, self._local_allowed_of(doc_filter))]
@@ -2350,7 +2349,8 @@ class SearchIndex:
             | {f for p in plans.values() for f, _, _, _ in p["ranges"]}
         )
 
-        decode = _impacts(k1, b, avgdl, (self._local or {}).get("decoded"))
+        loc = self._local
+        decode = _impacts(k1, b, avgdl, loc["decoded"] if loc else None)
 
         def gated_range(recs, base, live, side):
             """The gated batch's range kernel: per-query ``(query_id,
@@ -2548,7 +2548,6 @@ class SearchIndex:
                 out.append((qid, base + fidx, scores))
             return out
 
-        loc = self._local
         if loc is not None:
             # warm_local: the SAME range kernel driver-side over the
             # snapshot's records — zero Spark jobs for the whole gated

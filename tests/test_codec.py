@@ -254,7 +254,7 @@ def test_impacts_refuse_other_bm25_params():
             _impacts(*other, cache)
         with pytest.raises(ValueError, match="cached impacts"):
             _range_kernel({1: 1.0}, *other, 10, 256, prune=True,
-                          decode=cache)
+                          cache=cache)
 
 
 def test_vbyte_truncation_edges_raise():

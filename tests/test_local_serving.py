@@ -428,13 +428,12 @@ def test_local_empty_results_reuse_one_frame(spark, pair, monkeypatch):
     import dbsyncer_spark.index.search as search_mod
 
     _, hot = pair
-    built = []
+    built, real_empty_df = [], search_mod.empty_df
 
     def counting_empty_df(spark_, schema):
         built.append(schema)
-        return search_mod_empty_df(spark_, schema)
+        return real_empty_df(spark_, schema)
 
-    search_mod_empty_df = search_mod.empty_df
     monkeypatch.setattr(search_mod, "empty_df", counting_empty_df)
     calls = [
         lambda: hot.search_parsed("zzzqx", k=5),
