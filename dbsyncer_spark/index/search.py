@@ -1079,7 +1079,7 @@ class SearchIndex:
         records per range, the range kernel scores them, and one lexsort
         merges the ranges — no pandas on the path. At the 6,000-doc
         perfbench index (``serve_local``, 4 cores) a plain query costs
-        ~1.2 ms p50 (BASELINE.md, "Where the time goes"). ``search``
+        ~0.7 ms p50 (perfbench ``query_p50_ms``). ``search``
         wraps the identical result in a LocalRelation, whose create +
         collect py4j round trips cost more than the kernel. The
         reference's serving API
