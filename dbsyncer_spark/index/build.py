@@ -441,7 +441,18 @@ def postings_from_tf(
     )
 
 
-def build_index(
+def build_index(spark: SparkSession, docs: DataFrame, index_dir: str, **kwargs) -> dict:
+    """Build one index segment and publish it; returns the segment meta
+    dict. ``kwargs`` are ``_write_segment``'s (segment name, doc-id
+    offset, build params, resume, quarantine threshold). The publish is
+    ``publish_segment``, the same step appends and merges publish
+    through."""
+    seg_meta = _write_segment(spark, docs, index_dir, **kwargs)
+    publish_segment(index_dir, seg_meta["segment"], seg_meta)
+    return seg_meta
+
+
+def _write_segment(
     spark: SparkSession,
     docs: DataFrame,
     index_dir: str,
@@ -463,10 +474,12 @@ def build_index(
     max_content_bytes: int | None = None,
     id_offsets: dict[int, int] | None = None,
 ) -> dict:
-    """Build one index segment; returns the segment meta dict.
+    """Write one index segment's dir, unpublished; returns the segment
+    meta dict.
 
-    Deterministic: same (docs, params) -> byte-equivalent index. Resume:
-    committed stages are skipped (per-stage lineage manifests).
+    Deterministic: same (docs, params) -> row-identical index (parquet
+    footers may differ between JVM runs). Resume: committed stages are
+    skipped (per-stage lineage manifests).
 
     ``max_content_bytes``: rows with NULL or oversized content are
     diverted to ``<segment>/quarantine`` (keys + reason) instead of
@@ -726,8 +739,6 @@ def build_index(
     with open(os.path.join(seg_dir, "seg_meta.json"), "w") as f:
         json.dump(seg_meta, f, indent=2)
     commit_stage(seg_dir, "meta", phash, metrics=seg_meta)
-
-    _update_root_meta(index_dir, segment, seg_meta)
     return seg_meta
 
 
@@ -762,9 +773,10 @@ def write_dictionary(
 @_contextmanager
 def meta_lock(index_dir: str):
     """Advisory inter-process lock serializing root ``meta.json``
-    read-modify-writes. Every writer (append's root-meta update, the
-    streaming batch HWM, tiered merge, compaction) re-reads meta INSIDE
-    the lock before writing, so an out-of-band merge process running
+    read-modify-writes. Every writer (the claim, publish and abort of
+    ``segment_transaction``, the streaming batch HWM, the tombstone
+    generation flip, the retire purge) re-reads meta INSIDE the lock
+    before writing, so an out-of-band merge process running
     next to a streaming ingester can't clobber the other's update — the
     lost-segment / lost-HWM interleave found in the r3 review. Readers
     stay lock-free: they see either the old or the new meta via the
@@ -826,74 +838,6 @@ def read_meta_for_update(index_dir: str) -> dict | None:
     return load(index_dir)
 
 
-def _update_root_meta(index_dir: str, segment: str, seg_meta: dict) -> None:
-    with meta_lock(index_dir):
-        _update_root_meta_locked(index_dir, segment, seg_meta)
-
-
-def _update_root_meta_locked(index_dir: str, segment: str, seg_meta: dict) -> None:
-    meta = read_meta_for_update(index_dir) or {"segments": {}, "params": {}}
-    shared = {
-        k: seg_meta[k]
-        for k in (
-            "num_shards", "range_size", "block_size", "use_stopwords",
-            "k1", "b", "tokenizer", "store_positions", "num_id_buckets",
-        )
-        if k in seg_meta
-    }
-    if meta["params"]:
-        # params added after the index was built (e.g. num_id_buckets)
-        # are adopted on first publish rather than failing the compare —
-        # without publishing them here append_segment's inherit/conflict
-        # loop was dead code for those keys (r5 review)
-        legacy_missing = {k for k in shared if k not in meta["params"]}
-        comparable = {k: v for k, v in shared.items() if k not in legacy_missing}
-        if comparable != meta["params"]:
-            raise ValueError(
-                f"segment params mismatch: {shared} vs index {meta['params']}"
-            )
-        shared = {**meta["params"], **{k: shared[k] for k in legacy_missing}}
-    # doc ids must be globally unique across live segments (F15).
-    # ``append_segment`` claims its id space under the meta lock
-    # (``reserve_doc_range``) so concurrent appends compose; this guard
-    # turns any bypass (a direct ``build_index`` call with a hand-picked
-    # ``doc_id_offset`` racing another writer) into a loud error instead
-    # of corrupt ranges. Checked against BOTH committed segments and
-    # other writers' unexpired in-flight claims.
-    lo, hi = seg_meta["doc_id_offset"], seg_meta["max_doc_id"]
-    for name, s in meta["segments"].items():
-        if name != segment and not (hi < s["doc_id_offset"] or lo > s["max_doc_id"]):
-            raise ValueError(
-                f"segment {segment} doc-id range [{lo},{hi}] overlaps live "
-                f"segment {name} [{s['doc_id_offset']},{s['max_doc_id']}] — "
-                "claim id space via reserve_doc_range/append_segment"
-            )
-    _now = _time.time()
-    for name, r in meta.get("reserved_ranges", {}).items():
-        if _now - r.get("ts", _now) >= RESERVATION_TTL_S:
-            continue  # expired claim of a dead writer — reserve_doc_range
-            # would hand this space out again, so don't block it here
-        if name != segment and not (hi < r["lo"] or lo > r["hi"]):
-            raise ValueError(
-                f"segment {segment} doc-id range [{lo},{hi}] overlaps the "
-                f"in-flight claim of segment {name} [{r['lo']},{r['hi']}] — "
-                "claim id space via reserve_doc_range/append_segment"
-            )
-    meta["params"] = shared
-    meta["segments"][segment] = {
-        "n_docs": seg_meta["n_docs"],
-        "sum_dl": seg_meta["sum_dl"],
-        "doc_id_offset": seg_meta["doc_id_offset"],
-        "max_doc_id": seg_meta["max_doc_id"],
-    }
-    if segment in meta.get("reserved", {}):  # publish consumes the reservation
-        meta["reserved"] = {n: t for n, t in meta["reserved"].items() if n != segment}
-    if segment in meta.get("reserved_ranges", {}):  # ...and the id-space claim
-        meta["reserved_ranges"] = {
-            n: r for n, r in meta["reserved_ranges"].items() if n != segment}
-    atomic_write_meta(index_dir, meta)
-
-
 def write_meta_locked(index_dir: str, mutate) -> dict | None:
     """Re-read root meta INSIDE the meta lock, apply ``mutate`` (fresh
     meta dict -> new meta dict, or None to abort without writing), then
@@ -919,137 +863,213 @@ def write_meta_locked(index_dir: str, mutate) -> dict | None:
         return meta
 
 
-#: a reserved (in-flight merge/compaction/append output) segment name
-#: expires after this long — long enough for any real pack job, so a
-#: crashed run can't block its name forever.
+#: a claim (in-flight output name, doc-id range or tombstone-generation
+#: pin) expires after this long — long enough for any real pack job, so
+#: a crashed run can't block its name or id space forever.
 RESERVATION_TTL_S = 24 * 3600.0
 
+#: the root-meta keys holding claims, all keyed by output segment name
+_CLAIM_KEYS = ("reserved", "reserved_ranges", "tomb_pins")
 
-def reserve_segment_name(index_dir: str) -> str:
-    """Allocate the next auto segment name UNDER the meta lock and record
-    it in root meta's ``reserved`` (name -> walltime). Merge/compaction
-    output dirs AND auto-named appends allocate through here; picking the
-    name from an unlocked meta snapshot lets two concurrent writers (e.g.
-    an auto-named ``append_segment`` racing a ``maybe_merge``) claim the
-    same seg_NNNNNN and clobber each other's dir (r3 review, both
-    directions). Reservations skip live + retired + reserved names; stale
-    entries (crashed runs) expire after ``RESERVATION_TTL_S``."""
-    import time
 
+def claim_segment(
+    index_dir: str,
+    segment: str | None = None,
+    *,
+    n_docs: int | None = None,
+    tomb_gen: str | None = None,
+) -> tuple[str, int | None]:
+    """The claim step of ``segment_transaction``: ONE locked meta write
+    records everything a writer holds while its Spark jobs run, each
+    claim keyed by the output segment name and expiring after
+    ``RESERVATION_TTL_S`` (``claim_heartbeat`` keeps them alive):
+
+    - ``reserved`` (name -> walltime): the output name, allocated here
+      when ``segment`` is None. Picking it from an unlocked snapshot let
+      two concurrent writers (an auto-named append racing a merge) claim
+      the same seg_NNNNNN and clobber each other's dir (r3 review). The
+      allocation skips live, retired, covered-GC and claimed names, and
+      never re-issues a name whose dir exists on disk: a hard-crashed
+      run's partial dir may hold committed lineage stages for its OWN
+      batch, which a resume under the same name+offset would silently
+      publish as the new batch (r3 review). ``_purge_retired`` sweeps
+      such orphans after the TTL, freeing the name.
+    - ``reserved_ranges`` (name -> {lo, hi, ts}): with ``n_docs``, a
+      range-aligned doc-id range. Offsets taken from an unlocked
+      snapshot let two concurrent appends pick the same offset, and the
+      second died at the publish overlap guard (found by
+      tests/test_concurrent_writers.py). Lucene's IndexWriter serializes
+      doc-id assignment the same way (the reference feeds one ``Shard``
+      from several buffer-actuator threads, ``GeneralBufferActuator``):
+      the lock is held only to claim, the pack jobs overlap freely.
+      Allocation is a monotonic high-water mark over committed segments
+      and live claims, never gap-filling (same crashed-dir hazard as
+      names). Re-claiming a held name returns the SAME offset on a fresh
+      TTL window, so an explicit-name (resumable) append that crashes
+      and re-runs keeps its lineage stages valid.
+    - ``tomb_pins`` (name -> {gen, ts}): with ``tomb_gen``, the tombstone
+      generation a merge's anti-join reads, so ``_purge_retired`` keeps
+      its files however long the pack runs. Without it a delete-heavy
+      CDC stream could flip, retire and purge the generation in the
+      600 s grace while the pack runs for hours, then die on
+      FileNotFound (r5 review).
+
+    Returns ``(name, doc-id offset or None)``. ``publish_segment``
+    releases the claims; ``abort_segment`` releases them on failure."""
     out: dict = {}
 
     def mut(fresh):
-        now = time.time()
-        reserved = {
-            n: ts for n, ts in fresh.get("reserved", {}).items()
-            if now - ts < RESERVATION_TTL_S
-        }
-        taken = set(fresh["segments"]) | set(fresh.get("retired", {})) | set(reserved)
-        while True:
+        now = _time.time()
+        meta = dict(fresh)
+        name = segment
+        if name is None:
+            reserved = {n: ts for n, ts in fresh.get("reserved", {}).items()
+                        if now - ts < RESERVATION_TTL_S}
+            taken = (set(fresh["segments"]) | set(fresh.get("retired", {}))
+                     | set(fresh.get("covered_gc", {})) | set(reserved))
             name = next_segment_name(taken)
-            # never re-issue a name whose dir exists on disk: a hard-
-            # crashed run's partial dir may hold committed lineage stages
-            # for its OWN batch — re-issuing the name+offset would make
-            # build_index's resume silently publish the stale docs as the
-            # new batch (r3 review). Orphans are swept by _purge_retired
-            # after the reservation TTL, after which the name frees up.
-            if not os.path.exists(os.path.join(index_dir, "segments", name)):
-                break
-            taken.add(name)
-        reserved[name] = now
+            while os.path.exists(os.path.join(index_dir, "segments", name)):
+                taken.add(name)
+                name = next_segment_name(taken)
+            meta["reserved"] = {**reserved, name: now}
+        if n_docs is not None:
+            rs = fresh["params"].get("range_size", DEFAULT_RANGE_SIZE)
+            ranges = {n: r for n, r in fresh.get("reserved_ranges", {}).items()
+                      if now - r["ts"] < RESERVATION_TTL_S}
+            need = ((max(int(n_docs), 1) + rs - 1) // rs) * rs
+            held = ranges.pop(name, None)
+            if held is None or held["hi"] - held["lo"] + 1 < need:
+                # new claim, or the batch grew past the old one
+                hwm = max([s["max_doc_id"] for s in fresh["segments"].values()]
+                          + [r["hi"] for r in ranges.values()], default=-1)
+                lo = ((hwm // rs) + 1) * rs
+                held = {"lo": lo, "hi": lo + need - 1}
+            # a resumed run must not inherit only the crashed run's
+            # leftover clock and lose its claim mid-pack to an expiry prune
+            ranges[name] = {**held, "ts": now}
+            meta["reserved_ranges"] = ranges
+            out["offset"] = held["lo"]
+        if tomb_gen is not None:
+            meta["tomb_pins"] = {**fresh.get("tomb_pins", {}),
+                                 name: {"gen": tomb_gen, "ts": now}}
         out["name"] = name
-        return {**fresh, "reserved": reserved}
-
-    if write_meta_locked(index_dir, mut) is None or "name" not in out:
-        raise RuntimeError("segment-name reservation was not written")
-    return out["name"]
-
-
-def unreserve_segment_name(index_dir: str, name: str) -> None:
-    """Release a reservation without publishing the segment (abort path).
-    No-op (no locked rewrite) when the name isn't reserved."""
-
-    def mut(fresh):
-        if name not in fresh.get("reserved", {}):
-            return None
-        return {**fresh,
-                "reserved": {n: t for n, t in fresh["reserved"].items() if n != name}}
+        return meta
 
     write_meta_locked(index_dir, mut)
+    return out["name"], out.get("offset")
 
 
-def reserve_doc_range(index_dir: str, n_docs: int, segment: str) -> int:
-    """Allocate a doc-id range for an incoming segment UNDER the meta
-    lock; returns the range-aligned ``doc_id_offset``.
-
-    Segment NAMES were already lock-allocated (``reserve_segment_name``)
-    but offsets were computed from an unlocked meta snapshot, so two
-    concurrent appends read the same ``max_doc_id``, picked the same
-    offset, and the second died on the publish-time overlap guard —
-    "concurrent appends must be serialized by the caller" (found by
-    tests/test_concurrent_writers.py). Lucene's IndexWriter serializes
-    doc-id assignment internally rather than pushing it to callers
-    (the reference leans on exactly that: one ``Shard`` fed by multiple
-    buffer-actuator threads, ``GeneralBufferActuator.java``); this is
-    the distributed analog — the lock is held only to CLAIM the id
-    space, the Spark pack jobs overlap freely.
-
-    Allocation is monotonic high-water over committed segments and
-    unexpired reservations (never gap-filling: a crashed run's partial
-    dir may hold committed lineage stages for its claimed space, same
-    hazard as name reuse). Keyed by segment name: re-reserving the same
-    name returns the SAME offset while the reservation lives, so an
-    explicit-name (resumable) append that crashes and re-runs keeps its
-    lineage stages valid. Consumed by the publish in
-    ``_update_root_meta_locked``; stale entries expire after
-    ``RESERVATION_TTL_S`` like name reservations."""
-    import time
-
-    out: dict = {}
-
-    def mut(fresh):
-        now = time.time()
-        rs = fresh["params"].get("range_size", DEFAULT_RANGE_SIZE)
-        ranges = {
-            n: r for n, r in fresh.get("reserved_ranges", {}).items()
-            if now - r["ts"] < RESERVATION_TTL_S
-        }
-        need = ((max(int(n_docs), 1) + rs - 1) // rs) * rs
-        held = ranges.get(segment)
-        if held is not None and held["hi"] - held["lo"] + 1 >= need:
-            out["offset"] = held["lo"]  # resume keeps its claimed space
-            # ...on a FRESH TTL window: a resumed run must not inherit
-            # only the crashed run's leftover clock and lose its claim
-            # mid-pack to an expiry prune.
-            ranges[segment] = {**held, "ts": now}
-            return {**fresh, "reserved_ranges": ranges}
-        if held is not None:  # batch grew past the old claim: reallocate
-            del ranges[segment]
-        hwm = max(
-            (s["max_doc_id"] for s in fresh["segments"].values()), default=-1
-        )
-        for r in ranges.values():
-            hwm = max(hwm, r["hi"])
-        lo = ((hwm // rs) + 1) * rs
-        ranges[segment] = {"lo": lo, "hi": lo + need - 1, "ts": now}
-        out["offset"] = lo
-        return {**fresh, "reserved_ranges": ranges}
-
-    if write_meta_locked(index_dir, mut) is None or "offset" not in out:
-        raise RuntimeError("doc-range reservation was not written")
-    return out["offset"]
+class _InputsTaken(RuntimeError):
+    """A concurrent maintenance run took (some of) a merge's input
+    segments before the merge could publish."""
 
 
-def unreserve_doc_range(index_dir: str, segment: str) -> None:
-    """Release a doc-range claim without publishing (abort path)."""
+#: the build params every segment of one index shares
+_SHARED_PARAMS = ("num_shards", "range_size", "block_size", "use_stopwords",
+                  "k1", "b", "tokenizer", "store_positions", "num_id_buckets")
 
-    def mut(fresh):
-        if segment not in fresh.get("reserved_ranges", {}):
-            return None
-        return {**fresh, "reserved_ranges": {
-            n: r for n, r in fresh["reserved_ranges"].items() if n != segment}}
 
-    write_meta_locked(index_dir, mut)
+def publish_segment(
+    index_dir: str,
+    segment: str,
+    seg_meta: dict | None,
+    *,
+    inputs=(),
+    covered: bool = False,
+) -> str | None:
+    """The publish step of ``segment_transaction`` and of a base
+    ``build_index``: every change to root meta's ``segments`` is this one
+    locked, atomic meta write. Under the lock it re-reads fresh meta (so
+    segments appended and HWMs recorded since the writer's snapshot
+    survive), then:
+
+    1. refuses with ``_InputsTaken`` when an input segment is gone: a
+       concurrent merge/compaction took it, and publishing would put its
+       docs in two live segments (r3 review);
+    2. checks the output ``seg_meta`` against the index: build params
+       must match, except that params added after the index was built
+       (e.g. ``num_id_buckets``) are adopted on first publish (r5
+       review); its doc-id range must not overlap a remaining segment or
+       another writer's unexpired range claim (F15: a direct
+       ``build_index`` with a hand-picked offset becomes a loud error,
+       not corrupt ranges). Re-publishing the same segment is fine;
+    3. splices ``inputs`` out and ``segment`` in, or, when ``seg_meta``
+       is None (every doc of the run was tombstoned), drops the inputs
+       and folds their doc-id high-water mark into the highest remaining
+       segment, so appends never reuse ids;
+    4. retires the inputs (their dirs stay on disk for the retire grace)
+       and, when ``covered``, registers the covered-tombstone set staged
+       under ``segment`` for deferred GC;
+    5. releases ``segment``'s name, range and pin claims.
+
+    A base build creates root meta. Returns the segment now holding the
+    output (``segment``, or the one a drop folded into), or None when a
+    drop would leave no segment (nothing is written)."""
+    now = _time.time()
+    with meta_lock(index_dir):
+        fresh = read_meta_for_update(index_dir) or {"segments": {}, "params": {}}
+        if any(n not in fresh["segments"] for n in inputs):
+            raise _InputsTaken(
+                "input segments changed during the merge (a concurrent "
+                "merge/compact took them) — re-run")
+        rest = {n: s for n, s in fresh["segments"].items() if n not in inputs}
+        params = fresh["params"]
+        if seg_meta is None:
+            if not rest:
+                return None
+            into = max(rest, key=lambda n: rest[n]["max_doc_id"])
+            hwm = max(fresh["segments"][n]["max_doc_id"] for n in inputs)
+            rest[into] = {**rest[into],
+                          "max_doc_id": max(rest[into]["max_doc_id"], hwm)}
+        else:
+            into = segment
+            shared = {k: seg_meta[k] for k in _SHARED_PARAMS if k in seg_meta}
+            legacy = {k for k in shared if k not in params}
+            if params and {k: v for k, v in shared.items() if k not in legacy} != params:
+                raise ValueError(f"segment params mismatch: {shared} vs index {params}")
+            params = {**params, **{k: shared[k] for k in legacy}}
+            lo, hi = seg_meta["doc_id_offset"], seg_meta["max_doc_id"]
+            held = [(n, s["doc_id_offset"], s["max_doc_id"], "live segment")
+                    for n, s in rest.items()]
+            held += [(n, r["lo"], r["hi"], "in-flight claim of segment")
+                     for n, r in fresh.get("reserved_ranges", {}).items()
+                     if now - r.get("ts", now) < RESERVATION_TTL_S]
+            for n, a, z, what in held:
+                if n != segment and not (hi < a or lo > z):
+                    raise ValueError(
+                        f"segment {segment} doc-id range [{lo},{hi}] overlaps "
+                        f"{what} {n} [{a},{z}] — claim id space via "
+                        "claim_segment/append_segment")
+            rest[segment] = {k: seg_meta[k] for k in (
+                "n_docs", "sum_dl", "doc_id_offset", "max_doc_id")}
+        meta = {**fresh, "params": params, "segments": rest}
+        if inputs:
+            meta["retired"] = {**fresh.get("retired", {}), **{n: now for n in inputs}}
+        if covered:
+            meta["covered_gc"] = {**fresh.get("covered_gc", {}), segment: now}
+        atomic_write_meta(index_dir, _released(meta, segment) or meta)
+    return into
+
+
+def _released(meta: dict, segment: str) -> dict | None:
+    """``meta`` without ``segment``'s claims; None when it holds none."""
+    held = [k for k in _CLAIM_KEYS if segment in meta.get(k, {})]
+    if not held:
+        return None
+    return {**meta, **{k: {n: v for n, v in meta[k].items() if n != segment}
+                       for k in held}}
+
+
+def abort_segment(index_dir: str, segment: str) -> None:
+    """The abort step of ``segment_transaction``: remove ``segment``'s
+    unpublished output dir and staged covered-tombstone set, and release
+    its claims (no meta write when it holds none)."""
+    import shutil
+
+    shutil.rmtree(os.path.join(index_dir, "segments", segment), ignore_errors=True)
+    shutil.rmtree(os.path.join(index_dir, "tombstones_covered", segment),
+                  ignore_errors=True)
+    write_meta_locked(index_dir, lambda fresh: _released(fresh, segment))
 
 
 #: claim heartbeat period as a fraction of RESERVATION_TTL_S (6 h at the
@@ -1059,8 +1079,8 @@ RESERVATION_HEARTBEAT_FRACTION = 0.25
 
 
 def touch_reservations(index_dir: str, segment: str) -> bool:
-    """Re-stamp the TTL clock on ``segment``'s name and/or doc-range
-    claims under the meta lock. Returns False when neither claim exists
+    """Re-stamp the TTL clock on ``segment``'s name, doc-range and
+    tombstone-pin claims under the meta lock. Returns False when none exists
     (already consumed by the publish, released, or expired-and-pruned —
     in the last case the space may belong to someone else now, so the
     toucher must NOT re-create it). One tiny locked meta rewrite."""
@@ -1068,19 +1088,11 @@ def touch_reservations(index_dir: str, segment: str) -> bool:
 
     def mut(fresh):
         now = _time.time()
-        upd = {}
-        if segment in fresh.get("reserved", {}):
-            upd["reserved"] = {**fresh["reserved"], segment: now}
-        rr = fresh.get("reserved_ranges", {})
-        if segment in rr:
-            upd["reserved_ranges"] = {**rr, segment: {**rr[segment], "ts": now}}
-        tp = fresh.get("tomb_pins", {})
-        if segment in tp:  # merge/compaction tombstone-generation pin
-            upd["tomb_pins"] = {**tp, segment: {**tp[segment], "ts": now}}
-        if not upd:
-            return None
-        out["touched"] = True
-        return {**fresh, **upd}
+        upd = {k: {**fresh[k], segment: now if k == "reserved"
+                   else {**fresh[k][segment], "ts": now}}
+               for k in _CLAIM_KEYS if segment in fresh.get(k, {})}
+        out["touched"] = bool(upd)
+        return {**fresh, **upd} if upd else None
 
     write_meta_locked(index_dir, mut)
     return out["touched"]
@@ -1088,8 +1100,8 @@ def touch_reservations(index_dir: str, segment: str) -> bool:
 
 @_contextmanager
 def claim_heartbeat(index_dir: str, segment: str):
-    """Keep ``segment``'s name/doc-range claims alive while a pack job
-    runs: a daemon thread re-stamps their TTL clocks every
+    """Keep ``segment``'s claims (``claim_segment``) alive while a pack
+    job runs: a daemon thread re-stamps their TTL clocks every
     ``RESERVATION_TTL_S * RESERVATION_HEARTBEAT_FRACTION`` seconds.
 
     Without it, any append/merge whose Spark job outlives
@@ -1120,6 +1132,63 @@ def claim_heartbeat(index_dir: str, segment: str):
     finally:
         stop.set()
         t.join(timeout=5.0)
+
+
+def segment_transaction(
+    index_dir: str,
+    write,
+    *,
+    segment: str | None = None,
+    n_docs: int | None = None,
+    tomb_gen: str | None = None,
+    inputs=(),
+):
+    """The one segment transaction behind ``append_segment`` and every
+    merge, compaction and fully-deleted drop: claim -> write -> publish,
+    or abort. Visibility is one root-meta swap, the Spark analog of the
+    reference's commit-interval snapshot (``DiskStorageService.java:62-95``).
+
+    1. claim (``claim_segment``): one locked meta write holding the
+       output name (auto-allocated when ``segment`` is None), the doc-id
+       range for ``n_docs`` docs and the pin on tombstone generation
+       ``tomb_gen``;
+    2. write: ``write(name, offset)`` writes ``segments/<name>`` (and any
+       covered-tombstone set staged under ``name``) while
+       ``claim_heartbeat`` keeps the claims alive. It returns
+       ``(seg_meta, covered)`` (``seg_meta`` None to drop the
+       ``inputs``), or None to publish nothing;
+    3. publish (``publish_segment``): one locked meta write splicing
+       ``inputs`` out and the output in, releasing the claims;
+    4. abort (``abort_segment``) on any failure, or when there is
+       nothing to publish: the output dir and staged set are removed and
+       the claims released. An explicit-named (resumable) append keeps
+       its claim and dir on failure, so a re-run gets the same offset
+       back and resumes its committed lineage stages; abandonment frees
+       the claim by TTL.
+
+    Returns ``(seg_meta, segment now holding the output)``, or None when
+    nothing was published."""
+    import shutil
+
+    name, offset = claim_segment(index_dir, segment, n_docs=n_docs, tomb_gen=tomb_gen)
+    try:
+        with claim_heartbeat(index_dir, name):
+            out = write(name, offset)
+        into = None if out is None else publish_segment(
+            index_dir, name, out[0], inputs=inputs, covered=out[1])
+    except BaseException:
+        if segment is None:
+            try:
+                abort_segment(index_dir, name)
+            except Exception:
+                pass  # never mask the failure; the TTL frees the claims
+        raise
+    if into is None:
+        abort_segment(index_dir, name)
+        return None
+    if out[0] is None:  # dropped: the output dir holds only empty docstats
+        shutil.rmtree(os.path.join(index_dir, "segments", name), ignore_errors=True)
+    return out[0], into
 
 
 def replay_quarantine(
@@ -1177,26 +1246,22 @@ def append_segment(
 ) -> dict:
     """Incremental append (CDC-analog): new docs become a new segment with
     doc_ids offset to the next range boundary so ranges never straddle
-    segments (visibility = atomic root-meta swap, the Spark analog of the
-    reference's commit-interval snapshot, ``DiskStorageService.java:62-95``).
+    segments, published through ``segment_transaction``.
 
     ``segment``: explicit name (e.g. a batchId-derived name for
     exactly-once streaming appends); auto-numbered when omitted. If the
     name already exists the append is a NO-OP returning the existing
     segment's meta — the idempotence hook ``stream_to_index`` relies on.
+    An auto-named append that fails leaves nothing behind and is NOT
+    resumable; an explicit-named one keeps its claim and lineage stages.
 
     Concurrency: safe to call from competing writers — the doc-id space
-    is CLAIMED under the meta lock (``reserve_doc_range``) before the
-    pack job runs, so parallel appends get disjoint ranges and only the
-    meta flips serialize (IndexWriter semantics; previously offsets came
-    from an unlocked meta snapshot and the second concurrent append died
-    at the publish overlap guard — tests/test_concurrent_writers.py).
-    Sizing the claim reuses the id-assignment bucket-count pass
-    (``docids.bucket_counts`` — the counts sum to the row count), so it
-    costs no scan beyond what ``build_index`` needs anyway; the claim is
-    kept alive by a ``claim_heartbeat`` for the duration of the pack, so
-    a job that outlives ``RESERVATION_TTL_S`` cannot lose its id space
-    to a competing writer's expiry prune (r5 review)."""
+    is CLAIMED under the meta lock (``claim_segment``) before the pack
+    job runs, so parallel appends get disjoint ranges and only the meta
+    flips serialize (IndexWriter semantics). Sizing the claim reuses the
+    id-assignment bucket-count pass (``docids.bucket_counts`` — the
+    counts sum to the row count), so it costs no scan beyond what the
+    build needs anyway."""
     root = os.path.join(index_dir, "meta.json")
     with open(root) as f:
         meta = json.load(f)
@@ -1217,7 +1282,7 @@ def append_segment(
     # Size the id-space claim from the id-assignment bucket counts (one
     # aggregation over the batch) instead of a separate docs.count()
     # scan; when no quarantine filter will drop rows, the derived
-    # offsets feed straight into build_index so the pass runs ONCE.
+    # offsets feed straight into the build so the pass runs ONCE.
     if kwargs.get("docs_have_ids"):
         n_new = docs.count()
         shared_offsets = None
@@ -1229,38 +1294,9 @@ def append_segment(
             offsets_from_counts(counts, nb)
             if kwargs.get("max_content_bytes") is None else None
         )
-    if segment is not None:
-        # explicit (resumable) name: the claim is keyed by the name and
-        # NOT released on failure — a crashed run that re-runs gets the
-        # SAME offset back (reserve_doc_range resume path), keeping its
-        # committed lineage stages valid; abandonment frees it by TTL.
-        offset = reserve_doc_range(index_dir, n_new, segment)
-        with claim_heartbeat(index_dir, segment):
-            return build_index(spark, docs, index_dir, segment=segment,
-                               doc_id_offset=offset, id_offsets=shared_offsets,
-                               **kwargs)
-    # auto name: allocated UNDER the meta lock (reservation) — an unlocked
-    # snapshot could pick the same seg_NNNNNN as an in-flight merge/
-    # compaction output (or vice versa) and the two writers would clobber
-    # one dir (r3 review). The reservation is consumed by the publish in
-    # _update_root_meta_locked; on failure the partial dir is removed and
-    # the name + id claim released — auto-named appends are therefore NOT
-    # resumable (pass an explicit ``segment`` name to keep resume lineage).
-    seg_name = reserve_segment_name(index_dir)
-    try:
-        offset = reserve_doc_range(index_dir, n_new, seg_name)
-        with claim_heartbeat(index_dir, seg_name):
-            return build_index(spark, docs, index_dir, segment=seg_name,
-                               doc_id_offset=offset, id_offsets=shared_offsets,
-                               **kwargs)
-    except BaseException:
-        import shutil as _shutil
 
-        _shutil.rmtree(os.path.join(index_dir, "segments", seg_name),
-                       ignore_errors=True)
-        try:
-            unreserve_doc_range(index_dir, seg_name)
-            unreserve_segment_name(index_dir, seg_name)
-        except Exception:
-            pass  # never mask the build failure; the TTL frees the name
-        raise
+    def write(name: str, offset: int):
+        return _write_segment(spark, docs, index_dir, segment=name, doc_id_offset=offset,
+                              id_offsets=shared_offsets, **kwargs), False
+
+    return segment_transaction(index_dir, write, segment=segment, n_docs=n_new)[0]

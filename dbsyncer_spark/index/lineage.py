@@ -9,8 +9,10 @@ and metrics. A re-run with identical params skips committed stages
 so an interrupted build never recomputes finished work.
 
 Stage outputs themselves are deterministic functions of (input, params) —
-no wall-clock/UUID in data paths — so a resumed build is byte-equivalent
-to an uninterrupted one (verified by tests/test_resume.py).
+no wall-clock/UUID in data paths — so a resumed build is row-identical
+to an uninterrupted one (verified by tests/test_resume.py). Parquet file
+bytes are not compared: the footer's per-column ``encodings`` order can
+differ between JVM runs while every data page is identical.
 """
 
 from __future__ import annotations

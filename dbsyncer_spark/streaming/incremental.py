@@ -7,6 +7,8 @@ the same semantics as append/delete batches against the segmented index:
 - ``append_segment`` (in index.build): a new-docs batch becomes a new
   segment; visibility flips with the atomic root-meta swap (the analog of
   the reference's 3 s commit cycle, ``DiskStorageService.java:62-95``).
+  Appends, merges and compactions all claim, publish and abort through
+  the one ``index.build.segment_transaction``.
 - ``delete_docs``: tombstones by key; the scorer masks tombstoned docs
   (reference delete-by-Term, ``Shard.java:122-145``).
 - ``maybe_merge``: the TieredMergePolicy analog (``Shard.java:361-368``)
@@ -30,14 +32,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dbsyncer_spark.index.build import (
+    _InputsTaken,
     append_segment,
     atomic_write_meta,
     build_index,
-    claim_heartbeat as _claim_heartbeat,
     meta_lock,
     read_meta_for_update as _read_meta_for_update,
-    reserve_segment_name as _reserve_segment_name,
-    unreserve_segment_name as _unreserve_segment_name,
+    segment_transaction,
     write_meta_locked as _write_meta_locked,
 )
 from dbsyncer_spark.index.search import SearchIndex
@@ -70,40 +71,6 @@ def _next_tomb_gen(current_basename: str) -> str:
     if current_basename == "tombstones":
         return "tombstones_g000001"
     return f"tombstones_g{int(current_basename.rsplit('_g', 1)[1]) + 1:06d}"
-
-
-def _pin_tomb_generation(index_dir: str, segment: str, meta: dict | None) -> None:
-    """Register ``segment``'s pack as a reader of the CURRENT tombstone
-    generation (root meta ``tomb_pins``: name -> {gen, ts}), so
-    ``_purge_retired`` keeps that generation's files on disk while the
-    pack runs. Without it a delete-heavy CDC stream can flip the
-    generation (file-count compaction), retire the old dir, and purge it
-    after the 600 s grace — while a merge/compaction pack that pinned
-    its file listing at plan time runs for hours, then dies on
-    FileNotFound at the anti-join and discards the whole job (r5
-    review). ``claim_heartbeat`` re-stamps the pin alongside the name
-    claim (``touch_reservations``); the TTL is the crash story — a dead
-    pack stops beating and its pin expires like any claim."""
-    gen = os.path.basename(_active_tomb_dir(index_dir, meta))
-    now = time.time()
-
-    def mut(fresh):
-        return {**fresh, "tomb_pins": {
-            **fresh.get("tomb_pins", {}), segment: {"gen": gen, "ts": now}}}
-
-    _write_meta_locked(index_dir, mut)
-
-
-def _unpin_tomb_generation(index_dir: str, segment: str) -> None:
-    """Release a generation pin (publish/abort). No-op when absent."""
-
-    def mut(fresh):
-        if segment not in fresh.get("tomb_pins", {}):
-            return None
-        return {**fresh, "tomb_pins": {
-            n: p for n, p in fresh["tomb_pins"].items() if n != segment}}
-
-    _write_meta_locked(index_dir, mut)
 
 
 def delete_docs(spark: SparkSession, index_dir: str, keys: DataFrame) -> int:
@@ -240,55 +207,47 @@ def _pack_segment(
     *,
     segment: str,
     doc_id_offset: int,
-    max_doc_id_floor: int | None = None,
-) -> dict:
-    """Write one segment (postings + docstats + dictionary + seg_meta)
+    max_doc_id_floor: int,
+) -> dict | None:
+    """Write one segment (docstats + postings + dictionary + seg_meta)
     from already-decoded (tid, doc_id, tf, dl[, pos]) rows. Shared by
     full compaction and tiered merge; one shuffle keyed exactly like the
-    fresh-build packer, so merged segments are byte-compatible."""
-    from dbsyncer_spark.index.build import postings_from_tf
+    fresh-build packer, so merged segments are row-identical to fresh
+    builds. Docstats go first: when its count aggregate reads 0 rows
+    (every doc tombstoned) nothing else is written and None is returned,
+    so the caller drops the run without a separate emptiness probe."""
+    from dbsyncer_spark.index.build import postings_from_tf, write_dictionary
     from dbsyncer_spark.index.lineage import commit_stage, params_hash
 
-    with_positions = bool(params.get("store_positions"))
     os.makedirs(seg_dir, exist_ok=True)
-    packed = postings_from_tf(
-        decoded, params["num_shards"], params["range_size"], params["block_size"],
-        int(spark.conf.get("spark.sql.shuffle.partitions")),
-        with_positions=with_positions,
-    )
-    packed.write.mode("overwrite").partitionBy("shard").parquet(os.path.join(seg_dir, "postings"))
     stats.write.mode("overwrite").parquet(os.path.join(seg_dir, "docstats"))
-    # one shared dictionary-stage definition with fresh builds — merged
-    # segments stay byte-compatible by construction (r3 review)
-    from dbsyncer_spark.index.build import write_dictionary
-
-    write_dictionary(
-        spark, os.path.join(seg_dir, "postings"), os.path.join(seg_dir, "dictionary"),
-        int(spark.conf.get("spark.sql.shuffle.partitions")),
-    )
     agg = spark.read.parquet(os.path.join(seg_dir, "docstats")).agg(
         F.count(F.lit(1)).alias("n"), F.sum("dl").alias("sum_dl"), F.max("doc_id").alias("mx")
     ).collect()[0]
-    mx = int(agg.mx if agg.mx is not None else -1)
-    if max_doc_id_floor is not None:
-        mx = max(mx, max_doc_id_floor)
+    if not agg.n:
+        return None
+    parallelism = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    packed = postings_from_tf(
+        decoded, params["num_shards"], params["range_size"], params["block_size"],
+        parallelism, with_positions=bool(params.get("store_positions")),
+    )
+    packed.write.mode("overwrite").partitionBy("shard").parquet(os.path.join(seg_dir, "postings"))
+    # one shared dictionary-stage definition with fresh builds — merged
+    # segments stay row-identical by construction (r3 review)
+    write_dictionary(spark, os.path.join(seg_dir, "postings"),
+                     os.path.join(seg_dir, "dictionary"), parallelism)
     seg_meta = {
         **params,
         "segment": segment,
         "doc_id_offset": doc_id_offset,
         "n_docs": int(agg.n),
-        "sum_dl": int(agg.sum_dl or 0),
-        "max_doc_id": mx,
+        "sum_dl": int(agg.sum_dl),
+        "max_doc_id": max(int(agg.mx), max_doc_id_floor),
     }
     with open(os.path.join(seg_dir, "seg_meta.json"), "w") as f:
         json.dump(seg_meta, f, indent=2)
     commit_stage(seg_dir, "meta", params_hash(seg_meta), metrics=seg_meta)
     return seg_meta
-
-
-class _InputsTaken(RuntimeError):
-    """A concurrent maintenance run took (some of) a merge's input
-    segments before the merge could publish."""
 
 
 def _merge_run(
@@ -300,25 +259,23 @@ def _merge_run(
     tomb_meta: dict,
     retire_grace_s: float,
 ) -> dict | None:
-    """The one merge transaction behind ``maybe_merge`` and
-    ``compact_segments``: rewrite the live docs of segments ``names``
-    (a run consecutive in doc-id order, described by the root-meta
-    snapshot ``meta``) as one fresh segment and publish it in one
-    root-meta swap. ``tomb`` is the tombstone DataFrame the anti-join
-    masks with (None: no tombstones), read from the generation named by
-    the snapshot ``tomb_meta``.
+    """The merge behind ``maybe_merge`` and ``compact_segments``: rewrite
+    the live docs of segments ``names`` (a run consecutive in doc-id
+    order, described by the root-meta snapshot ``meta``) as one fresh
+    segment, published through ``segment_transaction``. ``tomb`` is the
+    tombstone DataFrame the anti-join masks with (None: no tombstones),
+    read from the generation named by the snapshot ``tomb_meta``.
 
     Returns the new segment's meta; ``{"segment": None, "n_docs": 0}``
     when every doc of the run was tombstoned and the run was dropped
     instead; None when every doc of the whole index is tombstoned
     (nothing changes and the tombstones keep masking). Raises
     ``_InputsTaken`` when a concurrent run took an input first. Any
-    failure undoes what this call reserved, pinned or wrote.
+    failure undoes what this call claimed or wrote.
 
     Readers are never disturbed: the output is written under
-    ``segments/`` (invisible until referenced), the swap re-reads fresh
-    meta under the meta lock (segments appended and HWMs recorded since
-    the snapshot survive it), and the inputs stay on disk for
+    ``segments/`` (invisible until referenced), the publish re-reads
+    fresh meta under the meta lock, and the inputs stay on disk for
     ``retire_grace_s`` seconds for warm readers pinned to the pre-merge
     meta (purged on a later maintenance call)."""
     params = meta["params"]
@@ -344,135 +301,41 @@ def _merge_run(
         # keys, and a distinct would add a shuffle stage to both plans
         tomb_ids = tomb.select("doc_id")
         decoded = decoded.join(tomb_ids, "doc_id", "left_anti")
-        # persist: the fully-deleted probe (isEmpty) below and the
-        # pack's docstats write would otherwise each run the full
-        # docstats union + tombstone anti-join (one extra Spark job
-        # per merge; same pattern as _append_tombstones/_compute —
-        # r5 review)
-        stats = stats.join(tomb_ids, "doc_id", "left_anti").persist()
-    try:
-        drop = tomb is not None and stats.isEmpty()
-        if drop:
-            # every doc in the run is tombstoned: nothing to write. Drop the
-            # segments outright, folding their doc-id high-water mark into the
-            # largest remaining segment so append_segment never reuses ids
-            # (safe: the covered tombstones are GC'd below, and deletes can
-            # only target ids present in docstats, never the dropped range).
-            if all(n in names for n in segments):
-                return None  # fully-deleted index: leave tombstone masking in place
-            hwm = max(s["max_doc_id"] for s in segments.values())
-            tag, seg_meta = f"drop_{names[0]}_{int(time.time())}", None
+        stats = stats.join(tomb_ids, "doc_id", "left_anti")
 
-            def splice(rest: dict):
-                survivors = {n: dict(s) for n, s in rest.items()}
-                if not survivors:
-                    return None
-                top = max(survivors, key=lambda n: survivors[n]["max_doc_id"])
-                survivors[top]["max_doc_id"] = max(survivors[top]["max_doc_id"], hwm)
-                return survivors, top
-        else:
-            # name allocated + reserved under the meta lock: a concurrent
-            # auto-named append can never claim the same seg_NNNNNN (r3 review)
-            tag = _reserve_segment_name(index_dir)
-            if tomb is not None:
-                # keep our pinned generation's files alive however long the
-                # pack runs (heartbeat-refreshed; see _pin_tomb_generation)
-                _pin_tomb_generation(index_dir, tag, tomb_meta)
+    def write(tag: str, _offset):
+        seg_meta = _pack_segment(
+            spark, decoded, stats, os.path.join(seg_root, tag), params,
+            segment=tag,
+            doc_id_offset=min(segments[n]["doc_id_offset"] for n in names),
+            # inputs' doc-id high-water mark survives even if their tail
+            # docs were all tombstoned — append_segment must never reuse
+            # ids (and the floor goes into seg_meta.json too, so rebuilding
+            # root meta from per-segment files can never shrink the HWM)
+            max_doc_id_floor=max(segments[n]["max_doc_id"] for n in names),
+        )
+        if seg_meta is None and all(n in names for n in segments):
+            return None  # fully-deleted index: leave tombstone masking in place
+        # stage covered tombstones for deferred GC (their docs are
+        # physically absent from the output; the live rows stay until
+        # the retire grace expires so warm readers keep masking — pure
+        # hygiene after). Every tombstone id came from docstats, so it
+        # lies in some input's interval; ids of runs dropped earlier
+        # were staged under their own tag.
+        return seg_meta, tomb is not None and _stage_covered_tombstones(index_dir, [
+            (segments[n]["doc_id_offset"], segments[n]["max_doc_id"]) for n in names
+        ], tomb, tag)
 
-            def splice(rest: dict):
-                return {**rest, tag: {k: seg_meta[k] for k in (
-                    "n_docs", "sum_dl", "doc_id_offset", "max_doc_id")}}, tag
-
-        def _abort():
-            # failed/lost publication: drop the unreferenced output dir and
-            # staged covered set, release the pin and the name (r3 review:
-            # an exception after the reservation leaked all of them until
-            # the TTL). A dropped run owns only its staged set; the other
-            # steps find nothing to undo.
-            shutil.rmtree(os.path.join(seg_root, tag), ignore_errors=True)
-            shutil.rmtree(os.path.join(index_dir, "tombstones_covered", tag),
-                          ignore_errors=True)
-            _unpin_tomb_generation(index_dir, tag)
-            _unreserve_segment_name(index_dir, tag)
-
-        try:
-            if not drop:
-                # heartbeat keeps the output-name reservation alive for packs
-                # that outlive RESERVATION_TTL_S (r5 review — a competing
-                # writer's expiry prune could otherwise hand our seg_NNNNNN to
-                # an auto-named append mid-pack)
-                with _claim_heartbeat(index_dir, tag):
-                    seg_meta = _pack_segment(
-                        spark, decoded, stats, os.path.join(seg_root, tag), params,
-                        segment=tag,
-                        doc_id_offset=min(segments[n]["doc_id_offset"] for n in names),
-                        # inputs' doc-id high-water mark survives even if their
-                        # tail docs were all tombstoned — append_segment must
-                        # never reuse ids (and the floor goes into seg_meta.json
-                        # too, so rebuilding root meta from per-segment files can
-                        # never shrink the HWM)
-                        max_doc_id_floor=max(segments[n]["max_doc_id"] for n in names),
-                    )
-            # stage covered tombstones for deferred GC (their docs are
-            # physically absent from the output; the live rows stay until
-            # the retire grace expires so warm readers keep masking — pure
-            # hygiene after). Every tombstone id came from docstats, so it
-            # lies in some input's interval; ids of runs dropped earlier
-            # were staged under their own drop tag.
-            staged = tomb is not None and _stage_covered_tombstones(index_dir, [
-                (segments[n]["doc_id_offset"], segments[n]["max_doc_id"])
-                for n in names
-            ], tomb, tag)
-        except BaseException:
-            _abort()
-            raise
-        now = time.time()
-        into: dict = {}
-
-        def mut(fresh):
-            if any(n not in fresh["segments"] for n in names):
-                # a concurrent maintenance run already took (some of) our
-                # inputs: publishing would duplicate their docs/doc_ids in
-                # two live segments (r3 review) — abort, caller cleans up
-                return None
-            spliced = splice({n: s for n, s in fresh["segments"].items() if n not in names})
-            if spliced is None:
-                return None
-            into["segment"] = spliced[1]
-            covered_gc = dict(fresh.get("covered_gc", {}))
-            if staged:
-                covered_gc[tag] = now
-            # fold the swap into FRESH meta: segments appended (and HWMs
-            # recorded) since our snapshot survive the rewrite
-            return {
-                **fresh,
-                "params": params,
-                "segments": spliced[0],
-                "retired": {**fresh.get("retired", {}), **{n: now for n in names}},
-                "reserved": {n: t for n, t in fresh.get("reserved", {}).items() if n != tag},
-                "covered_gc": covered_gc,
-                # pin released atomically with the publish (see
-                # _pin_tomb_generation); the abort path unpins explicitly
-                "tomb_pins": {n: p for n, p in fresh.get("tomb_pins", {}).items()
-                              if n != tag},
-            }
-
-        try:
-            published = _write_meta_locked(index_dir, mut)
-        except BaseException:
-            _abort()
-            raise
-        if published is None:
-            _abort()
-            raise _InputsTaken(
-                "input segments changed during the merge (a concurrent "
-                "merge/compact took them) — re-run")
-        _preserve_quarantines(sel_dirs, names, os.path.join(seg_root, into["segment"]))
-        _purge_retired(spark, index_dir, retire_grace_s)
-        return seg_meta or {"segment": None, "n_docs": 0}
-    finally:
-        if tomb is not None:
-            stats.unpersist()
+    done = segment_transaction(
+        index_dir, write, inputs=names,
+        tomb_gen=None if tomb is None else os.path.basename(
+            _active_tomb_dir(index_dir, tomb_meta)))
+    if done is None:
+        return None
+    seg_meta, into = done
+    _preserve_quarantines(sel_dirs, names, os.path.join(seg_root, into))
+    _purge_retired(spark, index_dir, retire_grace_s)
+    return seg_meta or {"segment": None, "n_docs": 0}
 
 
 def compact_segments(
@@ -1042,8 +905,8 @@ def _purge_retired(spark: SparkSession, index_dir: str, grace_s: float) -> list:
         # retired tombstone generations past grace at time ``at``. Those
         # pinned by an in-flight merge/compaction pack survive the grace
         # clock for as long as the pack heartbeats its pin (see
-        # _pin_tomb_generation; a crashed pack's pin expires with the
-        # TTL); the active generation is never purged
+        # claim_segment; a crashed pack's pin expires with the TTL); the
+        # active generation is never purged
         active = os.path.basename(_active_tomb_dir(index_dir, m))
         pins = {p["gen"] for p in m.get("tomb_pins", {}).values()
                 if at - p.get("ts", 0.0) < RESERVATION_TTL_S}
@@ -1128,7 +991,7 @@ def _purge_retired(spark: SparkSession, index_dir: str, grace_s: float) -> list:
     seg_root = os.path.join(index_dir, "segments")
     # orphaned partial segment dirs: a hard-crashed build's dir is in no
     # registry (its reservation expired) but still occupies its name —
-    # reserve_segment_name skips on-disk dirs precisely so a crashed
+    # claim_segment skips on-disk dirs precisely so a crashed
     # run's committed lineage stages can't be resumed as a DIFFERENT
     # batch's data (r3 review). Sweeping once nothing inside has changed
     # for the reservation TTL frees the disk and the name; deep mtime,
@@ -1139,9 +1002,9 @@ def _purge_retired(spark: SparkSession, index_dir: str, grace_s: float) -> list:
 
         # TTL-filter reservations here too: a hard-crashed run's stale
         # entry would otherwise shield its orphan dir from this sweep
-        # forever when nothing ever calls reserve_segment_name again
-        # (r3 review — the pruning inside reserve_segment_name is not
-        # guaranteed to run)
+        # forever when nothing ever claims an auto name again (r3
+        # review — the pruning inside claim_segment is not guaranteed
+        # to run)
         live_reserved = {
             n for n, ts in meta.get("reserved", {}).items()
             if now - ts < RESERVATION_TTL_S
@@ -1218,8 +1081,8 @@ def _purge_retired(spark: SparkSession, index_dir: str, grace_s: float) -> list:
                 if k not in gone_gens
             },
             # registry hygiene: drop reservations a crashed run left past
-            # their TTL (reserve_segment_name prunes these too, but only
-            # when someone reserves again)
+            # their TTL (claim_segment prunes these too, but only when
+            # someone claims an auto name again)
             "reserved": {
                 k: v for k, v in fresh.get("reserved", {}).items()
                 if time.time() - v < RESERVATION_TTL_S

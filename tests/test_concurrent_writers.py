@@ -33,7 +33,7 @@ from dbsyncer_spark.index.build import (
     append_segment,
     atomic_write_meta,
     build_index,
-    reserve_doc_range,
+    claim_segment,
 )
 from dbsyncer_spark.index.search import SearchIndex
 from dbsyncer_spark.oracle.bm25_oracle import bm25_oracle_topk, corpus_stats
@@ -169,9 +169,9 @@ def test_resume_reservation_refreshes_ttl(spark, tmp_path):
     build_index(spark, spark.createDataFrame(
         [_doc(i, "base") for i in range(8)], SCHEMA), d, **PARAMS)
 
-    off1 = reserve_doc_range(d, 5, "seg_resume")
+    _, off1 = claim_segment(d, "seg_resume", n_docs=5)
     _backdate_claim(d, "seg_resume", RESERVATION_TTL_S - 5.0)  # nearly dead
-    off2 = reserve_doc_range(d, 5, "seg_resume")
+    _, off2 = claim_segment(d, "seg_resume", n_docs=5)
     assert off2 == off1, "resume must keep the claimed space"
     with open(os.path.join(d, "meta.json")) as f:
         ts = json.load(f)["reserved_ranges"]["seg_resume"]["ts"]
@@ -180,7 +180,7 @@ def test_resume_reservation_refreshes_ttl(spark, tmp_path):
 
 def test_publish_guard_skips_expired_claims(spark, tmp_path):
     """The publish-time overlap guard must apply the same TTL filter as
-    reserve_doc_range: a dead writer's expired claim is reusable space,
+    claim_segment: a dead writer's expired claim is reusable space,
     not a permanent block (r5 review). An UNEXPIRED foreign claim must
     still fail the publish loudly."""
     d = str(tmp_path / "guard_idx")
@@ -188,7 +188,7 @@ def test_publish_guard_skips_expired_claims(spark, tmp_path):
         [_doc(i, "base") for i in range(8)], SCHEMA), d, **PARAMS)
     build_kwargs = {k: v for k, v in PARAMS.items()}
 
-    live_off = reserve_doc_range(d, 5, "seg_live")
+    _, live_off = claim_segment(d, "seg_live", n_docs=5)
     rows = spark.createDataFrame([_doc(100 + i, "pub") for i in range(5)], SCHEMA)
     with pytest.raises(ValueError, match="in-flight claim"):
         build_index(spark, rows, d, segment="seg_bypass",
@@ -208,17 +208,13 @@ def test_touch_reservations_restamps_both_claims(spark, tmp_path):
     import json
     import os
 
-    from dbsyncer_spark.index.build import (
-        reserve_segment_name,
-        touch_reservations,
-    )
+    from dbsyncer_spark.index.build import touch_reservations
 
     d = str(tmp_path / "touch_idx")
     build_index(spark, spark.createDataFrame(
         [_doc(i, "base") for i in range(8)], SCHEMA), d, **PARAMS)
 
-    name = reserve_segment_name(d)
-    reserve_doc_range(d, 5, name)
+    name, _ = claim_segment(d, n_docs=5)
     _backdate_claim(d, name, 1000.0)
     with open(os.path.join(d, "meta.json")) as f:
         meta = json.load(f)
@@ -237,7 +233,7 @@ def test_touch_reservations_restamps_both_claims(spark, tmp_path):
 def test_claim_heartbeat_outlives_reservation_ttl(spark, tmp_path, monkeypatch):
     """A pack job running longer than RESERVATION_TTL_S must NOT lose its
     id-space claim: the claim_heartbeat re-stamps it, so a competing
-    reserve_doc_range during the 'job' allocates ABOVE the claimed range
+    claim_segment during the 'job' allocates ABOVE the claimed range
     instead of pruning-and-reusing it (r5 review — without the heartbeat
     a >TTL append is guaranteed to die at the publish overlap guard).
     Once the heartbeat stops (writer finished or crashed), expiry frees
@@ -249,14 +245,14 @@ def test_claim_heartbeat_outlives_reservation_ttl(spark, tmp_path, monkeypatch):
         [_doc(i, "base") for i in range(8)], SCHEMA), d, **PARAMS)
 
     monkeypatch.setattr(buildmod, "RESERVATION_TTL_S", 0.8)
-    off = buildmod.reserve_doc_range(d, 5, "seg_slow")
+    _, off = buildmod.claim_segment(d, "seg_slow", n_docs=5)
     with buildmod.claim_heartbeat(d, "seg_slow"):
         time.sleep(2.5)  # ~3 TTL windows elapse during the "pack job"
-        rival = buildmod.reserve_doc_range(d, 5, "seg_rival")
+        _, rival = buildmod.claim_segment(d, "seg_rival", n_docs=5)
         assert rival > off, (
             "competing writer reused a heartbeated claim's space"
         )
-    buildmod.unreserve_doc_range(d, "seg_rival")
+    buildmod.abort_segment(d, "seg_rival")
     time.sleep(1.0)  # heartbeat stopped; claim now expires normally
-    reclaimed = buildmod.reserve_doc_range(d, 5, "seg_after")
+    _, reclaimed = buildmod.claim_segment(d, "seg_after", n_docs=5)
     assert reclaimed == off, "expired claim of a finished writer not freed"

@@ -294,11 +294,11 @@ def test_tomb_generation_pin_survives_purge(spark, tmp_path_factory):
     _purge_retired past the grace clock (r5 review: a delete-heavy CDC
     stream can flip + retire + purge a generation in 600 s while a
     merge pack that pinned its file listing runs for hours, then dies
-    on FileNotFound after all that work). Unpin (or pin-TTL expiry for
+    on FileNotFound after all that work). Abort (or pin-TTL expiry for
     a crashed pack) releases it back to the normal clock, and the
-    publish muts + touch_reservations carry the pin atomically."""
+    publish + touch_reservations carry the pin atomically."""
     import dbsyncer_spark.streaming.incremental as inc
-    from dbsyncer_spark.index.build import touch_reservations
+    from dbsyncer_spark.index.build import abort_segment, claim_segment, touch_reservations
 
     pdf = gen_corpus_pdf(n_docs=60, seed=23)
     d = str(tmp_path_factory.mktemp("tomb_pin"))
@@ -312,7 +312,7 @@ def test_tomb_generation_pin_survives_purge(spark, tmp_path_factory):
     gen = os.path.basename(cur)
     assert len(inc._tomb_data_files(cur)) > 1
 
-    inc._pin_tomb_generation(d, "seg_packer", idx.meta)
+    claim_segment(d, "seg_packer", tomb_gen=gen)
     # flip to a new generation so ours lands in tomb_retired
     assert inc._compact_tombstones(spark, d, max_files=1) is True
     assert os.path.basename(inc._active_tomb_dir(d)) != gen
@@ -322,7 +322,7 @@ def test_tomb_generation_pin_survives_purge(spark, tmp_path_factory):
     # the heartbeat path refreshes the pin like any claim
     assert touch_reservations(d, "seg_packer") is True
 
-    inc._unpin_tomb_generation(d, "seg_packer")
+    abort_segment(d, "seg_packer")
     inc._purge_retired(spark, d, grace_s=0.0)
     assert not os.path.exists(cur), "unpinned retired generation must purge"
 

@@ -766,17 +766,16 @@ def test_misaligned_append_gated_and_phrase_paths(spark, corpus, tmp_path_factor
 
 
 def test_refresh_ignores_writer_bookkeeping_churn(spark, corpus, tmp_path_factory):
-    """Reservation/claim/pin churn (2-3 meta writes per append, plus
+    """Claim/pin churn (one meta write per append claim, plus
     heartbeats) must NOT tear down the warm tiers: only the VISIBLE
     snapshot (segments, params, tombstone generation) decides a full
     re-warm — the old full-dict compare re-collected every posting blob
     to the driver on each bookkeeping write (r5 review)."""
     from dbsyncer_spark.index.build import (
+        abort_segment,
         build_index as bi,
-        reserve_doc_range,
-        reserve_segment_name,
+        claim_segment,
         touch_reservations,
-        unreserve_doc_range,
     )
 
     d = str(tmp_path_factory.mktemp("churn"))
@@ -785,12 +784,11 @@ def test_refresh_ignores_writer_bookkeeping_churn(spark, corpus, tmp_path_factor
     h = SearchIndex(spark, d)
     h.warm_local()
     rows_obj = h._local["rows"]
-    name = reserve_segment_name(d)        # bookkeeping write 1
-    reserve_doc_range(d, 10, name)        # bookkeeping write 2
+    name, _ = claim_segment(d, n_docs=10)  # claim write
     touch_reservations(d, name)           # heartbeat write
     assert h.refresh() is False, "bookkeeping churn forced a re-warm"
     assert h._local["rows"] is rows_obj, "warm_local snapshot was rebuilt"
-    unreserve_doc_range(d, name)
+    abort_segment(d, name)
     # a real snapshot change still re-warms
     from dbsyncer_spark.index.build import append_segment
     append_segment(spark, corpus.limit(100).exceptAll(corpus.limit(80)), d)

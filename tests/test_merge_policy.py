@@ -399,13 +399,13 @@ def test_append_auto_name_skips_reservations(spark, tmp_path):
     an unlocked snapshot let both writers claim the same seg_NNNNNN).
     A failed auto append must release its reservation and remove the
     partial dir."""
-    from dbsyncer_spark.index.build import reserve_segment_name
+    from dbsyncer_spark.index.build import claim_segment
 
     pdf = gen_corpus_pdf(n_docs=30, seed=33)
     d = str(tmp_path / "residx")
     build_index(spark, spark.createDataFrame(pdf.iloc[:20], SCHEMA), d, **PARAMS)
     # simulate an in-flight merge holding seg_000001
-    held = reserve_segment_name(d)
+    held, _ = claim_segment(d)
     assert held == "seg_000001"
     meta = append_segment(spark, spark.createDataFrame(pdf.iloc[20:30], SCHEMA),
                           d, num_id_buckets=8)
@@ -427,7 +427,7 @@ def test_publish_rejects_overlapping_doc_id_ranges(tmp_path):
     """Doc ids are globally unique across live segments (F15): publishing
     a segment whose id range overlaps a live one (two unserialized
     concurrent appends) must fail loudly instead of corrupting ranges."""
-    from dbsyncer_spark.index.build import _update_root_meta_locked
+    from dbsyncer_spark.index.build import publish_segment
 
     d = str(tmp_path / "ovidx")
     os.makedirs(d)
@@ -435,13 +435,13 @@ def test_publish_rejects_overlapping_doc_id_ranges(tmp_path):
             "use_stopwords": False, "k1": 1.2, "b": 0.75}
     with open(os.path.join(d, "meta.json"), "w") as f:
         json.dump({"segments": {}, "params": {}}, f)
-    _update_root_meta_locked(d, "seg_000000", {
+    publish_segment(d, "seg_000000", {
         **base, "n_docs": 10, "sum_dl": 100, "doc_id_offset": 0, "max_doc_id": 9})
     with pytest.raises(ValueError, match="overlaps live segment"):
-        _update_root_meta_locked(d, "seg_000001", {
+        publish_segment(d, "seg_000001", {
             **base, "n_docs": 5, "sum_dl": 50, "doc_id_offset": 5, "max_doc_id": 14})
     # re-publishing the SAME segment (idempotent retry) is fine
-    _update_root_meta_locked(d, "seg_000000", {
+    publish_segment(d, "seg_000000", {
         **base, "n_docs": 10, "sum_dl": 100, "doc_id_offset": 0, "max_doc_id": 9})
 
 
