@@ -61,6 +61,7 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import shutil
 import threading as _threading
 import time as _time
 from contextlib import contextmanager as _contextmanager
@@ -1064,8 +1065,6 @@ def abort_segment(index_dir: str, segment: str) -> None:
     """The abort step of ``segment_transaction``: remove ``segment``'s
     unpublished output dir and staged covered-tombstone set, and release
     its claims (no meta write when it holds none)."""
-    import shutil
-
     shutil.rmtree(os.path.join(index_dir, "segments", segment), ignore_errors=True)
     shutil.rmtree(os.path.join(index_dir, "tombstones_covered", segment),
                   ignore_errors=True)
@@ -1168,8 +1167,6 @@ def segment_transaction(
 
     Returns ``(seg_meta, segment now holding the output)``, or None when
     nothing was published."""
-    import shutil
-
     name, offset = claim_segment(index_dir, segment, n_docs=n_docs, tomb_gen=tomb_gen)
     try:
         with claim_heartbeat(index_dir, name):
